@@ -344,6 +344,11 @@ class Catalog:
         # job-id sequence. Retention stays JOBS_RETENTION_MAX rows.
         self._jobs: list[dict] = []
         self._jobs_lock = threading.Lock()
+        # table directory -> lock serialising its writers: parallel
+        # pipeline branches share one Catalog, and two appends to one
+        # directory would share Spark's _temporary staging and race the
+        # pre-image archive's version-dir pick
+        self._table_locks: dict[str, threading.RLock] = {}
         self._job_seq = 0
         os.makedirs(warehouse_root, exist_ok=True)
         self._jobs_path = os.path.join(
@@ -567,6 +572,15 @@ class Catalog:
         if len(parts) > 3:
             raise ValueError(f"bad table id: {table_id}")
         return os.path.join(self.root, *parts)
+
+    def table_lock(self, table_id: str) -> threading.RLock:
+        """The lock every writer of ``table_id``'s directory holds
+        (``write`` and the DML swap); re-entrant, so a writer may call
+        back into another locked write of the same table."""
+        # dict.setdefault is atomic: racing first callers get one lock
+        return self._table_locks.setdefault(
+            self.path_for(table_id), threading.RLock()
+        )
 
     def exists(self, table_id: str) -> bool:
         p = self.path_for(table_id)
@@ -1426,79 +1440,80 @@ class Catalog:
     ) -> None:
         """WRITE_TRUNCATE/WRITE_APPEND + CREATE_IF_NEEDED/CREATE_NEVER
         semantics (ref: bq_query_launcher.py:44-47)."""
-        existed = self.exists(table_id)
-        if not create_if_needed and not existed:
-            raise ValueError(f"table {table_id} does not exist (CREATE_NEVER)")
-        if existed:
-            self.archive_preimage(table_id)
-        mode = {"WRITE_TRUNCATE": "overwrite", "WRITE_APPEND": "append"}[disposition]
-        pre_fp = self.table_fingerprint(table_id) if existed else None
-        # a FRESH creation never inherits the stash a dropped/renamed
-        # predecessor left for its time-travel readers — only a LIVE
-        # layout record shapes writes
-        meta = self.layout_meta(table_id, include_stash=existed)
-        if (
-            meta
-            and disposition == "WRITE_TRUNCATE"
-            and list(df.columns) != meta.get("columns")
-        ):
-            # a truncating write with a NEW schema keeps the layout
-            # (BigQuery contract) but must refresh the visible-column
-            # record — stale columns would brick every later read
-            src = meta.get("source_col")
-            if src and src not in df.columns:
-                raise ValueError(
-                    f"write to {table_id}: the partitioning column"
-                    f" {src!r} is missing from the new schema"
+        with self.table_lock(table_id):
+            existed = self.exists(table_id)
+            if not create_if_needed and not existed:
+                raise ValueError(f"table {table_id} does not exist (CREATE_NEVER)")
+            if existed:
+                self.archive_preimage(table_id)
+            mode = {"WRITE_TRUNCATE": "overwrite", "WRITE_APPEND": "append"}[disposition]
+            pre_fp = self.table_fingerprint(table_id) if existed else None
+            # a FRESH creation never inherits the stash a dropped/renamed
+            # predecessor left for its time-travel readers — only a LIVE
+            # layout record shapes writes
+            meta = self.layout_meta(table_id, include_stash=existed)
+            if (
+                meta
+                and disposition == "WRITE_TRUNCATE"
+                and list(df.columns) != meta.get("columns")
+            ):
+                # a truncating write with a NEW schema keeps the layout
+                # (BigQuery contract) but must refresh the visible-column
+                # record — stale columns would brick every later read
+                src = meta.get("source_col")
+                if src and src not in df.columns:
+                    raise ValueError(
+                        f"write to {table_id}: the partitioning column"
+                        f" {src!r} is missing from the new schema"
+                    )
+                meta = {
+                    **meta,
+                    "columns": list(df.columns),
+                    "cluster_cols": [
+                        c
+                        for c in meta.get("cluster_cols", [])
+                        if c in df.columns
+                    ],
+                }
+                self.set_layout_meta(table_id, meta)
+            self.layout_writer(df, meta, stats_hook=stats_hook).mode(
+                mode
+            ).parquet(self.path_for(table_id))
+            if meta:
+                # schema sidecar: what an EMPTY layout directory reads as
+                # (TRUNCATE / full partition expiration leave no footers)
+                self.set_layout_meta(
+                    table_id, {**meta, "schema_json": df.schema.json()}
                 )
-            meta = {
-                **meta,
-                "columns": list(df.columns),
-                "cluster_cols": [
-                    c
-                    for c in meta.get("cluster_cols", [])
-                    if c in df.columns
-                ],
-            }
-            self.set_layout_meta(table_id, meta)
-        self.layout_writer(df, meta, stats_hook=stats_hook).mode(
-            mode
-        ).parquet(self.path_for(table_id))
-        if meta:
-            # schema sidecar: what an EMPTY layout directory reads as
-            # (TRUNCATE / full partition expiration leave no footers)
-            self.set_layout_meta(
-                table_id, {**meta, "schema_json": df.schema.json()}
-            )
-        self.check_partition_cap(table_id)
-        if not existed:
-            self._record_creation(table_id)
-        # a schema-preserving write carries the verified memo entry to
-        # the new fingerprint so register() below skips re-inference
-        self.rekey_read_schema_memo(table_id, pre_fp, df.schema, meta)
-        if not meta and (disposition == "WRITE_TRUNCATE" or not existed):
-            # prime the read-schema memo from the written frame (plain
-            # tables only — a layout read-back reorders/derives
-            # partition columns): a truncating or creating write defines
-            # the whole directory, so the read-back schema is the
-            # written one with parquet's all-nullable flags. Saves the
-            # footer inference the register() below (and every later
-            # read) would pay. APPENDS do not prime (ADVICE r11): an
-            # appender outside the aligned-DML path could land a
-            # different column order, and the written frame's schema
-            # would then misread the pre-existing files — let the next
-            # read infer from footers instead.
-            fp = self.table_fingerprint(table_id)
-            if fp is not None:
-                _prime_read_schema_cache(
-                    (id(self.spark), self.path_for(table_id)),
-                    fp,
-                    _as_read_nullable(df.schema),
-                )
-        # downstream SQL jobs in the same pipeline address the table by
-        # name immediately (BigQuery-catalog semantics)
-        self.register(table_id)
-        self.expire_partitions(table_id)
+            self.check_partition_cap(table_id)
+            if not existed:
+                self._record_creation(table_id)
+            # a schema-preserving write carries the verified memo entry to
+            # the new fingerprint so register() below skips re-inference
+            self.rekey_read_schema_memo(table_id, pre_fp, df.schema, meta)
+            if not meta and (disposition == "WRITE_TRUNCATE" or not existed):
+                # prime the read-schema memo from the written frame (plain
+                # tables only — a layout read-back reorders/derives
+                # partition columns): a truncating or creating write defines
+                # the whole directory, so the read-back schema is the
+                # written one with parquet's all-nullable flags. Saves the
+                # footer inference the register() below (and every later
+                # read) would pay. APPENDS do not prime (ADVICE r11): an
+                # appender outside the aligned-DML path could land a
+                # different column order, and the written frame's schema
+                # would then misread the pre-existing files — let the next
+                # read infer from footers instead.
+                fp = self.table_fingerprint(table_id)
+                if fp is not None:
+                    _prime_read_schema_cache(
+                        (id(self.spark), self.path_for(table_id)),
+                        fp,
+                        _as_read_nullable(df.schema),
+                    )
+            # downstream SQL jobs in the same pipeline address the table by
+            # name immediately (BigQuery-catalog semantics)
+            self.register(table_id)
+            self.expire_partitions(table_id)
 
     def drop(self, table_id: str) -> None:
         import shutil

@@ -6417,6 +6417,62 @@ def splice_system_vars(sql: str, values: dict) -> str:
     return "".join(out)
 
 
+_INSERT_COLUMNS_RE = re.compile(
+    r"\bINSERT\b(?:\s+INTO\b)?"
+    r"(?:\s+(?!VALUES\b|ROW\b|SELECT\b|WITH\b)[\w.\-]+)?\s*\(",
+    re.IGNORECASE,
+)
+_COLUMN_LIST_RE = re.compile(r"(?!\s*(?:SELECT|WITH)\b)[\w\s,]+", re.IGNORECASE)
+_SET_CLAUSE_RE = re.compile(r"\bSET\b", re.IGNORECASE)
+_SET_TARGET_RE = re.compile(r"\w+\s*=(?!=)")
+_SET_TOKEN_RE = re.compile(r"\w+|[(),;]")
+
+
+def _column_name_offsets(sql: str) -> set[int]:
+    """Start offsets of the identifiers that can only name a column: the
+    column list of ``INSERT [INTO] t (a, b)`` (and MERGE's ``INSERT (a,
+    b)``), and each assignment target of ``UPDATE ... SET`` / MERGE's
+    ``UPDATE SET``. BigQuery resolves those names against the target
+    table, so a DECLAREd variable of the same name never replaces them."""
+    s = _strip_strings(blank_comments_same_length(sql))
+    out: set[int] = set()
+    for m in _INSERT_COLUMNS_RE.finditer(s):
+        end = _balanced_end(s, m.end() - 1)
+        body = s[m.end(): end - 1]
+        if end > 0 and _COLUMN_LIST_RE.fullmatch(body):
+            out.update(m.end() + w.start() for w in re.finditer(r"\w+", body))
+    for m in _SET_CLAUSE_RE.finditer(s):
+        # walk the assignment list: a target opens the clause and follows
+        # each top-level comma; a top-level WHERE/FROM/WHEN (outside a
+        # CASE expression), a closing paren or ``;`` ends it
+        depth = case = 0
+        want_target, start = True, m.end()
+        for t in _SET_TOKEN_RE.finditer(s, m.end()):
+            tok = t.group().upper()
+            if tok == "(":
+                depth += 1
+            elif tok == ")":
+                depth -= 1
+                if depth < 0:
+                    break
+            elif tok == ";":
+                break
+            elif depth:
+                continue
+            elif tok == ",":
+                want_target, start = case == 0, t.end()
+            elif tok == "CASE":
+                case += 1
+            elif tok == "END" and case:
+                case -= 1
+            elif case == 0 and tok in ("WHERE", "FROM", "WHEN"):
+                break
+            elif want_target:
+                want_target = False
+                lead = s[start: t.start()]
+                if not lead.strip() and _SET_TARGET_RE.match(s, t.start()):
+                    out.add(t.start())
+    return out
 
 
 @dataclass
@@ -6442,6 +6498,7 @@ class ScriptContext:
         )
         if not self.variables:
             return sql
+        columns = _column_name_offsets(sql)
         out: list[str] = []
         pos = 0
         i, n = 0, len(sql)
@@ -6466,7 +6523,10 @@ class ScriptContext:
                     # positions (round-11 probe: the blind replace
                     # corrupted them): qualified columns ``t.o``,
                     # alias position ``... AS o``, loop labels
-                    # ``o: REPEAT`` / ``BREAK o``
+                    # ``o: REPEAT`` / ``BREAK o``, and the column names
+                    # of INSERT column lists and SET targets
+                    if i in columns:
+                        continue
                     k = i - 1
                     while k >= 0 and sql[k].isspace():
                         k -= 1

@@ -647,36 +647,37 @@ def swap_catalog_table(
 
     from .catalog import _link_tree
 
-    path = catalog.path_for(table_id)
-    tmp = path + "__dml_tmp"
-    pre_fp = catalog.table_fingerprint(table_id)
-    meta = catalog.layout_meta(table_id)
-    try:
-        # a partitioned/clustered table keeps its layout through DML
-        # (BigQuery contract): the writer re-derives the partition
-        # column and re-sorts cluster keys
-        catalog.layout_writer(
-            result, meta, stats_hook=stats_hook
-        ).mode("overwrite").parquet(tmp)
-        for d in keep_dirs or []:
-            _link_tree(os.path.join(path, d), os.path.join(tmp, d))
-        # cap-check the STAGED directory (rewritten + kept union): a
-        # violating mutation raises HERE with the live table untouched
-        catalog.check_partition_cap(table_id, path=tmp)
-    except Exception:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    # the old directory becomes the time-travel pre-image (a rename —
-    # zero copy); internal tables skip the version store and delete
-    if not catalog.archive_preimage(table_id, move=True):
-        shutil.rmtree(path)
-    os.rename(tmp, path)
-    # the rewrite preserved the user schema: carry the verified schema
-    # memo across the swap so register() skips footer re-inference
-    catalog.rekey_read_schema_memo(table_id, pre_fp, result.schema, meta)
-    catalog.register(table_id)
-    # partition_expiration_days GC rides every mutation point
-    catalog.expire_partitions(table_id)
+    with catalog.table_lock(table_id):
+        path = catalog.path_for(table_id)
+        tmp = path + "__dml_tmp"
+        pre_fp = catalog.table_fingerprint(table_id)
+        meta = catalog.layout_meta(table_id)
+        try:
+            # a partitioned/clustered table keeps its layout through DML
+            # (BigQuery contract): the writer re-derives the partition
+            # column and re-sorts cluster keys
+            catalog.layout_writer(
+                result, meta, stats_hook=stats_hook
+            ).mode("overwrite").parquet(tmp)
+            for d in keep_dirs or []:
+                _link_tree(os.path.join(path, d), os.path.join(tmp, d))
+            # cap-check the STAGED directory (rewritten + kept union): a
+            # violating mutation raises HERE with the live table untouched
+            catalog.check_partition_cap(table_id, path=tmp)
+        except Exception:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        # the old directory becomes the time-travel pre-image (a rename —
+        # zero copy); internal tables skip the version store and delete
+        if not catalog.archive_preimage(table_id, move=True):
+            shutil.rmtree(path)
+        os.rename(tmp, path)
+        # the rewrite preserved the user schema: carry the verified schema
+        # memo across the swap so register() skips footer re-inference
+        catalog.rekey_read_schema_memo(table_id, pre_fp, result.schema, meta)
+        catalog.register(table_id)
+        # partition_expiration_days GC rides every mutation point
+        catalog.expire_partitions(table_id)
 
 
 # ---------------------------------------------------------------------------

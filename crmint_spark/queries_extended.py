@@ -859,16 +859,12 @@ GROUP BY p.event_id, p.user_id, ROUND(p.value, 2)
 
 
 def streaming_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """applyInPandasWithState exact dedup drained with availableNow: the
-    corpus is dropped into the stream directory TWICE and processed in
-    two separate micro-batches (maxFilesPerTrigger=1), so the
-    seen-marker state must dedup ACROSS batches, not just within one.
-    Oracle-checked: exactly one first-occurrence row survives per
-    event_id, so per-type counts equal the batch distinct counts. State
-    runs under the production TTL contract — a 1-hour retention far
-    beyond the drain's span, so no marker expires mid-run and the result
-    is identical to forever-dedup (the expiry behavior itself is
-    pytest-asserted in test_stateful_streaming)."""
+    """Exact streaming dedup (``dropDuplicates``) drained with
+    availableNow: the corpus is dropped into the stream directory TWICE
+    and processed in two separate micro-batches (maxFilesPerTrigger=1),
+    so the seen-key state must dedup ACROSS batches, not just within
+    one. Oracle-checked: exactly one first-occurrence row survives per
+    event_id, so per-type counts equal the batch distinct counts."""
     from .streaming.events import run_to_table, stream_events_from_dir
     from .streaming.stateful import streaming_dedup_by_key
 
@@ -878,7 +874,7 @@ def streaming_stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev.write.json(in_dir)
     ev.write.mode("append").json(in_dir)  # the duplicate drop
     stream = stream_events_from_dir(spark, in_dir, max_files_per_trigger=1)
-    deduped = streaming_dedup_by_key(stream, ttl_ms=3_600_000)
+    deduped = streaming_dedup_by_key(stream)
     wh = Catalog(spark, os.path.join(tmp, "wh"))
     run_to_table(deduped, wh, "p.d.deduped", ckpt, output_mode="append")
     return (
@@ -899,13 +895,13 @@ FROM events GROUP BY event_type
 
 def streaming_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark's NATIVE event-time dedup operator,
-    ``dropDuplicatesWithinWatermark`` — the built-in complement to the
-    custom applyInPandasWithState dedup: state for a key is dropped once
-    the EVENT-TIME watermark passes its arrival window (vs the custom
-    operator's processing-time TTL). The corpus is dropped twice and
-    drained in separate micro-batches with a watermark wider than the
-    data's span, so every duplicate is caught across batches and the
-    per-type counts equal the batch distinct counts (oracle)."""
+    ``dropDuplicatesWithinWatermark`` — the bounded-state complement to
+    the exact ``dropDuplicates`` dedup: state for a key is dropped once
+    the EVENT-TIME watermark passes its arrival window (vs kept
+    forever). The corpus is dropped twice and drained in separate
+    micro-batches with a watermark wider than the data's span, so every
+    duplicate is caught across batches and the per-type counts equal the
+    batch distinct counts (oracle)."""
     from .catalog import Catalog
     from .streaming.events import run_to_table, stream_events_from_dir
 
@@ -935,8 +931,8 @@ FROM events GROUP BY event_type
 
 
 def streaming_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """applyInPandasWithState running per-user profiles in update mode,
-    drained over two micro-batches so the state accumulates across
+    """Streaming ``groupBy().agg()`` running per-user profiles in update
+    mode, drained over two micro-batches so the state accumulates across
     triggers. Each batch appends that batch's updated groups; the final
     state per user is the row with the highest (monotonic) event count.
     Oracle-checked against the batch per-user aggregate."""

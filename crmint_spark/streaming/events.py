@@ -8,7 +8,10 @@ Design notes for 100 TB/day ingestion:
 - session windows use ``F.session_window`` (gap-based), the streaming
   twin of the batch LAG+cumsum sessionization in queries.q08,
 - sinks go through ``foreachBatch`` so the batch writers (catalog
-  write dispositions, JSON-template sinks) are reused verbatim.
+  write dispositions, JSON-template sinks) are reused verbatim,
+- drains use the ``availableNow`` trigger: no operator here carries a
+  processing-time timeout, so every drain ends by itself once the input
+  present at its start is consumed.
 """
 
 from __future__ import annotations
@@ -101,6 +104,25 @@ def sessionized_stream(
     )
 
 
+def _drain(stream_df: DataFrame, sink, output_mode: str, checkpoint_dir: str) -> None:
+    """Run one ``availableNow`` pass: every micro-batch that has rows
+    goes to ``sink(batch_df)`` through foreachBatch, and the query ends
+    by itself once the input present at start is consumed."""
+
+    def _each_batch(batch_df: DataFrame, _batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            sink(batch_df)
+
+    (
+        stream_df.writeStream.foreachBatch(_each_batch)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def run_to_table(
     stream_df: DataFrame,
     catalog,
@@ -118,47 +140,13 @@ def run_to_table(
     rewrites the full aggregate each batch (truncate-write), so the
     final table equals the batch-computed result.
     """
-
-    def _write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        disposition = "WRITE_TRUNCATE" if output_mode == "complete" else "WRITE_APPEND"
-        if batch_df.isEmpty():
-            return
-        catalog.write(batch_df, table_id, disposition)
-
-    q = (
-        stream_df.writeStream.foreachBatch(_write_batch)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    disposition = "WRITE_TRUNCATE" if output_mode == "complete" else "WRITE_APPEND"
+    _drain(
+        stream_df,
+        lambda batch_df: catalog.write(batch_df, table_id, disposition),
+        output_mode,
+        checkpoint_dir,
     )
-    drain_and_stop(q)
-
-
-def drain_and_stop(q, timeout_s: float = 600.0) -> None:
-    """Wait until the query has consumed every available input row,
-    then stop it. A stateful operator with a ProcessingTimeTimeout keeps
-    scheduling no-data "cleaning up state" batches to service future
-    expirations, so neither availableNow auto-termination nor
-    processAllAvailable() ever returns — instead, poll progress until a
-    zero-input batch runs with no data pending, which for an
-    availableNow query means the latched input is fully processed."""
-    import time as _time
-
-    deadline = _time.monotonic() + timeout_s
-    try:
-        while q.isActive and _time.monotonic() < deadline:
-            p = q.lastProgress
-            if (
-                p is not None
-                and p.get("numInputRows", 0) == 0
-                and not q.status.get("isDataAvailable", True)
-            ):
-                break
-            _time.sleep(0.3)
-    finally:
-        q.stop()
-        q.awaitTermination()
 
 
 def run_merge_upsert(
@@ -183,19 +171,12 @@ def run_merge_upsert(
     semantics with exactly-once state from the checkpoint."""
     from ..dml import merge_upsert_batch
 
-    def _merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        merge_upsert_batch(catalog, table_id, batch_df, keys)
-
-    q = (
-        stream_df.writeStream.foreachBatch(_merge_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        stream_df,
+        lambda batch_df: merge_upsert_batch(catalog, table_id, batch_df, keys),
+        "update",
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def interval_joined_stream(

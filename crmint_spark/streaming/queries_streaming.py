@@ -7,10 +7,10 @@ resuming an old checkpoint would skip the input, which is both wrong
 and result-caching), memory/foreachBatch sink — and returns a bounded
 DataFrame whose values a DuckDB oracle replays relationally.
 
-Guide §4 applied to the stateful operators: the applyInPandasWithState
-groups ship ONLY the columns the state function reads (the stream
-carries 6 columns; the profile needs 3, the dedup 3), so the
-JVM->Python Arrow boundary moves half the bytes.
+Every operator here runs on Spark's built-in state store (the stateful
+dedup and running profile are ``dropDuplicates`` and a streaming
+``groupBy().agg()``), so each entry drives the full key space of the
+events table — no key-space scoping to keep a Python state loop cheap.
 """
 
 from __future__ import annotations
@@ -115,29 +115,23 @@ def _events_ndjson_dir(spark: SparkSession, sf_dir: str, dup: bool = False) -> s
     return out
 
 
-def _drain_to_memory(
-    stream_df: DataFrame, output_mode: str, state_shuffle: int | None = 8
-) -> DataFrame:
+def _drain_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
     """Run an availableNow pass into a uniquely named memory sink with a
     fresh checkpoint; returns the sink table.
 
     The state-store partition count equals spark.sql.shuffle.partitions
     at first batch and every partition is a checkpointed store (a
     stream-stream join keeps FOUR per partition, each fsynced per
-    batch) — size it to the micro-batch state volume instead of the
-    batch session's scan parallelism (guide §2/§5; env
-    SPARK_GRAFT_STREAM_SHUFFLE, production ingestion sizes this to
-    sustained state volume per core)."""
+    batch) — pin it to 8, sized to the micro-batch state volume
+    instead of the batch session's scan parallelism (guide §2/§5;
+    production ingestion sizes this to sustained state volume per
+    core)."""
     spark = stream_df.sparkSession
     name = f"__stream_q_{uuid.uuid4().hex[:10]}"
     ckpt = _scratch_dir("crmint_stream_ckpt_")
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
-    if state_shuffle is not None:
-        spark.conf.set(
-            key,
-            os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", str(state_shuffle)),
-        )
+    spark.conf.set(key, "8")
     try:
         q = (
             stream_df.writeStream.format("memory")
@@ -223,7 +217,7 @@ FROM per_session GROUP BY user_id
 """
 
 
-# -- 3. stateful exact dedup (applyInPandasWithState) ------------------------
+# -- 3. stateful exact dedup (dropDuplicates) --------------------------------
 
 
 def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -232,17 +226,8 @@ def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         _events_ndjson_dir(spark, sf_dir, dup=True),
         timestamp_format=_TS_FMT,
     )
-    # guide §4: ship only the columns the state function reads; the
-    # micro-driver scopes to a deterministic 1/8th of the key space —
-    # per-key Python state dominates the cost linearly (~60 us/key
-    # measured), so the subset keeps the drift tripwire cheap while
-    # pytest covers the full width
-    deduped = stateful.streaming_dedup_by_key(
-        stream.where("event_id % 8 = 0").select(
-            "event_id", "user_id", "event_type"
-        )
-    )
-    out = _drain_to_memory(deduped, "append", state_shuffle=None)
+    deduped = stateful.streaming_dedup_by_key(stream)
+    out = _drain_to_memory(deduped, "append")
     return out.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_first"),
         F.sum("is_first").alias("sum_first"),
@@ -253,21 +238,19 @@ def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 STREAM_DEDUP_SQL = """
 SELECT event_type, COUNT(*) AS n_first, COUNT(*) AS sum_first,
        CAST(SUM(user_id) AS BIGINT) AS sum_users
-FROM events WHERE event_id % 8 = 0 GROUP BY event_type
+FROM events GROUP BY event_type
 """
 
 
-# -- 4. stateful running profile (applyInPandasWithState) --------------------
+# -- 4. stateful running profile (streaming groupBy().agg()) -----------------
 
 
 def streaming_running_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = sevents.stream_events_from_dir(
         spark, _events_ndjson_dir(spark, sf_dir), timestamp_format=_TS_FMT
     )
-    profile = stateful.user_running_profile(
-        stream.select("user_id", "ts", "value")
-    )
-    out = _drain_to_memory(profile, "update", state_shuffle=None)
+    profile = stateful.user_running_profile(stream)
+    out = _drain_to_memory(profile, "update")
     # update mode emits one row per (user, batch); keep each user's
     # final (highest-count) state so multi-batch splits stay invisible
     return out.groupBy("user_id").agg(

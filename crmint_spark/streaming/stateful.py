@@ -1,162 +1,44 @@
-"""Custom stateful streaming operators via ``applyInPandasWithState``.
+"""Stateful streaming operators on Spark's built-in state store.
 
-These are the operators Structured Streaming's built-in aggregations
-can't express (SURVEY §2.2 streaming extension): arbitrary per-key state
-with timeouts. State lives in the state store (RocksDB/HDFS-backed on a
-cluster), keyed by the grouping column — partition-parallel and
-fault-tolerant by construction.
+Both operators are plain DataFrame plans, so their per-key state lives
+in the JVM state store (RocksDB/HDFS-backed on a cluster), keyed by the
+grouping column — partition-parallel and fault-tolerant by
+construction, with no Python worker on the micro-batch path.
 
 Implemented:
 - ``user_running_profile`` — per-user running profile (event count,
   total value, first/last seen) emitted on every update; the streaming
   twin of the batch per-user aggregate with no window bound.
 - ``streaming_dedup_by_key`` — drop rows whose key was already seen
-  (exact streaming dedup; an optional ``ttl_ms`` retention arms a
-  ProcessingTimeTimeout per key so quiet keys expire and state stays
-  bounded by the retention window's working set).
+  (exact streaming dedup; state is one entry per key, kept forever —
+  use ``dropDuplicatesWithinWatermark`` where state must be bounded by
+  event time).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
-
-PROFILE_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("total_value", DoubleType()),
-        StructField("first_ts", TimestampType()),
-        StructField("last_ts", TimestampType()),
-    ]
-)
-
-_PROFILE_STATE_SCHEMA = StructType(
-    [
-        StructField("n_events", LongType()),
-        StructField("total_value", DoubleType()),
-        StructField("first_ts", TimestampType()),
-        StructField("last_ts", TimestampType()),
-    ]
-)
-
-
-def _update_profile(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    if state.exists:
-        n, total, first_ts, last_ts = state.get
-    else:
-        n, total, first_ts, last_ts = 0, 0.0, None, None
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].fillna(0.0).sum())
-        lo, hi = pdf["ts"].min(), pdf["ts"].max()
-        first_ts = lo if first_ts is None or lo < first_ts else first_ts
-        last_ts = hi if last_ts is None or hi > last_ts else last_ts
-    state.update((n, total, first_ts, last_ts))
-    yield pd.DataFrame(
-        {
-            "user_id": [user_id],
-            "n_events": [n],
-            "total_value": [round(total, 2)],
-            "first_ts": [first_ts],
-            "last_ts": [last_ts],
-        }
-    )
+from pyspark.sql import functions as F
 
 
 def user_running_profile(events: DataFrame) -> DataFrame:
     """Unbounded per-user running profile (update-mode output)."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _update_profile,
-        outputStructType=PROFILE_SCHEMA,
-        stateStructType=_PROFILE_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return events.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.round(F.sum(F.coalesce("value", F.lit(0.0))), 2).alias("total_value"),
+        F.min("ts").alias("first_ts"),
+        F.max("ts").alias("last_ts"),
     )
 
 
-DEDUP_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("is_first", LongType()),
-    ]
-)
-
-_SEEN_STATE_SCHEMA = StructType([StructField("seen", LongType())])
-
-
-def streaming_dedup_by_key(
-    events: DataFrame, ttl_ms: int | None = None
-) -> DataFrame:
+def streaming_dedup_by_key(events: DataFrame) -> DataFrame:
     """Emit only the first occurrence of each event_id across the
-    stream (exact dedup; state = one marker per key).
-
-    ``ttl_ms`` is the state retention contract: with a TTL, each key's
-    marker arms a ProcessingTimeTimeout that is re-armed on every
-    sighting; once a key goes quiet for ttl_ms the state-store entry is
-    removed (bounding state to the working set of keys seen within the
-    retention window — the knob that keeps per-key state finite on an
-    unbounded 100 TB stream), and a later arrival of that key re-emits
-    as a fresh first occurrence. ``None`` keeps exact forever-dedup
-    (unbounded state, suitable when the key space itself is bounded)."""
-    empty = pd.DataFrame(columns=[f.name for f in DEDUP_SCHEMA.fields])
-
-    def dedup(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if ttl_ms is not None and state.hasTimedOut:
-            state.remove()
-            yield empty
-            return
-        seen = state.exists
-        out = []
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            if not seen:
-                first = pdf.iloc[[0]]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "event_id": first["event_id"],
-                            "user_id": first["user_id"],
-                            "event_type": first["event_type"],
-                            "is_first": [1],
-                        }
-                    )
-                )
-                seen = True
-        state.update((1,))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(int(ttl_ms))
-        yield from out or [empty]
-
-    return events.groupBy("event_id").applyInPandasWithState(
-        dedup,
-        outputStructType=DEDUP_SCHEMA,
-        stateStructType=_SEEN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if ttl_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
+    stream (exact dedup; append-mode output)."""
+    return events.dropDuplicates(["event_id"]).select(
+        "event_id",
+        "user_id",
+        "event_type",
+        F.lit(1).cast("long").alias("is_first"),
     )
 
 

@@ -8,6 +8,7 @@ storage swap.
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 import pytest
@@ -1185,6 +1186,83 @@ def test_job_ids_unique_under_concurrency(spark, cat):
     ids = [j["job_id"] for j in cat._jobs]
     assert len(set(ids)) == 200
     assert ids == sorted(ids)  # ordinal order == append order
+
+
+def test_parallel_appends_to_one_table_serialise(spark, cat):
+    """Two pipeline branches appending to one table share its directory:
+    the per-table lock keeps their Spark appends and pre-image archives
+    apart, so every row lands and every append archives its own
+    version."""
+    import concurrent.futures
+
+    cat.write(spark.range(1), "p.d.log")
+    sizes = [[3 + i for i in range(10)], [20 + i for i in range(10)]]
+
+    def branch(ns):
+        for n in ns:
+            cat.write(spark.range(n), "p.d.log", "WRITE_APPEND")
+
+    with concurrent.futures.ThreadPoolExecutor(max_workers=2) as ex:
+        for f in [ex.submit(branch, ns) for ns in sizes]:
+            f.result()  # re-raises a branch's failure
+    assert cat.read("p.d.log").count() == 1 + sum(map(sum, sizes))
+    versions = [
+        d for d in os.listdir(cat._versions_root("p.d.log")) if d.isdigit()
+    ]
+    assert len(versions) == 20
+
+
+def test_declared_name_keeps_merge_set_target_column(spark, cat):
+    """A DECLAREd variable sharing a column's name is not spliced into a
+    MERGE ``UPDATE SET`` target (BigQuery resolves it to the column);
+    qualified uses and the right-hand side read as before."""
+    cat.write(spark.sql("SELECT 1 AS user_id, 2 AS n_orders"), "p.d.users")
+    run(
+        spark,
+        cat,
+        """
+        DECLARE n_orders INT64 DEFAULT 150;
+        MERGE `p.d.users` T
+        USING (SELECT 1 AS user_id, 5 AS n UNION ALL SELECT 2, 7) S
+        ON T.user_id = S.user_id
+        WHEN MATCHED THEN UPDATE SET n_orders = T.n_orders + S.n
+        WHEN NOT MATCHED THEN INSERT (user_id, n_orders)
+          VALUES (S.user_id, n_orders)
+        """,
+    )
+    got = sorted(map(tuple, cat.read("p.d.users").collect()))
+    assert got == [(1, 7), (2, 150)]
+
+
+def test_declared_name_keeps_insert_column_list(spark, cat):
+    cat.write(
+        spark.sql("SELECT DATE '2024-01-01' AS day, 1 AS n_sessions"),
+        "p.d.daily",
+    )
+    run(
+        spark,
+        cat,
+        """
+        DECLARE n_sessions INT64 DEFAULT 400;
+        INSERT INTO `p.d.daily` (day, n_sessions)
+          VALUES (DATE '2024-01-02', n_sessions)
+        """,
+    )
+    got = sorted(map(tuple, cat.read("p.d.daily").collect()))
+    assert [r[1] for r in got] == [1, 400]
+
+
+def test_declared_name_substitutes_update_right_hand_side(spark, cat):
+    seed(spark, cat)
+    run(
+        spark,
+        cat,
+        """
+        DECLARE bal DOUBLE DEFAULT 1.5;
+        UPDATE `p.d.t` SET bal = bal * 2 WHERE id = 1
+        """,
+    )
+    assert state(spark, cat)[0] == (1, "a", 3.0)
 
 
 def test_jobs_plane_survives_catalog_restart(spark, cat):

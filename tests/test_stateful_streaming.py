@@ -1,4 +1,5 @@
-"""applyInPandasWithState + stream-static join tests."""
+"""Stateful streaming operators (built-in state store) + stream-static
+join tests."""
 
 from __future__ import annotations
 
@@ -33,6 +34,7 @@ def _drain(stream_df, tmp_path, name, output_mode):
         .start()
     )
     q.awaitTermination()
+    return q
 
 
 def test_user_running_profile_matches_batch(spark, tmp_path, stream_dir):
@@ -87,86 +89,77 @@ def test_stream_static_enrichment_join(spark, tmp_path, stream_dir):
     assert got == batch
 
 
-def test_streaming_dedup_ttl_expires_quiet_keys(spark, tmp_path):
-    """VERDICT r4 #5: the TTL contract. With a TTL longer than the
-    stream span, dedup is exact across micro-batches; with a short TTL,
-    a no-data cleanup batch between two sightings of a key expires its
-    marker (ProcessingTimeTimeout -> state.remove()), and the later
-    sighting RE-EMITS as a fresh first occurrence."""
+def _write_ndjson(d, name, rows):
+    """Atomically drop one NDJSON file of event rows into ``d``."""
     import json
-    import time
 
     base = dict(user_id=1, event_type="view", value=1.0,
                 ts="2024-01-01T00:00:00.000Z", props="{}")
+    p = os.path.join(d, name)
+    with open(p + ".tmp", "w") as fh:
+        for row in rows:
+            fh.write(json.dumps({**base, **row}) + "\n")
+    os.rename(p + ".tmp", p)
 
-    def write_file(d, name, ids):
-        p = os.path.join(d, name)
-        with open(p + ".tmp", "w") as fh:
-            for eid in ids:
-                fh.write(json.dumps({**base, "event_id": eid}) + "\n")
-        os.rename(p + ".tmp", p)
 
-    from crmint_spark.streaming import events as sev
+def test_streaming_dedup_across_three_micro_batches(spark, tmp_path):
+    """Exact forever-dedup across micro-batches: key 1 arrives in all
+    three batches and is emitted once, by the first."""
+    import time
 
-    # --- long TTL: three batches, exact forever-dedup semantics ---
-    d1 = str(tmp_path / "in_long")
-    os.makedirs(d1)
+    d = str(tmp_path / "in")
+    os.makedirs(d)
     for i, ids in enumerate([[1, 2], [1, 3], [1, 4]]):
-        write_file(d1, f"b{i}.json", ids)
+        _write_ndjson(d, f"b{i}.json", [{"event_id": e} for e in ids])
         time.sleep(1.1)  # distinct mtimes -> deterministic batch order
-    stream = sev.stream_events_from_dir(spark, d1, max_files_per_trigger=1)
-    q = (
-        stateful.streaming_dedup_by_key(stream, ttl_ms=3_600_000)
-        .writeStream.format("memory")
-        .queryName("ttl_long")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_long"))
-        .trigger(availableNow=True)
-        .start()
+    stream = sevents.stream_events_from_dir(spark, d, max_files_per_trigger=1)
+    q = _drain(
+        stateful.streaming_dedup_by_key(stream), tmp_path, "dedup3", "append"
     )
-    sev.drain_and_stop(q)
-    assert sorted(
-        r.event_id for r in spark.table("ttl_long").collect()
-    ) == [1, 2, 3, 4]
-
-    # --- short TTL: live query; the quiet gap between file drops runs
-    # no-data cleanup batches that expire key 1, so its second sighting
-    # re-emits ---
-    d2 = str(tmp_path / "in_short")
-    os.makedirs(d2)
-    write_file(d2, "b0.json", [1, 2])
-    stream2 = sev.stream_events_from_dir(spark, d2)
-    q2 = (
-        stateful.streaming_dedup_by_key(stream2, ttl_ms=500)
-        .writeStream.format("memory")
-        .queryName("ttl_short")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_short"))
-        .start()
-    )
-    try:
-        def wait_rows(n, deadline_s=90):
-            end = time.monotonic() + deadline_s
-            while time.monotonic() < end:
-                if spark.table("ttl_short").count() >= n:
-                    return
-                time.sleep(0.5)
-            raise AssertionError(
-                f"sink never reached {n} rows: "
-                f"{spark.table('ttl_short').collect()}"
-            )
-
-        wait_rows(2)        # batch 1: keys 1, 2 emitted
-        time.sleep(5)       # > TTL: cleanup batches expire both markers
-        write_file(d2, "b1.json", [1, 3])
-        wait_rows(4)        # batch 2: key 3 AND the re-emitted key 1
-    finally:
-        q2.stop()
-        q2.awaitTermination()
-    rows = spark.table("ttl_short").collect()
-    n_key1 = sum(1 for r in rows if r.event_id == 1)
-    assert n_key1 == 2, rows
+    batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(batches) == 3
+    rows = spark.table("dedup3").collect()
+    assert sorted(r.event_id for r in rows) == [1, 2, 3, 4]
     assert all(r.is_first == 1 for r in rows)
+
+
+def test_running_profile_null_values_sum_to_zero(spark, tmp_path):
+    """A user whose every value is NULL gets total_value 0.0, not NULL
+    (the batch oracle's SUM(COALESCE(value, 0)))."""
+    d = str(tmp_path / "in")
+    os.makedirs(d)
+    _write_ndjson(d, "b0.json", [
+        {"event_id": 1, "user_id": 7, "value": None},
+        {"event_id": 2, "user_id": 7, "value": None},
+        {"event_id": 3, "user_id": 8, "value": 2.5},
+        {"event_id": 4, "user_id": 8, "value": None},
+    ])
+    stream = sevents.stream_events_from_dir(spark, d)
+    _drain(stateful.user_running_profile(stream), tmp_path, "nullprof", "update")
+    got = {
+        r.user_id: (r.n_events, r.total_value)
+        for r in spark.table("nullprof").collect()
+    }
+    assert got == {7: (2, 0.0), 8: (2, 2.5)}
+
+
+@pytest.mark.parametrize(
+    "build, mode, operator",
+    [
+        (stateful.user_running_profile, "update", "StateStoreSave"),
+        (stateful.streaming_dedup_by_key, "append", "StreamingDeduplicate"),
+    ],
+)
+def test_stateful_plans_stay_in_the_jvm(
+    spark, tmp_path, stream_dir, build, mode, operator
+):
+    """Both operators run on the built-in state store: the executed
+    plan has Spark's own stateful node and no Python state function."""
+    stream = sevents.stream_events_from_dir(spark, stream_dir)
+    q = _drain(build(stream), tmp_path, f"plan_{operator}", mode)
+    plan = q._jsq.explainInternal(False)
+    assert operator in plan, plan
+    assert "FlatMapGroupsInPandasWithState" not in plan, plan
 
 
 def test_ndjson_drops_coexist_per_dup_flavor(spark):
