@@ -47,8 +47,19 @@ from __future__ import annotations
 
 import datetime
 import re
-from collections.abc import Callable
 from dataclasses import dataclass, field
+from itertools import starmap
+
+from .sqllex import (
+    TOKEN_RE,
+    balanced_end,
+    find_top_level,
+    iter_calls,
+    mask,
+    segments,
+    split_top_level,
+    sub_code,
+)
 
 _STRFTIME_TO_SPARK = [
     ("%Y", "yyyy"),
@@ -73,139 +84,6 @@ _STRFTIME_TO_SPARK = [
 ]
 
 _BQ_DATE_FMT = {"YYYYMMDD": "yyyyMMdd", "YYYY-MM-DD": "yyyy-MM-dd"}
-
-
-def _skip_string(sql: str, i: int) -> int:
-    """If sql[i] opens a quoted literal, return the index just past its
-    close; else return i. Triple-quoted literals (``'''…'''`` /
-    ``\"\"\"…\"\"\"``, legal BigQuery — round-11 verdict: previously
-    silently mis-lexed) are recognized greedily like BigQuery lexes
-    them: three quote chars open, the first unescaped matching run of
-    three closes."""
-    q = sql[i]
-    if q not in ("'", '"', "`"):
-        return i
-    n = len(sql)
-    if q != "`" and sql.startswith(q * 3, i):
-        j = i + 3
-        while j < n:
-            if sql[j] == "\\":
-                j += 2
-                continue
-            if sql.startswith(q * 3, j):
-                return j + 3
-            j += 1
-        return n
-    j = i + 1
-    while j < n:
-        if sql[j] == "\\" and q != "`":
-            j += 2
-            continue
-        if sql[j] == q:
-            return j + 1
-        j += 1
-    return n
-
-
-def _skip_comment(sql: str, i: int) -> int:
-    """If sql[i] opens a ``--``, ``#`` or ``/* */`` comment, return the
-    index just past its end; else return i. Walks that treat quotes as
-    string openers must skip comments FIRST — an apostrophe inside a
-    comment (``/* don't */``) would otherwise swallow the rest of the
-    statement (review finding r8). ``#`` line comments are legal
-    BigQuery (round-11 verdict) and never appear in code position in
-    the engine's own generated SQL."""
-    ch = sql[i]
-    if ch not in "-#/":  # cheap bail — this runs per character in the
-        return i  # hot lexing walks (round-11 perf creep fix)
-    if ch == "#" or sql.startswith("--", i):
-        nl = sql.find("\n", i)
-        return len(sql) if nl == -1 else nl + 1
-    if sql.startswith("/*", i):
-        end = sql.find("*/", i + 2)
-        return len(sql) if end == -1 else end + 2
-    return i
-
-
-def blank_comments_same_length(sql: str) -> str:
-    """Replace ``--`` / ``/* */`` comment spans with spaces, preserving
-    every index — scans that return offsets into the original text can
-    run over the blanked copy without keyword false-matches inside
-    comments."""
-    out = list(sql)
-    i, n = 0, len(sql)
-    while i < n:
-        j = _skip_comment(sql, i)
-        if j > i:
-            for k in range(i, j):
-                if out[k] != "\n":
-                    out[k] = " "
-            i = j
-            continue
-        if sql[i] in ("'", '"', "`"):
-            i = _skip_string(sql, i)
-            continue
-        i += 1
-    return "".join(out)
-
-
-def _balanced_end(sql: str, open_idx: int) -> int:
-    """Index just past the ``)`` matching the ``(`` at ``open_idx``
-    (string-literal AND comment aware — a paren inside ``-- (note`` or
-    ``/* ) */`` must not move the depth, round-11 probe: it broke every
-    UDF/TVF body containing an unbalanced paren in a comment); -1 if
-    unbalanced."""
-    depth = 0
-    i, n = open_idx, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in "-#/":  # comment-start chars only — hot loop
-            j = _skip_comment(sql, i)
-            if j > i:
-                i = j
-                continue
-        if ch in ("'", '"', "`"):
-            i = _skip_string(sql, i)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    return -1
-
-
-def _split_top_level(args: str, sep: str = ",") -> list[str]:
-    """Split on top-level separators (paren, BRACKET and string aware —
-    brackets since round 9: ``SET emb = [1.0, 2.0]`` must be ONE
-    assignment; the bracket-blind splitter broke every array-literal
-    argument, review finding r9)."""
-    out: list[str] = []
-    buf_start = 0
-    depth = 0
-    i, n = 0, len(args)
-    while i < n:
-        ch = args[i]
-        if ch in "-#/":  # comment-start chars only — hot loop
-            j = _skip_comment(args, i)
-            if j > i:
-                i = j
-                continue
-        if ch in ("'", '"', "`"):
-            i = _skip_string(args, i)
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif ch == sep and depth == 0:
-            out.append(args[buf_start:i])
-            buf_start = i + 1
-        i += 1
-    out.append(args[buf_start:])
-    return out
 
 
 def _fresh_lambda_params(embedded: list[str], *bases: str) -> list[str]:
@@ -239,31 +117,6 @@ def _fresh_lambda_params(embedded: list[str], *bases: str) -> list[str]:
     return out
 
 
-def _iter_calls(sql: str, names: tuple[str, ...]):
-    """Yield (start, open_paren, end, func_name_lower) for every
-    top-level call of any name in ``names`` (word-bounded, case-ins.),
-    scanning left to right and skipping string literals."""
-    pat = re.compile(
-        r"\b(" + "|".join(names) + r")\s*\(", re.IGNORECASE
-    )
-    i = 0
-    n = len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in ("'", '"', "`"):
-            i = _skip_string(sql, i)
-            continue
-        m = pat.match(sql, i)
-        if m:
-            open_idx = m.end() - 1
-            end = _balanced_end(sql, open_idx)
-            if end > 0:
-                yield m.start(), open_idx, end, m.group(1).lower()
-                i = end
-                continue
-        i += 1
-
-
 def strip_leading_comments(s: str) -> str:
     """Drop ``--`` / ``#`` / ``/* */`` comments (and whitespace) from
     the FRONT of a statement. The executor routes statements on their
@@ -287,37 +140,18 @@ def strip_leading_comments(s: str) -> str:
 
 
 def split_script(script: str) -> list[str]:
-    """Split a SQL script into statements on top-level semicolons,
-    respecting single/double/TRIPLE-quoted strings, backticks, and
-    ``--`` / ``#`` / ``/* */`` comments (shared lexer helpers, so the
-    statement boundary rules can never drift from the walkers').
+    """Split a SQL script into statements on semicolons in code (the
+    shared lexer decides what is a string, identifier or comment).
     Leading comments are stripped from each statement (head-keyword
     routing; pure-comment statements drop); comment TEXT inside a
     statement is preserved verbatim."""
     stmts: list[str] = []
-    buf: list[str] = []
-    i, n = 0, len(script)
-    while i < n:
-        ch = script[i]
-        if ch == ";":
-            stmt = strip_leading_comments("".join(buf).strip())
-            if stmt:
-                stmts.append(stmt)
-            buf = []
-            i += 1
-            continue
-        j = _skip_comment(script, i)
-        if j == i and ch in ("'", '"', "`"):
-            j = _skip_string(script, i)
-        if j > i:
-            buf.append(script[i:j])
-            i = j
-            continue
-        buf.append(ch)
-        i += 1
-    tail = strip_leading_comments("".join(buf).strip())
-    if tail:
-        stmts.append(tail)
+    start = 0
+    for m in re.finditer(r";|\Z", mask(script)):
+        stmt = strip_leading_comments(script[start : m.start()].strip())
+        if stmt:
+            stmts.append(stmt)
+        start = m.end()
     return _group_block_statements(stmts)
 
 
@@ -370,26 +204,10 @@ def _at_statement_position(s: str, i: int) -> bool:
     )
 
 
-def _strip_strings(sql: str) -> str:
-    """Blank out quoted regions (same length) so token scans can't match
-    keyword text inside literals."""
-    out = list(sql)
-    i, n = 0, len(sql)
-    while i < n:
-        if sql[i] in ("'", '"', "`"):
-            end = _skip_string(sql, i)
-            for j in range(i, min(end, n)):
-                out[j] = " "
-            i = end
-        else:
-            i += 1
-    return "".join(out)
-
-
 def _block_depth_delta(fragment: str) -> int:
     # comments blank first — a block keyword inside a comment must not
     # depth-count, and a comment apostrophe must not misalign strings
-    s = _strip_strings(blank_comments_same_length(fragment))
+    s = mask(fragment)
     depth = 0
     case_depth = 0
     for m in _BLOCK_TOKEN_RE.finditer(s):
@@ -482,7 +300,7 @@ def parse_script_block(stmt: str) -> dict | None:
         the opener. Comments blank FIRST (round 11): an apostrophe in
         ``IF c -- don't\\nTHEN`` opened a bogus string that swallowed
         THEN, and a keyword inside a comment would depth-count."""
-        s = _strip_strings(blank_comments_same_length(stmt))
+        s = mask(stmt)
         found: list[tuple[int, int, str]] = []
         depth, case_depth, paren = 1, 0, 0
         ws = r"[ \t\r\n]+"
@@ -669,7 +487,7 @@ def parse_script_block(stmt: str) -> dict | None:
         # EXPRESSION-position scalar subquery (round-11 probe: the
         # UNNEST element rewrite compiled the loop query to a bare
         # scalar), while the unwrapped text is a plain statement
-        if query.startswith("(") and _balanced_end(query, 0) == len(query):
+        if query.startswith("(") and balanced_end(query, 0) == len(query):
             query = query[1:-1].strip()
         return {
             "kind": "FOR",
@@ -718,11 +536,11 @@ def _rewrite_star_replace(sql: str) -> str:
         if not m:
             return sql
         open_idx = sql.index("(", m.end() - 1)
-        end = _balanced_end(sql, open_idx)
+        end = balanced_end(sql, open_idx)
         if end < 0:
             return sql
         star = m.group(1)
-        parts = _split_top_level(sql[open_idx + 1 : end - 1])
+        parts = split_top_level(sql[open_idx + 1 : end - 1])
         cols, exprs = [], []
         for p in parts:
             ma = None
@@ -768,15 +586,9 @@ def _rewrite_array_literals(sql: str) -> str:
     alone — BigQuery has no other bracket syntax."""
     out: list[str] = []
     pos = 0
+    masked = mask(sql)
     i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in ("'", '"', "`"):
-            i = _skip_string(sql, i)
-            continue
-        if ch != "[":
-            i += 1
-            continue
+    while (i := masked.find("[", i)) >= 0:
         j = i - 1
         while j >= 0 and sql[j].isspace():
             j -= 1
@@ -803,19 +615,12 @@ def _rewrite_array_literals(sql: str) -> str:
             elif word not in _KEYWORDS_BEFORE_ARRAY_LITERAL:
                 i += 1
                 continue  # subscript
-        depth, k = 0, i
-        while k < n:
-            c = sql[k]
-            if c in ("'", '"', "`"):
-                k = _skip_string(sql, k)
-                continue
-            if c == "[":
-                depth += 1
-            elif c == "]":
-                depth -= 1
-                if depth == 0:
-                    break
-            k += 1
+        depth, k = 0, n
+        for b in re.finditer(r"[\[\]]", masked[i:]):
+            depth += 1 if b.group() == "[" else -1
+            if depth == 0:
+                k = i + b.start()
+                break
         if k >= n:
             i += 1
             continue  # unbalanced — leave as-is
@@ -868,7 +673,7 @@ def _rewrite_typed_struct(sql: str) -> str:
             j += 1
         if depth or j >= n or sql[j] != "(":
             continue  # a type annotation (DDL), not a literal
-        end = _balanced_end(sql, j)
+        end = balanced_end(sql, j)
         if end < 0:
             continue
         names = [
@@ -878,7 +683,7 @@ def _rewrite_typed_struct(sql: str) -> str:
         ]
         args = [
             _rewrite_typed_struct(a.strip())
-            for a in _split_top_level(sql[j + 1 : end - 1])
+            for a in split_top_level(sql[j + 1 : end - 1])
         ]
         out.append(sql[pos : m.start()])
         if len(names) == len(args) and all(
@@ -913,7 +718,7 @@ def _rewrite_extract_parts(sql: str) -> str:
     Sunday are week 0) as an arithmetic expression."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, _fn in _iter_calls(sql, ("EXTRACT",)):
+    for start, open_idx, end, _fn in iter_calls(sql, ("EXTRACT",)):
         inner = sql[open_idx + 1 : end - 1].strip()
         m = re.match(
             r"(DATE|DATETIME|TIME|DAYOFYEAR|ISOWEEK|ISOYEAR"
@@ -982,8 +787,8 @@ def _rewrite_date_ctor(sql: str) -> str:
     (Spark's DATE() takes one argument)."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, _fn in _iter_calls(sql, ("DATE",)):
-        args = _split_top_level(sql[open_idx + 1 : end - 1])
+    for start, open_idx, end, _fn in iter_calls(sql, ("DATE",)):
+        args = split_top_level(sql[open_idx + 1 : end - 1])
         if len(args) != 3:
             continue
         out.append(sql[pos:start])
@@ -1035,25 +840,14 @@ def _rewrite_safe_subscript(sql: str) -> str:
         r"\[\s*(SAFE_OFFSET|SAFE_ORDINAL)\s*\(\s*(\d+)\s*\)\s*\]",
         re.IGNORECASE,
     )
-    while True:
-        m = None
-        i, n = 0, len(sql)
-        while i < n:
-            if sql[i] in ("'", '"', "`"):
-                i = _skip_string(sql, i)
-                continue
-            m = pat.match(sql, i)
-            if m:
-                break
-            i += 1
-        if not m:
-            return sql
+    while m := pat.search(mask(sql)):
         idx = int(m.group(2))
         if m.group(1).upper() == "SAFE_ORDINAL":
             idx -= 1
         p = _primary_start(sql, m.start())
         target = sql[p : m.start()].strip()
         sql = f"{sql[:p]}get({target}, {idx}){sql[m.end():]}"
+    return sql
 
 
 def _rewrite_offset_ordinal(sql: str) -> str:
@@ -1084,10 +878,10 @@ def _rewrite_format_date(sql: str) -> str:
     CURRENT_DATE(), ...) survive (ref: model_bqml.sql:92-94)."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, _fn in _iter_calls(
+    for start, open_idx, end, _fn in iter_calls(
         sql, ("FORMAT_DATE", "FORMAT_TIMESTAMP", "FORMAT_DATETIME")
     ):
-        args = _split_top_level(sql[open_idx + 1 : end - 1])
+        args = split_top_level(sql[open_idx + 1 : end - 1])
         if len(args) != 2:
             continue
         fmt_raw = args[0].strip()
@@ -1133,7 +927,7 @@ def _rewrite_time_fns(sql: str) -> str:
     MICROSECOND granularity is exact (it never renders)."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, fn in _iter_calls(
+    for start, open_idx, end, fn in iter_calls(
         sql,
         (
             "TIME_ADD",
@@ -1148,7 +942,7 @@ def _rewrite_time_fns(sql: str) -> str:
     ):
         args = [
             _rewrite_time_fns(a.strip())
-            for a in _split_top_level(sql[open_idx + 1 : end - 1])
+            for a in split_top_level(sql[open_idx + 1 : end - 1])
             if a.strip()
         ]
         rep = None
@@ -1218,8 +1012,8 @@ def _rewrite_interval_arith(sql: str) -> str:
     )
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, fn in _iter_calls(sql, names):
-        args = _split_top_level(sql[open_idx + 1 : end - 1])
+    for start, open_idx, end, fn in iter_calls(sql, names):
+        args = split_top_level(sql[open_idx + 1 : end - 1])
         if len(args) != 2 or not re.match(r"\s*INTERVAL\b", args[1], re.IGNORECASE):
             continue
         op = "-" if fn.endswith("_sub") else "+"
@@ -1243,8 +1037,8 @@ def _rewrite_datetime_fn(sql: str) -> str:
     (ref: model_bqml.sql:277; output.sql:32)."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, _fn in _iter_calls(sql, ("DATETIME",)):
-        args = _split_top_level(sql[open_idx + 1 : end - 1])
+    for start, open_idx, end, _fn in iter_calls(sql, ("DATETIME",)):
+        args = split_top_level(sql[open_idx + 1 : end - 1])
         if len(args) != 1:
             continue
         out.append(sql[pos:start])
@@ -1276,7 +1070,7 @@ def _rewrite_raw_strings(sql: str) -> str:
             "'" + body.replace("\\", "\\\\").replace("'", "\\'") + "'",
         )
 
-    return _map_code_literal_pairs(sql, fn)
+    return "".join(map("".join, starmap(fn, segments(sql))))
 
 
 #: fast bail for the bytes-literal pass — the prefix letter must sit
@@ -1353,40 +1147,7 @@ def _rewrite_bytes_literals(sql: str) -> str:
             "X'" + data.hex().upper() + "'",
         )
 
-    return _map_code_literal_pairs(sql, fn)
-
-
-def blank_comments_keep_hints(sql: str) -> str:
-    """Blank every comment to spaces (newlines kept, string-aware —
-    incl. triple-quoted spans) EXCEPT ``/*+ … */`` optimizer hints,
-    which the engine itself emits (BROADCAST on the VECTOR_SEARCH probe
-    and BQML join sides) and users may write. Run once at transpile
-    entry (round-11 review wave): every downstream rewrite interpolates
-    argument text into generated SQL, and a comment inside an argument
-    would swallow whatever the rewrite appends on the same line — one
-    blanking pass makes the whole class unrepresentable instead of
-    guarding hundreds of sites."""
-    if "--" not in sql and "#" not in sql and "/*" not in sql:
-        return sql
-    out = list(sql)
-    i, n = 0, len(sql)
-    while i < n:
-        if sql.startswith("/*+", i):
-            end = sql.find("*/", i + 3)
-            i = n if end == -1 else end + 2
-            continue
-        j = _skip_comment(sql, i)
-        if j > i:
-            for k in range(i, j):
-                if out[k] != "\n":
-                    out[k] = " "
-            i = j
-            continue
-        if sql[i] in ("'", '"', "`"):
-            i = _skip_string(sql, i)
-            continue
-        i += 1
-    return "".join(out)
+    return "".join(map("".join, starmap(fn, segments(sql))))
 
 
 def _rewrite_triple_quoted_strings(sql: str) -> str:
@@ -1417,19 +1178,16 @@ def _rewrite_triple_quoted_strings(sql: str) -> str:
                 code,
                 "'" + body.replace("\\", "\\\\").replace("'", "\\'") + "'",
             )
-        out = []
-        i, n = 0, len(body)
-        while i < n:
-            ch = body[i]
-            if ch == "\\" and i + 1 < n:
-                out.append(body[i : i + 2])
-                i += 2
-                continue
-            out.append("\\'" if ch == "'" else ch)
-            i += 1
-        return code, "'" + "".join(out) + "'"
+        # escapes copy through; only a bare quote needs escaping
+        body = re.sub(
+            r"\\.|'",
+            lambda m: "\\'" if m.group() == "'" else m.group(),
+            body,
+            flags=re.S,
+        )
+        return code, "'" + body + "'"
 
-    return _map_code_literal_pairs(sql, fn)
+    return "".join(map("".join, starmap(fn, segments(sql))))
 
 
 def _rewrite_string_agg(sql: str) -> str:
@@ -1440,7 +1198,7 @@ def _rewrite_string_agg(sql: str) -> str:
     (ref: controller/ml_model/bigquery.py:95-103)."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, _fn in _iter_calls(sql, ("STRING_AGG",)):
+    for start, open_idx, end, _fn in iter_calls(sql, ("STRING_AGG",)):
         inner = sql[open_idx + 1 : end - 1].strip()
         distinct = bool(re.match(r"DISTINCT\b", inner, re.IGNORECASE))
         if distinct:
@@ -1448,13 +1206,13 @@ def _rewrite_string_agg(sql: str) -> str:
         # trailing top-level LIMIT n -> slice after the sort
         limit = None
         m_lim = re.search(r"\bLIMIT\s+(\d+)\s*$", inner, re.IGNORECASE)
-        if m_lim and _balanced_end("(" + inner[: m_lim.start()] + ")", 0) != -1:
+        if m_lim and balanced_end("(" + inner[: m_lim.start()] + ")", 0) != -1:
             inner, limit = inner[: m_lim.start()].rstrip(), int(m_lim.group(1))
         # top-level ORDER BY o [ASC|DESC] -> real sort (struct-sort for
         # non-DISTINCT arbitrary keys, array_sort for DISTINCT/self)
         order_expr = direction = None
         m_ord = re.search(r"\bORDER\s+BY\b", inner, re.IGNORECASE)
-        if m_ord and _balanced_end("(" + inner[: m_ord.start()] + ")", 0) == -1:
+        if m_ord and balanced_end("(" + inner[: m_ord.start()] + ")", 0) == -1:
             m_ord = None  # ORDER BY sits inside parens — leave it
         if m_ord:
             tail = inner[m_ord.end() :].strip()
@@ -1464,7 +1222,7 @@ def _rewrite_string_agg(sql: str) -> str:
                 direction = m_dir.group(1).upper()
                 tail = tail[: m_dir.start()].strip()
             order_expr = tail
-        parts = _split_top_level(inner)
+        parts = split_top_level(inner)
         expr = parts[0].strip()
         sep = parts[1].strip() if len(parts) > 1 else "','"
         arr = f"collect_set({expr})" if distinct else f"collect_list({expr})"
@@ -1559,7 +1317,7 @@ def _rewrite_misc_fns(sql: str) -> str:
     folds), and APPROX_TOP_COUNT/SUM (exact top-k pair algebra)."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, fn in _iter_calls(
+    for start, open_idx, end, fn in iter_calls(
         sql,
         (
             r"NET\.HOST",
@@ -1630,7 +1388,7 @@ def _rewrite_misc_fns(sql: str) -> str:
     ):
         args = [
             _rewrite_misc_fns(a.strip())
-            for a in _split_top_level(sql[open_idx + 1 : end - 1])
+            for a in split_top_level(sql[open_idx + 1 : end - 1])
         ]
         fn = fn.replace(" ", "")
         rep = None
@@ -2098,7 +1856,7 @@ def _rewrite_misc_fns(sql: str) -> str:
                     "ML.FEATURE_CROSS takes STRUCT(col [AS name], ...)"
                 )
             fields = []
-            for f_raw in _split_top_level(m_st.group(1)):
+            for f_raw in split_top_level(m_st.group(1)):
                 f_raw = f_raw.strip()
                 m_as = re.match(
                     r"(.+?)\s+AS\s+(\w+)\s*$", f_raw, re.IGNORECASE | re.DOTALL
@@ -2314,7 +2072,7 @@ def _rewrite_ignore_nulls(sql: str) -> str:
     argument list. Hoist it out for the navigation functions."""
     while True:
         hit = None
-        for start, open_idx, end, fn in _iter_calls(
+        for start, open_idx, end, fn in iter_calls(
             sql,
             (
                 "FIRST_VALUE",
@@ -2347,17 +2105,17 @@ def _rewrite_percentile_window(sql: str) -> str:
     BY, so appending ORDER BY x is safe)."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, fn in _iter_calls(
+    for start, open_idx, end, fn in iter_calls(
         sql, ("PERCENTILE_CONT", "PERCENTILE_DISC")
     ):
-        args = [a.strip() for a in _split_top_level(sql[open_idx + 1 : end - 1])]
+        args = [a.strip() for a in split_top_level(sql[open_idx + 1 : end - 1])]
         if len(args) != 2:
             continue
         m = re.match(r"\s*OVER\s*\(", sql[end:], re.IGNORECASE)
         if not m:
             continue
         over_open = end + m.end() - 1
-        over_end = _balanced_end(sql, over_open)
+        over_end = balanced_end(sql, over_open)
         if over_end < 0:
             continue
         spec = sql[over_open + 1 : over_end - 1].strip()  # inside parens
@@ -2434,7 +2192,7 @@ def _rewrite_ml_scalers(sql: str) -> str:
         r"\s*CREATE\s+(?:OR\s+REPLACE\s+)?MODEL\b", sql, re.IGNORECASE
     )
     enc_calls = list(
-        _iter_calls(sql, tuple(re.escape(b) for b in _ML_PREP_REJECT))
+        iter_calls(sql, tuple(re.escape(b) for b in _ML_PREP_REJECT))
     )
     if enc_calls and not in_create_model:
         bad = enc_calls[0][3]
@@ -2454,7 +2212,7 @@ def _rewrite_ml_scalers(sql: str) -> str:
             sql = sql[:end] + sql[end + m_over.end():]
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, fn in _iter_calls(
+    for start, open_idx, end, fn in iter_calls(
         sql,
         (
             r"ML\.STANDARD_SCALER", r"ML\.MIN_MAX_SCALER",
@@ -2464,7 +2222,7 @@ def _rewrite_ml_scalers(sql: str) -> str:
         ),
     ):
         args = [
-            a.strip() for a in _split_top_level(sql[open_idx + 1 : end - 1])
+            a.strip() for a in split_top_level(sql[open_idx + 1 : end - 1])
         ]
         x = args[0] if args else ""
         short = fn.split(".")[-1]
@@ -2525,7 +2283,7 @@ def _rewrite_ml_scalers(sql: str) -> str:
         if not m:
             continue
         over_open = end + m.end() - 1
-        over_end = _balanced_end(sql, over_open)
+        over_end = balanced_end(sql, over_open)
         if over_end < 0:
             continue
         spec = sql[over_open : over_end]  # includes parens
@@ -2592,82 +2350,11 @@ def _rewrite_ml_scalers(sql: str) -> str:
     return "".join(out)
 
 
-def _map_code_literal_pairs(sql: str, fn) -> str:
-    """Walk the quote structure once and let ``fn(code_seg, literal)``
-    -> ``(code', literal')`` transform each code segment together with
-    the string literal that follows it (literal includes its quotes;
-    the final trailing code segment gets literal ``""``). The shared
-    scanner for every rewrite whose pattern SPANS a code region and the
-    adjacent literal (raw-string prefix, JSON / RANGE typed literals) —
-    one place to get escape/backtick handling right instead of three
-    hand-rolled copies. COMMENT-aware (round 11, the same class as the
-    round-10 ``_sub_outside_strings`` fix): an apostrophe inside a
-    comment must not open a bogus literal and misalign every quote
-    after it — comment text stays part of the code segment."""
-    out: list[str] = []
-    seg_start = 0
-    i, n = 0, len(sql)
-    while i < n:
-        cm_end = _skip_comment(sql, i)
-        if cm_end > i:
-            i = cm_end
-            continue
-        if sql[i] in ("'", '"', "`"):
-            lit_end = _skip_string(sql, i)
-            code, lit = fn(sql[seg_start:i], sql[i:lit_end])
-            out.append(code)
-            out.append(lit)
-            i = seg_start = lit_end
-            continue
-        i += 1
-    code, _ = fn(sql[seg_start:], "")
-    out.append(code)
-    return "".join(out)
-
-
-def _sub_outside_strings(
-    sql: str,
-    sub: Callable[[str], str],
-    code_backticks: bool = False,
-) -> str:
-    """Apply ``sub`` to the segments of ``sql`` outside quoted strings/
-    backticks, leaving literal contents untouched. COMMENT-aware
-    (round 10): an apostrophe inside a ``--``/``/* */`` comment must
-    not open a bogus literal that swallows the rest of the statement —
-    comments stay part of the surrounding code segment (rewrites inside
-    them are inert). ``code_backticks=True`` keeps backtick-quoted
-    identifiers in the code segments too (for rewrites that TARGET
-    backticked names, e.g. the table-name resolver)."""
-    out: list[str] = []
-    seg_start = 0
-    i, n = 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c in ("'", '"') or (c == "`" and not code_backticks):
-            out.append(sub(sql[seg_start:i]))
-            lit_end = _skip_string(sql, i)
-            out.append(sql[i:lit_end])
-            i = seg_start = lit_end
-            continue
-        if c == "`":
-            # code_backticks: stay in CODE but skip the identifier body
-            # so a quote character inside it cannot open a literal
-            i = _skip_string(sql, i)
-            continue
-        cm_end = _skip_comment(sql, i)
-        if cm_end > i:
-            i = cm_end
-            continue
-        i += 1
-    out.append(sub(sql[seg_start:]))
-    return "".join(out)
-
-
 def _strip_json_typed_literals(sql: str) -> str:
     """``JSON '...'`` typed literal -> its bare string literal. The
     pattern spans a code region (the JSON keyword) and the following
     string region, so this walks the quote structure itself instead of
-    going through ``_sub_outside_strings``: the keyword is stripped only
+    going through ``sub_code``: the keyword is stripped only
     when it sits in CODE immediately before an opening quote — a string
     literal whose *content* contains ``JSON '...'``-shaped text is
     untouched."""
@@ -2677,19 +2364,28 @@ def _strip_json_typed_literals(sql: str) -> str:
             code = re.sub(r"\bJSON\s+$", "", code, flags=re.IGNORECASE)
         return code, lit
 
-    return _map_code_literal_pairs(sql, fn)
+    return "".join(map("".join, starmap(fn, segments(sql))))
+
+
+_FN_RENAME_MAP = dict(_FN_RENAMES)
+#: one alternation over every renamed name (no Spark twin spells a
+#: BigQuery name, so one pass equals renaming name by name)
+_FN_RENAME_RE = re.compile(
+    r"\b(" + "|".join(_FN_RENAME_MAP) + r")\s*\(", re.IGNORECASE
+)
 
 
 def _rewrite_fn_renames(sql: str) -> str:
     def sub(seg: str) -> str:
-        for bq, spark_fn in _FN_RENAMES:
-            seg = re.sub(rf"\b{bq}\s*\(", f"{spark_fn}(", seg, flags=re.IGNORECASE)
+        seg = _FN_RENAME_RE.sub(
+            lambda m: _FN_RENAME_MAP[m.group(1).upper()] + "(", seg
+        )
         return re.sub(
             r"\bCURRENT_DATETIME\s*\(\s*\)", "current_timestamp()", seg,
             flags=re.IGNORECASE,
         )
 
-    return _sub_outside_strings(sql, sub)
+    return sub_code(sql, sub)
 
 
 _DIFF_PARTS = {
@@ -2754,10 +2450,10 @@ def _rewrite_datetime_diff(sql: str) -> str:
     whole-interval meaning would silently undercount by up to one."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, fn in _iter_calls(
+    for start, open_idx, end, fn in iter_calls(
         sql, ("DATE_DIFF", "DATETIME_DIFF", "TIMESTAMP_DIFF")
     ):
-        args = _split_top_level(sql[open_idx + 1 : end - 1])
+        args = split_top_level(sql[open_idx + 1 : end - 1])
         if len(args) != 3:
             continue
         part = re.sub(r"\s+", "", args[2].strip().upper())
@@ -2797,10 +2493,10 @@ def _rewrite_datetime_trunc(sql: str) -> str:
     'WEEK' directly."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, fn in _iter_calls(
+    for start, open_idx, end, fn in iter_calls(
         sql, ("DATE_TRUNC", "DATETIME_TRUNC", "TIMESTAMP_TRUNC")
     ):
-        args = _split_top_level(sql[open_idx + 1 : end - 1])
+        args = split_top_level(sql[open_idx + 1 : end - 1])
         if len(args) != 2 or not re.fullmatch(
             r"\s*\w+\s*(\(\s*\w+\s*\))?\s*", args[1]
         ):
@@ -2841,7 +2537,7 @@ def _rewrite_parse_datetime(sql: str) -> str:
     -> SimpleDateFormat table from FORMAT_DATE."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, fn in _iter_calls(
+    for start, open_idx, end, fn in iter_calls(
         sql,
         (
             r"SAFE\.PARSE_DATE",
@@ -2852,7 +2548,7 @@ def _rewrite_parse_datetime(sql: str) -> str:
             "PARSE_DATETIME",
         ),
     ):
-        args = _split_top_level(sql[open_idx + 1 : end - 1])
+        args = split_top_level(sql[open_idx + 1 : end - 1])
         if len(args) != 2:
             continue
         fmt_raw = args[0].strip()
@@ -2888,13 +2584,13 @@ def _rewrite_arith_fns(sql: str) -> str:
     (1-arg LOG is ln in both dialects and passes through)."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, fn in _iter_calls(
+    for start, open_idx, end, fn in iter_calls(
         sql, ("DIV", "IEEE_DIVIDE", "UNIX_DATE", "DATE_FROM_UNIX_DATE", "LOG")
     ):
         # recurse into the argument list first so nested spellings
         # (LOG(LOG(256, 2), 2), DIV(DIV(8, 2), 2)) are rewritten too
         inner = _rewrite_arith_fns(sql[open_idx + 1 : end - 1])
-        args = [a.strip() for a in _split_top_level(inner)]
+        args = [a.strip() for a in split_top_level(inner)]
         if fn == "div" and len(args) == 2:
             repl = f"({args[0]} DIV {args[1]})"
         elif fn == "log" and len(args) == 2:
@@ -2954,10 +2650,10 @@ def _rewrite_regexp_extract(sql: str) -> str:
     one documented divergence.) Non-literal patterns get group 0."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, fn in _iter_calls(
+    for start, open_idx, end, fn in iter_calls(
         sql, ("REGEXP_EXTRACT_ALL", "REGEXP_EXTRACT", "REGEXP_SUBSTR")
     ):
-        args = [a.strip() for a in _split_top_level(sql[open_idx + 1 : end - 1])]
+        args = [a.strip() for a in split_top_level(sql[open_idx + 1 : end - 1])]
         if len(args) != 2:
             continue
         pat = args[1]
@@ -3066,9 +2762,9 @@ def _rewrite_initcap(sql: str) -> str:
     mean BigQuery's delimiters."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, _fn in _iter_calls(sql, ("INITCAP",)):
+    for start, open_idx, end, _fn in iter_calls(sql, ("INITCAP",)):
         args = [
-            a.strip() for a in _split_top_level(sql[open_idx + 1 : end - 1])
+            a.strip() for a in split_top_level(sql[open_idx + 1 : end - 1])
         ]
         if len(args) not in (1, 2):
             continue
@@ -3119,9 +2815,9 @@ def _rewrite_regexp_instr(sql: str) -> str:
     divergence)."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, _fn in _iter_calls(sql, ("REGEXP_INSTR",)):
+    for start, open_idx, end, _fn in iter_calls(sql, ("REGEXP_INSTR",)):
         args = [
-            a.strip() for a in _split_top_level(sql[open_idx + 1 : end - 1])
+            a.strip() for a in split_top_level(sql[open_idx + 1 : end - 1])
         ]
         if len(args) <= 2:
             continue  # 2-arg shape matches Spark's exactly
@@ -3185,8 +2881,8 @@ def _rewrite_regexp_replace(sql: str) -> str:
     doubled backslashes by _rewrite_raw_strings.)"""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, _fn in _iter_calls(sql, ("REGEXP_REPLACE",)):
-        args = [a.strip() for a in _split_top_level(sql[open_idx + 1 : end - 1])]
+    for start, open_idx, end, _fn in iter_calls(sql, ("REGEXP_REPLACE",)):
+        args = [a.strip() for a in split_top_level(sql[open_idx + 1 : end - 1])]
         if len(args) != 3:
             continue
         rep = args[2]
@@ -3207,9 +2903,9 @@ def _rewrite_least_greatest(sql: str) -> str:
     NULL; Spark's skip NULLs. Guard with an any-null CASE."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, fn in _iter_calls(sql, ("LEAST", "GREATEST")):
+    for start, open_idx, end, fn in iter_calls(sql, ("LEAST", "GREATEST")):
         inner = _rewrite_least_greatest(sql[open_idx + 1 : end - 1])
-        args = [a.strip() for a in _split_top_level(inner)]
+        args = [a.strip() for a in split_top_level(inner)]
         if len(args) < 2:
             continue
         null_checks = " OR ".join(f"({a}) IS NULL" for a in args)
@@ -3230,10 +2926,10 @@ def _rewrite_to_hex(sql: str) -> str:
     ``lower(hex(b))`` (Spark hex() is uppercase, BigQuery lowercase)."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, _fn in _iter_calls(sql, ("TO_HEX",)):
+    for start, open_idx, end, _fn in iter_calls(sql, ("TO_HEX",)):
         inner = sql[open_idx + 1 : end - 1].strip()
         m = re.match(r"(MD5|SHA1|SHA256|SHA512)\s*\(", inner, re.IGNORECASE)
-        if m and _balanced_end(inner, m.end() - 1) == len(inner):
+        if m and balanced_end(inner, m.end() - 1) == len(inner):
             arg = inner[m.end() : len(inner) - 1]
             digest = m.group(1).upper()
             if digest == "MD5":
@@ -3266,19 +2962,19 @@ def _rewrite_array_agg(sql: str) -> str:
     don't exist in practice)."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, _fn in _iter_calls(sql, ("ARRAY_AGG",)):
+    for start, open_idx, end, _fn in iter_calls(sql, ("ARRAY_AGG",)):
         inner = _rewrite_array_agg(sql[open_idx + 1 : end - 1].strip())
         m = _ARRAY_AGG_TAIL_RE.match(inner)
         distinct = bool(m.group("distinct"))
         body = m.group("body")
         limit = None
         m_lim = re.search(r"\bLIMIT\s+(\d+)\s*$", body, re.IGNORECASE)
-        if m_lim and _find_top_level(
+        if m_lim and find_top_level(
             body, re.compile(r"\bLIMIT\b", re.IGNORECASE), m_lim.start()
         ):
             body, limit = body[: m_lim.start()].rstrip(), int(m_lim.group(1))
         order_expr = direction = None
-        m_ord = _find_top_level(body, re.compile(r"\bORDER\s+BY\b", re.IGNORECASE))
+        m_ord = find_top_level(body, re.compile(r"\bORDER\s+BY\b", re.IGNORECASE))
         if m_ord:
             tail = body[m_ord.end() :].strip()
             body = body[: m_ord.start()].rstrip()
@@ -3321,8 +3017,8 @@ def _rewrite_split(sql: str) -> str:
     caller made them so)."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, _fn in _iter_calls(sql, ("SPLIT",)):
-        args = [a.strip() for a in _split_top_level(sql[open_idx + 1 : end - 1])]
+    for start, open_idx, end, _fn in iter_calls(sql, ("SPLIT",)):
+        args = [a.strip() for a in split_top_level(sql[open_idx + 1 : end - 1])]
         if len(args) == 1:
             repl = f"split({args[0]}, ',')"
         elif len(args) == 2 and args[1][:1] in "'\"" and args[1][-1:] == args[1][:1]:
@@ -3373,7 +3069,7 @@ def _rewrite_hll_family(sql: str, approx: bool = False) -> str:
     paths agree within HLL error bounds)."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, fn in _iter_calls(
+    for start, open_idx, end, fn in iter_calls(
         sql,
         (
             r"HLL_COUNT\.INIT",
@@ -3385,7 +3081,7 @@ def _rewrite_hll_family(sql: str, approx: bool = False) -> str:
     ):
         args = [
             _rewrite_hll_family(a.strip(), approx)
-            for a in _split_top_level(sql[open_idx + 1 : end - 1])
+            for a in split_top_level(sql[open_idx + 1 : end - 1])
         ]
         fn = fn.replace(" ", "")
         rep = None
@@ -3463,7 +3159,7 @@ def _rewrite_kll_family(sql: str, approx: bool = False) -> str:
     to the _double twins."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, fn in _iter_calls(
+    for start, open_idx, end, fn in iter_calls(
         sql,
         (
             r"KLL_QUANTILES\.INIT_INT64",
@@ -3481,7 +3177,7 @@ def _rewrite_kll_family(sql: str, approx: bool = False) -> str:
     ):
         args = [
             _rewrite_kll_family(a.strip(), approx)
-            for a in _split_top_level(sql[open_idx + 1 : end - 1])
+            for a in split_top_level(sql[open_idx + 1 : end - 1])
         ]
         fn = fn.replace(" ", "")
         suffix = "double" if fn.endswith("float64") else "bigint"
@@ -3579,8 +3275,8 @@ def _rewrite_approx_quantiles(sql: str) -> str:
     array(0, 1/n, ..., 1))`` — same n+1-point quantile vector shape."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, _fn in _iter_calls(sql, ("APPROX_QUANTILES",)):
-        args = [a.strip() for a in _split_top_level(sql[open_idx + 1 : end - 1])]
+    for start, open_idx, end, _fn in iter_calls(sql, ("APPROX_QUANTILES",)):
+        args = [a.strip() for a in split_top_level(sql[open_idx + 1 : end - 1])]
         if len(args) != 2 or not args[1].isdigit():
             continue
         n = int(args[1])
@@ -3602,7 +3298,7 @@ def _rewrite_farm_fingerprint(sql: str) -> str:
     contain calls."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, _fn in _iter_calls(sql, ("FARM_FINGERPRINT",)):
+    for start, open_idx, end, _fn in iter_calls(sql, ("FARM_FINGERPRINT",)):
         arg = sql[open_idx + 1 : end - 1].strip()
         out.append(sql[pos:start])
         out.append(
@@ -3611,27 +3307,6 @@ def _rewrite_farm_fingerprint(sql: str) -> str:
         pos = end
     out.append(sql[pos:])
     return "".join(out)
-
-
-def _find_top_level(s: str, pat: re.Pattern, start: int = 0) -> re.Match | None:
-    """First match of ``pat`` at paren-depth 0 (string aware)."""
-    depth = 0
-    i, n = start, len(s)
-    while i < n:
-        ch = s[i]
-        if ch in ("'", '"', "`"):
-            i = _skip_string(s, i)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            m = pat.match(s, i)
-            if m:
-                return m
-        i += 1
-    return None
 
 
 _SELECT_OPEN_RE = re.compile(r"^\(\s*SELECT\s+", re.IGNORECASE)
@@ -3657,7 +3332,7 @@ def _rewrite_elem_refs(expr: str, alias: str | None, var: str) -> str:
     ``key``/``value`` for the unnested element while outer columns stay
     ``e.``-qualified)."""
     if alias:
-        expr = _sub_outside_strings(
+        expr = sub_code(
             expr,
             lambda seg: re.sub(
                 rf"\b{re.escape(alias)}\s*\.", f"{var}.", seg
@@ -3667,13 +3342,13 @@ def _rewrite_elem_refs(expr: str, alias: str | None, var: str) -> str:
         # UNNEST(arr) AS u) — substitute it too, skipping function
         # calls named like the alias; string-literal contents stay
         # untouched (a literal 'u' is data, not a reference)
-        expr = _sub_outside_strings(
+        expr = sub_code(
             expr,
             lambda seg: re.sub(
                 rf"(?<![\w.$]){re.escape(alias)}\b(?!\s*[.(])", var, seg
             ),
         )
-    expr = _sub_outside_strings(
+    expr = sub_code(
         expr,
         lambda seg: re.sub(r"(?<![\w.$])(key|value)\b", rf"{var}.\1", seg),
     )
@@ -3696,95 +3371,89 @@ def _rewrite_correlated_unnest(sql: str) -> str:
     over the subquery rely on (ref: model_bqml.sql:220-253)."""
     out: list[str] = []
     pos = 0
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in ("'", '"', "`"):
-            i = _skip_string(sql, i)
+    masked = mask(sql)
+    i = 0
+    while (i := masked.find("(", i)) >= 0:
+        # relational positions are NOT scalar subqueries: a CTE
+        # definition (WITH v AS (...)) or a derived table
+        # (FROM (...) / JOIN (...)) must keep its SELECT intact.
+        # The lookbehind window is bounded (keyword + one preceding
+        # char + whitespace) so the pass stays O(n); a cut mid-
+        # identifier can only SKIP a rewrite, never corrupt one
+        if re.search(
+            r"\b(AS|FROM|JOIN)\s*$",
+            sql[max(pos, i - 8) : i],
+            re.IGNORECASE,
+        ):
+            i += 1
             continue
-        if ch == "(":
-            # relational positions are NOT scalar subqueries: a CTE
-            # definition (WITH v AS (...)) or a derived table
-            # (FROM (...) / JOIN (...)) must keep its SELECT intact.
-            # The lookbehind window is bounded (keyword + one preceding
-            # char + whitespace) so the pass stays O(n); a cut mid-
-            # identifier can only SKIP a rewrite, never corrupt one
-            if re.search(
-                r"\b(AS|FROM|JOIN)\s*$",
-                sql[max(pos, i - 8) : i],
-                re.IGNORECASE,
-            ):
-                i += 1
-                continue
-            end = _balanced_end(sql, i)
-            if end > 0:
-                sub = sql[i:end]
-                m_sel = _SELECT_OPEN_RE.match(sub)
-                # the subquery's own top-level FROM (depth 1 inside the
-                # wrapping paren == depth 0 of the body) must be an
-                # UNNEST — a non-greedy regex would cross nested parens
-                body = sub[1:-1]
-                m_from = (
-                    _find_top_level(body, _FROM_RE, m_sel.end() - 1)
-                    if m_sel
-                    else None
-                )
-                m = (
-                    _FROM_UNNEST_RE.match(body, m_from.start())
-                    if m_from is not None
-                    else None
-                )
-                if m:
-                    sel_text = body[m_sel.end() - 1 : m_from.start()].strip()
-                    arr_open = m.end()  # index in body of char after '('
-                    arr_end = _balanced_end(body, arr_open - 1)
-                    arr = body[arr_open:arr_end - 1].strip()
-                    rest = body[arr_end:].strip()
-                    alias = None
-                    m_alias = re.match(r"^(?:AS\s+)?(\w+)", rest, re.IGNORECASE)
-                    if m_alias and m_alias.group(1).upper() not in ("WHERE",):
-                        alias = m_alias.group(1)
-                        rest = rest[m_alias.end() :].strip()
-                    cond = None
-                    m_where = re.match(r"^WHERE\b", rest, re.IGNORECASE)
-                    if m_where:
-                        cond = rest[m_where.end() :].strip()
-                    elif rest:
-                        # GROUP BY / JOIN / ... — not the scalar shape;
-                        # leave for the lateral rewrite
-                        out.append(sql[pos:end])
-                        pos = end
-                        i = end
-                        continue
-                    sel = _rewrite_correlated_unnest(sel_text)
-                    # derived per site (round 11): the fixed `__u` was
-                    # shadowable by a same-named outer column exactly
-                    # like the SEARCH/NGRAMS params were
-                    var, v_nn, v_acc, v_x = _fresh_lambda_params(
-                        [arr, sel, cond or ""],
-                        "__u", "__nn", "__acc", "__x",
-                    )
-                    sel_r = _rewrite_elem_refs(sel, alias, var)
-                    farr = arr
-                    if cond:
-                        cond_r = _rewrite_elem_refs(
-                            _rewrite_correlated_unnest(cond), alias, var
-                        )
-                        farr = f"filter({arr}, {var} -> {cond_r})"
-                    repl = _compile_unnest_scalar_agg(
-                        sel_r, farr, var, v_nn, v_acc, v_x
-                    )
-                    if repl is None:
-                        repl = (
-                            f"get(transform({farr},"
-                            f" {var} -> {sel_r}), 0)"
-                        )
-                    out.append(sql[pos:i])
-                    out.append(repl)
+        end = balanced_end(sql, i)
+        if end > 0:
+            sub = sql[i:end]
+            m_sel = _SELECT_OPEN_RE.match(sub)
+            # the subquery's own top-level FROM (depth 1 inside the
+            # wrapping paren == depth 0 of the body) must be an
+            # UNNEST — a non-greedy regex would cross nested parens
+            body = sub[1:-1]
+            m_from = (
+                find_top_level(body, _FROM_RE, m_sel.end() - 1)
+                if m_sel
+                else None
+            )
+            m = (
+                _FROM_UNNEST_RE.match(body, m_from.start())
+                if m_from is not None
+                else None
+            )
+            if m:
+                sel_text = body[m_sel.end() - 1 : m_from.start()].strip()
+                arr_open = m.end()  # index in body of char after '('
+                arr_end = balanced_end(body, arr_open - 1)
+                arr = body[arr_open:arr_end - 1].strip()
+                rest = body[arr_end:].strip()
+                alias = None
+                m_alias = re.match(r"^(?:AS\s+)?(\w+)", rest, re.IGNORECASE)
+                if m_alias and m_alias.group(1).upper() not in ("WHERE",):
+                    alias = m_alias.group(1)
+                    rest = rest[m_alias.end() :].strip()
+                cond = None
+                m_where = re.match(r"^WHERE\b", rest, re.IGNORECASE)
+                if m_where:
+                    cond = rest[m_where.end() :].strip()
+                elif rest:
+                    # GROUP BY / JOIN / ... — not the scalar shape;
+                    # leave for the lateral rewrite
+                    out.append(sql[pos:end])
                     pos = end
                     i = end
                     continue
-                i += 1
+                sel = _rewrite_correlated_unnest(sel_text)
+                # derived per site (round 11): the fixed `__u` was
+                # shadowable by a same-named outer column exactly
+                # like the SEARCH/NGRAMS params were
+                var, v_nn, v_acc, v_x = _fresh_lambda_params(
+                    [arr, sel, cond or ""],
+                    "__u", "__nn", "__acc", "__x",
+                )
+                sel_r = _rewrite_elem_refs(sel, alias, var)
+                farr = arr
+                if cond:
+                    cond_r = _rewrite_elem_refs(
+                        _rewrite_correlated_unnest(cond), alias, var
+                    )
+                    farr = f"filter({arr}, {var} -> {cond_r})"
+                repl = _compile_unnest_scalar_agg(
+                    sel_r, farr, var, v_nn, v_acc, v_x
+                )
+                if repl is None:
+                    repl = (
+                        f"get(transform({farr},"
+                        f" {var} -> {sel_r}), 0)"
+                    )
+                out.append(sql[pos:i])
+                out.append(repl)
+                pos = end
+                i = end
                 continue
         i += 1
     out.append(sql[pos:])
@@ -3812,7 +3481,7 @@ def _compile_unnest_scalar_agg(
         sel_r,
         re.IGNORECASE,
     )
-    if not m or _balanced_end(sel_r, m.end() - 1) != len(sel_r.rstrip()):
+    if not m or balanced_end(sel_r, m.end() - 1) != len(sel_r.rstrip()):
         return None
     fn = m.group(1).upper()
     inner = sel_r[m.end(): sel_r.rstrip().rfind(")")].strip()
@@ -3863,23 +3532,15 @@ def _enclosing_paren_span(sql: str, idx: int) -> tuple[int, int]:
     """Interior span (start, end) of the innermost ``(...)`` containing
     ``idx`` (string aware); the whole string if none."""
     stack: list[int] = []
-    best: tuple[int, int] | None = None
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in ("'", '"', "`"):
-            i = _skip_string(sql, i)
-            continue
-        if ch == "(":
-            stack.append(i)
-        elif ch == ")":
-            if stack:
-                start = stack.pop()
-                if start < idx < i:
-                    best = (start + 1, i)
-                    break  # innermost: first close after idx whose open precedes it
-        i += 1
-    return best if best else (0, n)
+    for m in re.finditer(r"[()]", mask(sql)):
+        if m.group() == "(":
+            stack.append(m.start())
+        elif stack:
+            start = stack.pop()
+            if start < idx < m.start():
+                # innermost: first close after idx whose open precedes it
+                return start + 1, m.start()
+    return 0, len(sql)
 
 
 def _rewrite_lateral_unnest(sql: str) -> str:
@@ -3897,22 +3558,9 @@ def _rewrite_lateral_unnest(sql: str) -> str:
     (Bare un-dotted struct references to the alias are not rewritten —
     the reference's SQL always qualifies element field access.)"""
     pat = re.compile(r",\s*UNNEST\s*\(", re.IGNORECASE)
-    while True:
-        m = None
-        i, n = 0, len(sql)
-        while i < n:
-            ch = sql[i]
-            if ch in ("'", '"', "`"):
-                i = _skip_string(sql, i)
-                continue
-            m = pat.match(sql, i)
-            if m:
-                break
-            i += 1
-        if not m:
-            return sql
+    while m := pat.search(mask(sql)):
         arr_open = m.end() - 1
-        arr_end = _balanced_end(sql, arr_open)
+        arr_end = balanced_end(sql, arr_open)
         if arr_end <= 0:
             return sql
         arr = sql[arr_open + 1 : arr_end - 1].strip()
@@ -3943,23 +3591,9 @@ def _rewrite_lateral_unnest(sql: str) -> str:
             fresh = alias
         scope_start, scope_end = _enclosing_paren_span(sql, clause_start)
         ref_pat = re.compile(rf"(?<![\w.`]){re.escape(alias)}\s*\.")
+
         def rename(chunk: str) -> str:
-            out: list[str] = []
-            pos = j = 0
-            while j < len(chunk):
-                c = chunk[j]
-                if c in ("'", '"', "`"):
-                    j = _skip_string(chunk, j)
-                    continue
-                mm = ref_pat.match(chunk, j)
-                if mm and (j == 0 or not re.match(r"[\w.`]", chunk[j - 1])):
-                    out.append(chunk[pos:j])
-                    out.append(f"{fresh}.")
-                    pos = j = mm.end()
-                    continue
-                j += 1
-            out.append(chunk[pos:])
-            return "".join(out)
+            return sub_code(chunk, lambda seg: ref_pat.sub(f"{fresh}.", seg))
 
         before = sql[:scope_start]
         scope_pre = rename(sql[scope_start:clause_start])
@@ -3972,6 +3606,7 @@ def _rewrite_lateral_unnest(sql: str) -> str:
         scope_post = rename(sql[clause_end:scope_end])
         after = sql[scope_end:]
         sql = before + scope_pre + replacement + scope_post + after
+    return sql
 
 
 def _rewrite_from_unnest(sql: str) -> str:
@@ -3981,18 +3616,12 @@ def _rewrite_from_unnest(sql: str) -> str:
     out: list[str] = []
     pos = 0
     pat = re.compile(r"\bFROM\s+UNNEST\s*\(", re.IGNORECASE)
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in ("'", '"', "`"):
-            i = _skip_string(sql, i)
-            continue
-        m = pat.match(sql, i)
-        if not m:
-            i += 1
-            continue
+    masked = mask(sql)
+    i = 0
+    while m := pat.search(masked, i):
+        i = m.start()
         arr_open = m.end() - 1
-        arr_end = _balanced_end(sql, arr_open)
+        arr_end = balanced_end(sql, arr_open)
         if arr_end <= 0:
             i += 1
             continue
@@ -4028,6 +3657,9 @@ def _rewrite_from_unnest(sql: str) -> str:
     return "".join(out)
 
 
+_FROM_WORD_RE = re.compile(r"(?<![\w$])FROM(?![\w$])", re.IGNORECASE)
+
+
 def _rewrite_array_subquery(sql: str) -> str:
     """``ARRAY(SELECT expr FROM ...)`` -> scalar subquery collecting the
     column: ``(SELECT collect_list(expr) FROM ...)``; the DISTINCT form
@@ -4037,19 +3669,13 @@ def _rewrite_array_subquery(sql: str) -> str:
     analyzer error beats a silently unordered array)."""
     out: list[str] = []
     pos = 0
-    i, n = 0, len(sql)
     pat = re.compile(r"\bARRAY\s*\(\s*SELECT\b", re.IGNORECASE)
-    while i < n:
-        ch = sql[i]
-        if ch in ("'", '"', "`"):
-            i = _skip_string(sql, i)
-            continue
-        m = pat.match(sql, i)
-        if not m:
-            i += 1
-            continue
+    masked = mask(sql)
+    i = 0
+    while m := pat.search(masked, i):
+        i = m.start()
         open_idx = sql.index("(", m.start())
-        end = _balanced_end(sql, open_idx)
+        end = balanced_end(sql, open_idx)
         if end <= 0:
             i += 1
             continue
@@ -4066,29 +3692,11 @@ def _rewrite_array_subquery(sql: str) -> str:
             wrap_struct = m_struct.group(1).upper() == "STRUCT"
             body = body[m_struct.end():]
         # select list = text up to the first top-level FROM
-        m_from = None
-        j = 0
-        while j < len(body):
-            c = body[j]
-            if c in ("'", '"', "`"):
-                j = _skip_string(body, j)
-                continue
-            if c == "(":
-                j = _balanced_end(body, j)
-                if j <= 0:
-                    break
-                continue
-            if (
-                body[j : j + 4].upper() == "FROM"
-                and (j == 0 or not re.match(r"[\w$]", body[j - 1]))
-                and (j + 4 >= len(body) or not re.match(r"[\w$]", body[j + 4]))
-            ):
-                m_from = j
-                break
-            j += 1
+        m_from = find_top_level(body, _FROM_WORD_RE)
         if m_from is None:
             i = end
             continue
+        m_from = m_from.start()
         expr = body[:m_from].strip()
         if wrap_struct:
             expr = f"struct({expr})"
@@ -4097,7 +3705,7 @@ def _rewrite_array_subquery(sql: str) -> str:
         sort = False
         m_ord = re.search(r"\bORDER\s+BY\s+(.+?)\s*$", rest, re.IGNORECASE | re.DOTALL)
         # balanced prefix => the ORDER BY is top-level, not inside parens
-        if m_ord and _balanced_end("(" + rest[: m_ord.start()] + ")", 0) != -1:
+        if m_ord and balanced_end("(" + rest[: m_ord.start()] + ")", 0) != -1:
             key = m_ord.group(1).strip().rstrip(";").strip()
             if key.upper().endswith(" ASC"):
                 key = key[:-4].strip()
@@ -4113,7 +3721,7 @@ def _rewrite_array_subquery(sql: str) -> str:
         hof = None
         if m_un:
             a_open = rest.index("(", m_un.start())
-            a_end = _balanced_end(rest, a_open)
+            a_end = balanced_end(rest, a_open)
             if a_end > 0:
                 arr = rest[a_open + 1 : a_end - 1].strip()
                 m_al = re.match(
@@ -4158,9 +3766,9 @@ def _rewrite_numeric_trunc(sql: str) -> str:
     sign/floor, which keeps the input's floating type."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, _fn in _iter_calls(sql, ("TRUNC",)):
+    for start, open_idx, end, _fn in iter_calls(sql, ("TRUNC",)):
         args = [
-            a.strip() for a in _split_top_level(sql[open_idx + 1 : end - 1])
+            a.strip() for a in split_top_level(sql[open_idx + 1 : end - 1])
         ]
         if len(args) == 1:
             rep = f"(sign({args[0]}) * floor(abs({args[0]})))"
@@ -4196,41 +3804,39 @@ def _rewrite_qualify(sql: str) -> str:
 
     Applied innermost-first so QUALIFY inside CTE bodies and subqueries
     works; each block may carry one QUALIFY."""
+    if not _QUALIFY_RE.search(sql):
+        return sql
     # recurse into parenthesized blocks first
     out: list[str] = []
     pos = 0
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in ("'", '"', "`"):
-            i = _skip_string(sql, i)
+    masked = mask(sql)
+    i = 0
+    while (i := masked.find("(", i)) >= 0:
+        end = balanced_end(masked, i)
+        if end > 0:
+            inner = _rewrite_qualify(sql[i + 1 : end - 1])
+            out.append(sql[pos : i + 1])
+            out.append(inner)
+            out.append(")")
+            pos = i = end
             continue
-        if ch == "(":
-            end = _balanced_end(sql, i)
-            if end > 0:
-                inner = _rewrite_qualify(sql[i + 1 : end - 1])
-                out.append(sql[pos : i + 1])
-                out.append(inner)
-                out.append(")")
-                pos = i = end
-                continue
         i += 1
     out.append(sql[pos:])
     sql = "".join(out)
 
-    m = _find_top_level(sql, _QUALIFY_RE)
+    m = find_top_level(sql, _QUALIFY_RE)
     if not m:
         return sql
     if not re.match(r"\s*(SELECT|WITH)\b", sql, re.IGNORECASE):
         # DDL/DML prologue (CREATE ... AS / INSERT INTO ...): split it off
         # and rewrite only the query part
-        m_q = _find_top_level(sql, re.compile(r"\b(SELECT|WITH)\b", re.IGNORECASE))
+        m_q = find_top_level(sql, re.compile(r"\b(SELECT|WITH)\b", re.IGNORECASE))
         if not m_q or m_q.start() == 0:
             return sql
         return sql[: m_q.start()] + _rewrite_qualify(sql[m_q.start() :])
     head = sql[: m.start()].rstrip()
     rest = sql[m.end() :].strip()
-    m_tail = _find_top_level(rest, _QUALIFY_TAIL_RE)
+    m_tail = find_top_level(rest, _QUALIFY_TAIL_RE)
     if m_tail:
         pred, tail = rest[: m_tail.start()].rstrip(), " " + rest[m_tail.start() :]
     else:
@@ -4252,7 +3858,7 @@ def _rewrite_qualify(sql: str) -> str:
         # only, which is what QUALIFY over DISTINCT means anyway)
         inner = f"SELECT *, ({pred}) AS __q FROM ({head})"
     else:
-        m_from = _find_top_level(head, _FROM_RE, m_sel.end())
+        m_from = find_top_level(head, _FROM_RE, m_sel.end())
         if not m_from:
             return sql
         inner = (
@@ -4334,14 +3940,14 @@ def _rewrite_backtick_tables(sql: str, resolver=None) -> str:
     # keeps backtick regions in the code segments — they are exactly
     # what this rewrite targets — and the shared walker is comment-
     # aware, so `-- user's note` cannot swallow later names.
-    sql = _sub_outside_strings(
+    sql = sub_code(
         sql,
         lambda seg: re.sub(r"`([A-Za-z0-9_\-.*]+)`", repl, seg),
-        code_backticks=True,
+        ("string",),
     )
     # bare (unbackticked) INFORMATION_SCHEMA references — the common
     # spelling in BigQuery metadata queries
-    return _sub_outside_strings(
+    return sub_code(
         sql,
         lambda seg: re.sub(
             r"\b([\w\-]+(?:\.[\w\-]+)?\.INFORMATION_SCHEMA\."
@@ -4483,7 +4089,7 @@ def _js_ternary_to_if(e: str) -> str:
     i, n = 0, len(e)
     while i < n:
         if e[i] == "(":
-            end = _balanced_end(e, i)
+            end = balanced_end(e, i)
             if end < 0:
                 raise JsUdfError("unbalanced parentheses")
             out.append("(" + _js_ternary_to_if(e[i + 1 : end - 1]) + ")")
@@ -4583,7 +4189,7 @@ def _js_body_to_sql(body: str, param_names: list[str]) -> str:
         text = text.strip()
         m = re.match(r"^if\s*\(", text)
         if m:
-            cond_end = _balanced_end(text, m.end() - 1)
+            cond_end = balanced_end(text, m.end() - 1)
             if cond_end < 0:
                 raise JsUdfError("unbalanced parentheses in if condition")
             cond = text[m.end(): cond_end - 1]
@@ -4819,7 +4425,7 @@ def _js_body_to_sql(body: str, param_names: list[str]) -> str:
     for tag, t in (("CAST_S", "STRING"), ("CAST_D", "DOUBLE"), ("CAST_B", "BIGINT")):
         while tag + "(" in e:
             i = e.index(tag + "(")
-            end = _balanced_end(e, i + len(tag))
+            end = balanced_end(e, i + len(tag))
             if end < 0:
                 raise JsUdfError("unbalanced parentheses")
             inner = e[i + len(tag) + 1 : end - 1]
@@ -4857,7 +4463,7 @@ def _rewrite_temp_function(sql: str) -> str:
     if mjs:
         name = m.group(1).strip("`").replace(".", "__")
         open_idx = sql.index("(", m.end() - 1)
-        params_end = _balanced_end(sql, open_idx)
+        params_end = balanced_end(sql, open_idx)
         if params_end < 0:
             return sql
         params = _map_bq_types(sql[open_idx + 1 : params_end - 1])
@@ -4882,7 +4488,7 @@ def _rewrite_temp_function(sql: str) -> str:
         )
     name = m.group(1).strip("`").replace(".", "__")
     open_idx = sql.index("(", m.end() - 1)
-    params_end = _balanced_end(sql, open_idx)
+    params_end = balanced_end(sql, open_idx)
     if params_end < 0:
         return sql
     params = _map_bq_types(sql[open_idx + 1 : params_end - 1])
@@ -4899,7 +4505,7 @@ def _rewrite_temp_function(sql: str) -> str:
         if not m_as:
             return sql
         body_open = params_end + m_as.end() - 1
-    body_end = _balanced_end(sql, body_open)
+    body_end = balanced_end(sql, body_open)
     if body_end < 0:
         return sql
     body = sql[body_open + 1 : body_end - 1].strip()
@@ -4975,13 +4581,13 @@ def _rewrite_vector_search(sql: str) -> str:
     """
     while True:
         hit = None
-        for start, op, end, _name in _iter_calls(sql, ("VECTOR_SEARCH",)):
+        for start, op, end, _name in iter_calls(sql, ("VECTOR_SEARCH",)):
             hit = (start, op, end)
             break
         if hit is None:
             return sql
         start, op, end = hit
-        raw_args = _split_top_level(sql[op + 1 : end - 1])
+        raw_args = split_top_level(sql[op + 1 : end - 1])
         if len(raw_args) < 3:
             raise ValueError(
                 "VECTOR_SEARCH needs (base, 'column', query[, named args])"
@@ -5054,31 +4660,6 @@ def _rewrite_vector_search(sql: str) -> str:
         sql = sql[:start] + replacement + sql[end:]
 
 
-def _split_pipe_segments(sql: str) -> list[str]:
-    """Split on top-level ``|>`` (string- and paren-aware)."""
-    out: list[str] = []
-    depth = 0
-    buf_start = 0
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in ("'", '"', "`"):
-            i = _skip_string(sql, i)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "|" and depth == 0 and sql.startswith("|>", i):
-            out.append(sql[buf_start:i])
-            i += 2
-            buf_start = i
-            continue
-        i += 1
-    out.append(sql[buf_start:])
-    return out
-
-
 _PIPE_OPS = (
     "WHERE, SELECT, EXTEND, AGGREGATE, ORDER BY, LIMIT, DROP, SET, "
     "RENAME, AS, JOIN (INNER/LEFT/RIGHT/FULL/CROSS), UNION ALL/DISTINCT, "
@@ -5107,7 +4688,7 @@ def _rewrite_pipe_syntax(sql: str) -> str:
     ``SELECT * EXCEPT/REPLACE`` rewrites."""
     if "|>" not in sql:
         return sql
-    segs = [s.strip() for s in _split_pipe_segments(sql)]
+    segs = [s.strip() for s in split_top_level(sql, "|>")]
     if len(segs) < 2 or not segs[0]:
         return sql
     first = segs[0]
@@ -5171,7 +4752,7 @@ def _rewrite_pipe_syntax(sql: str) -> str:
             cur = f"(SELECT * EXCEPT({rest}) FROM {rel(i)})"
         elif kw == "SET":
             items = []
-            for a in _split_top_level(rest):
+            for a in split_top_level(rest):
                 m_set = re.match(r"\s*(\w+)\s*=\s*(.+)$", a, re.DOTALL)
                 if not m_set:
                     raise ValueError(f"pipe SET: bad assignment {a!r}")
@@ -5179,7 +4760,7 @@ def _rewrite_pipe_syntax(sql: str) -> str:
             cur = f"(SELECT * REPLACE({', '.join(items)}) FROM {rel(i)})"
         elif kw == "RENAME":
             olds, news = [], []
-            for a in _split_top_level(rest):
+            for a in split_top_level(rest):
                 m_rn = re.match(
                     r"\s*(\w+)\s+AS\s+(\w+)\s*$", a, re.IGNORECASE
                 )
@@ -5258,7 +4839,7 @@ def _rewrite_gap_fill(sql: str) -> str:
     computation runs twice."""
     while True:
         hit = None
-        for start, op, end, _n in _iter_calls(sql, ("GAP_FILL",)):
+        for start, op, end, _n in iter_calls(sql, ("GAP_FILL",)):
             hit = (start, op, end)
             break
         if hit is None:
@@ -5266,7 +4847,7 @@ def _rewrite_gap_fill(sql: str) -> str:
         start, op, end = hit
         # bracket-aware arg split: value_columns => [(...), (...)] has
         # top-paren-level commas inside its [] literal
-        raw = _split_top_level(sql[op + 1 : end - 1])
+        raw = split_top_level(sql[op + 1 : end - 1])
         args: list[str] = []
         for frag in raw:
             if args and (
@@ -5431,7 +5012,7 @@ def _rewrite_range_literals(sql: str) -> str:
             _range_struct(bound(bm.group(1)), bound(bm.group(2))),
         )
 
-    return _map_code_literal_pairs(sql, fn)
+    return "".join(map("".join, starmap(fn, segments(sql))))
 
 
 def _rewrite_range_fns(sql: str) -> str:
@@ -5455,7 +5036,7 @@ def _rewrite_range_fns(sql: str) -> str:
     """
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, fn in _iter_calls(
+    for start, open_idx, end, fn in iter_calls(
         sql,
         (
             "RANGE_START", "RANGE_END", "RANGE_CONTAINS", "RANGE_OVERLAPS",
@@ -5463,7 +5044,7 @@ def _rewrite_range_fns(sql: str) -> str:
         ),
     ):
         inner = _rewrite_range_fns(sql[open_idx + 1 : end - 1])
-        args = [a.strip() for a in _split_top_level(inner)]
+        args = [a.strip() for a in split_top_level(inner)]
         a = args[0] if args else ""
         b = args[1] if len(args) > 1 else ""
         lo1, up1 = f"({a}).lower", f"({a}).upper"
@@ -5553,13 +5134,13 @@ def _rewrite_range_sessionize(sql: str) -> str:
     scalar RANGE functions do handle UNBOUNDED)."""
     while True:
         hit = None
-        for start, op, end, _n in _iter_calls(sql, ("RANGE_SESSIONIZE",)):
+        for start, op, end, _n in iter_calls(sql, ("RANGE_SESSIONIZE",)):
             hit = (start, op, end)
             break
         if hit is None:
             return sql
         start, op, end = hit
-        raw = _split_top_level(sql[op + 1 : end - 1])
+        raw = split_top_level(sql[op + 1 : end - 1])
         args: list[str] = []
         for frag in raw:
             if args and args[-1].count("[") > args[-1].count("]"):
@@ -5617,7 +5198,7 @@ def _rewrite_bytes_fns(sql: str) -> str:
     engine's NUMERIC/BIGNUMERIC precisions."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, fn in _iter_calls(
+    for start, open_idx, end, fn in iter_calls(
         sql,
         (
             "CODE_POINTS_TO_BYTES", "SAFE_CONVERT_BYTES_TO_STRING",
@@ -5720,7 +5301,7 @@ def _rewrite_geography(sql: str) -> str:
     loudly at name resolution rather than returning wrong geometry."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, fn in _iter_calls(
+    for start, open_idx, end, fn in iter_calls(
         sql,
         (
             "ST_GEOGPOINT", "ST_GEOGFROMTEXT", "ST_ASTEXT", "ST_X", "ST_Y",
@@ -5728,7 +5309,7 @@ def _rewrite_geography(sql: str) -> str:
         ),
     ):
         inner = _rewrite_geography(sql[open_idx + 1 : end - 1])
-        args = [a.strip() for a in _split_top_level(inner)]
+        args = [a.strip() for a in split_top_level(inner)]
         a = args[0] if args else ""
         b = args[1] if len(args) > 1 else ""
         if fn == "st_geogpoint" and len(args) == 2:
@@ -5791,7 +5372,7 @@ def _rewrite_aead(sql: str) -> str:
     derivation + encryption) — pass a column, not an expensive call."""
     out: list[str] = []
     pos = 0
-    for start, open_idx, end, fn in _iter_calls(
+    for start, open_idx, end, fn in iter_calls(
         sql,
         (
             r"KEYS\.NEW_KEYSET",
@@ -5804,7 +5385,7 @@ def _rewrite_aead(sql: str) -> str:
         ),
     ):
         inner = _rewrite_aead(sql[open_idx + 1 : end - 1])
-        args = [a.strip() for a in _split_top_level(inner)]
+        args = [a.strip() for a in split_top_level(inner)]
         if fn == "keys.new_keyset":
             repl = "unhex(sha2(uuid(), 256))"
         elif fn in ("aead.encrypt", "deterministic_encrypt") and len(args) == 3:
@@ -5861,7 +5442,7 @@ def _rewrite_create_table_layout(sql: str) -> str:
     head, rest = m.group(1), m.group(2)
     if re.match(r"\s+FUNCTION\b", rest, re.IGNORECASE):
         return sql
-    m_as = _find_top_level(rest, _AS_RE)
+    m_as = find_top_level(rest, _AS_RE)
     mid, tail = (
         (rest[: m_as.start()], rest[m_as.start() :])
         if m_as
@@ -5871,7 +5452,7 @@ def _rewrite_create_table_layout(sql: str) -> str:
     schema = ""
     ms = re.match(r"\s*\(", mid)
     if ms:
-        send = _balanced_end(mid, ms.end() - 1)
+        send = balanced_end(mid, ms.end() - 1)
         if send > 0:
             schema, mid = mid[:send], mid[send:]
     probe = mid
@@ -5887,7 +5468,7 @@ def _rewrite_create_table_layout(sql: str) -> str:
             return sql  # unknown clause — don't touch the statement
         found = True
         # consume up to the next top-level clause keyword or the end
-        nxt = _find_top_level(
+        nxt = find_top_level(
             p,
             re.compile(
                 r"\b(PARTITION\s+BY|CLUSTER\s+BY|OPTIONS|DEFAULT\s+COLLATE)\b",
@@ -5931,14 +5512,14 @@ def extract_create_table_layout(
         return None
     m_name = re.search(r"(`?[\w.\-]+`?)\s*$", head)
     table = m_name.group(1).strip("`")
-    m_as = _find_top_level(rest, _AS_RE)
+    m_as = find_top_level(rest, _AS_RE)
     mid, tail = (
         (rest[: m_as.start()], rest[m_as.start() :]) if m_as else (rest, "")
     )
     schema = ""
     ms = re.match(r"\s*\(", mid)
     if ms:
-        send = _balanced_end(mid, ms.end() - 1)
+        send = balanced_end(mid, ms.end() - 1)
         if send > 0:
             schema, mid = mid[:send], mid[send:]
     partition_expr: str | None = None
@@ -5958,7 +5539,7 @@ def extract_create_table_layout(
         )
         if not mk:
             return None  # unknown clause — leave for Spark to reject
-        nxt = _find_top_level(p, clause_re, mk.end())
+        nxt = find_top_level(p, clause_re, mk.end())
         seg_end = nxt.start() if nxt else len(p)
         body = p[mk.end() : seg_end].strip()
         kw = re.sub(r"\s+", " ", mk.group(1)).upper()
@@ -5966,7 +5547,7 @@ def extract_create_table_layout(
             partition_expr = body
         elif kw == "CLUSTER BY":
             cluster_cols = [
-                c.strip().strip("`") for c in _split_top_level(body)
+                c.strip().strip("`") for c in split_top_level(body)
             ]
         else:
             kept.append(p[: seg_end].strip())
@@ -6005,7 +5586,7 @@ def _rewrite_materialized_view(sql: str) -> str:
         # find its end with the balanced scanner, not a non-greedy regex
         mo = re.match(r"OPTIONS\s*\(", rest, re.IGNORECASE)
         if mo:
-            end = _balanced_end(rest, mo.end() - 1)
+            end = balanced_end(rest, mo.end() - 1)
             if end > 0:
                 rest = rest[end:].lstrip()
         ma = re.match(r"AS\b(.*)$", rest, re.IGNORECASE | re.DOTALL)
@@ -6037,20 +5618,6 @@ _SYSTEM_TIME_RE = re.compile(
 )
 
 
-def _in_literal(sql: str, idx: int) -> bool:
-    """True when ``idx`` falls inside a quoted literal opened earlier."""
-    i = 0
-    while i < idx:
-        if sql[i] in ("'", '"', "`"):
-            j = _skip_string(sql, i)
-            if j > idx:
-                return True
-            i = j
-        else:
-            i += 1
-    return False
-
-
 def _scan_asof_expr(sql: str, i: int) -> int:
     """Index just past the timestamp expression starting at ``i``: one
     primary (string literal / identifier / function call /
@@ -6065,15 +5632,19 @@ def _scan_asof_expr(sql: str, i: int) -> int:
             j += 1
         return j
 
+    def string_end(j: int) -> int | None:
+        tok = TOKEN_RE.match(sql, j)
+        return tok.end() if tok and tok.lastgroup == "string" else None
+
     def primary(j: int) -> int:
         j = ws(j)
         if j >= n:
             return j
+        if (e := string_end(j)) is not None:
+            return e
         ch = sql[j]
-        if ch in ("'", '"'):
-            return _skip_string(sql, j)
         if ch == "(":
-            e = _balanced_end(sql, j)
+            e = balanced_end(sql, j)
             return e if e != -1 else n
         m = re.match(r"[A-Za-z_@][\w.\-@]*", sql[j:])
         if not m:
@@ -6081,12 +5652,12 @@ def _scan_asof_expr(sql: str, i: int) -> int:
         j2 = j + len(m.group(0))
         k = ws(j2)
         if k < n and sql[k] == "(":
-            e = _balanced_end(sql, k)
+            e = balanced_end(sql, k)
             return e if e != -1 else n
         if m.group(0).upper() in ("TIMESTAMP", "DATETIME", "DATE") and (
-            k < n and sql[k] in ("'", '"')
-        ):
-            return _skip_string(sql, k)
+            e := string_end(k)
+        ) is not None:
+            return e
         return j2
 
     j = primary(i)
@@ -6115,17 +5686,11 @@ def _rewrite_system_time(sql: str, asof_handler) -> str:
     without one the construct fails loudly instead of reaching Spark's
     parser."""
     while True:
-        found = None
-        pos = 0
-        while True:
-            m = _SYSTEM_TIME_RE.search(sql, pos)
-            if not m:
-                break
-            if _in_literal(sql, m.start()):
-                pos = m.start() + 1
-                continue
-            found = m
-            break
+        # a match must start in code (a backtick table name is code here)
+        masked = mask(sql, ("hint", "comment", "string"))
+        found = _SYSTEM_TIME_RE.search(sql)
+        while found and masked[found.start()] != sql[found.start()]:
+            found = _SYSTEM_TIME_RE.search(sql, found.start() + 1)
         if found is None:
             return sql
         if asof_handler is None:
@@ -6156,10 +5721,12 @@ def transpile_statement(
     family to Spark's constant-memory DataSketches builtins instead of
     the exact-set algebra (see ``_rewrite_hll_family``)."""
     out = sql
-    # ONE comment-blanking pass (hint comments survive) makes every
-    # downstream rewrite comment-free — see blank_comments_keep_hints.
-    # It subsumes the `#`->`--` conversion: blanked is blanked.
-    out = blank_comments_keep_hints(out)
+    # ONE comment-blanking pass makes every downstream rewrite
+    # comment-free: each one interpolates argument text into generated
+    # SQL, and a comment inside an argument would swallow whatever the
+    # rewrite appends on the same line. ``/*+ */`` hints survive — the
+    # engine emits BROADCAST hints itself, and users may write them.
+    out = mask(out, ("comment",))
     out = _rewrite_temp_function(out)
     # triple-quoted literals normalize immediately after the JS-UDF
     # pass (which consumes its own '''bodies''') so every later pass
@@ -6191,7 +5758,7 @@ def transpile_statement(
     # and the divergence (an ANSI error instead of NULL on genuinely
     # erroring input) is documented here rather than failing to resolve
     # `SAFE.X` at all.
-    out = _sub_outside_strings(
+    out = sub_code(
         out,
         lambda seg: re.sub(
             r"\bSAFE\.(?!PARSE_)(\w+\s*\()", r"\1", seg, flags=re.IGNORECASE
@@ -6204,7 +5771,7 @@ def transpile_statement(
     # SELECT AS VALUE: BigQuery makes the subquery's row type the bare
     # single-column value instead of a 1-field struct — which is what
     # Spark subqueries produce anyway, so the modifier strips exactly
-    out = _sub_outside_strings(
+    out = sub_code(
         out,
         lambda seg: re.sub(
             r"\bSELECT\s+(DISTINCT\s+)?AS\s+VALUE\b",
@@ -6310,45 +5877,31 @@ def transpile_expression(expr: str) -> str:
     return m.group(1).strip()
 
 
+_CTE_SEP_RE = re.compile(r"\s*,")
+
+
 def extract_with_clause(sql: str) -> str:
     """Return the leading ``WITH name AS (...), ...`` clause (or '').
 
     Used to re-scope outer CTEs when an inner ``ML.PREDICT``/
     ``ML.EVALUATE`` subquery references them (the reference's
     evaluate-model SQL does exactly this)."""
-    m = re.match(r"\s*WITH\b", sql, re.IGNORECASE)
+    masked = mask(sql)
+    m = re.match(r"\s*WITH\b", masked, re.IGNORECASE)
     if not m:
         return ""
     i = m.end()
-    n = len(sql)
     while True:
-        # skip "name AS ("
-        open_paren = sql.find("(", i)
-        if open_paren < 0:
-            return ""
-        depth, j = 1, open_paren + 1
-        in_str: str | None = None
-        while j < n and depth:
-            ch = sql[j]
-            if in_str:
-                if ch == in_str:
-                    in_str = None
-            elif ch in ("'", '"'):
-                in_str = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            j += 1
-        if depth:
+        # skip "name AS (", then its balanced body
+        open_paren = masked.find("(", i)
+        j = balanced_end(masked, open_paren) if open_paren >= 0 else -1
+        if j < 0:
             return ""
         # another CTE follows?
-        rest = sql[j:]
-        m2 = re.match(r"\s*,", rest)
-        if m2:
-            i = j + m2.end()
-            continue
-        return sql[: j]
+        m2 = _CTE_SEP_RE.match(masked, j)
+        if not m2:
+            return sql[:j]
+        i = m2.end()
 
 
 _CREATE_OR_REPLACE_TABLE_RE = re.compile(
@@ -6396,23 +5949,12 @@ def splice_system_vars(sql: str, values: dict) -> str:
         return sql
     out: list[str] = []
     pos = 0
-    i, ln = 0, len(sql)
-    while i < ln:
-        j = _skip_comment(sql, i)
-        if j > i:
-            i = j
-            continue
-        ch = sql[i]
-        if ch in ("'", '"', "`"):
-            i = _skip_string(sql, i)
-            continue
-        m = _SYSVAR_RE.match(sql, i)
-        if m and m.group(1).lower() in values:
-            out.append(sql[pos:i])
-            out.append(script_literal(values[m.group(1).lower()]))
-            pos = i = m.end()
-            continue
-        i += 1
+    for m in _SYSVAR_RE.finditer(mask(sql)):
+        name = m.group(1).lower()
+        if name in values:
+            out.append(sql[pos : m.start()])
+            out.append(script_literal(values[name]))
+            pos = m.end()
     out.append(sql[pos:])
     return "".join(out)
 
@@ -6434,10 +5976,10 @@ def _column_name_offsets(sql: str) -> set[int]:
     b)``), and each assignment target of ``UPDATE ... SET`` / MERGE's
     ``UPDATE SET``. BigQuery resolves those names against the target
     table, so a DECLAREd variable of the same name never replaces them."""
-    s = _strip_strings(blank_comments_same_length(sql))
+    s = mask(sql)
     out: set[int] = set()
     for m in _INSERT_COLUMNS_RE.finditer(s):
-        end = _balanced_end(s, m.end() - 1)
+        end = balanced_end(s, m.end() - 1)
         body = s[m.end(): end - 1]
         if end > 0 and _COLUMN_LIST_RE.fullmatch(body):
             out.update(m.end() + w.start() for w in re.finditer(r"\w+", body))
@@ -6501,57 +6043,37 @@ class ScriptContext:
         columns = _column_name_offsets(sql)
         out: list[str] = []
         pos = 0
-        i, n = 0, len(sql)
-        pats = {
-            name: re.compile(rf"\b{re.escape(name)}\b")
-            for name in self.variables
-        }
-        while i < n:
-            j = _skip_comment(sql, i)
-            if j > i:
-                i = j
+        n = len(sql)
+        names = re.compile(
+            r"\b(?:" + "|".join(map(re.escape, self.variables)) + r")\b"
+        )
+        for m in names.finditer(mask(sql)):
+            i = m.start()
+            # a variable NAME is never a reference in these positions
+            # (round-11 probe: the blind replace corrupted them):
+            # qualified columns ``t.o``, alias position ``... AS o``,
+            # loop labels ``o: REPEAT`` / ``BREAK o``, and the column
+            # names of INSERT column lists and SET targets
+            if i in columns:
                 continue
-            ch = sql[i]
-            if ch in ("'", '"', "`"):
-                i = _skip_string(sql, i)
+            k = i - 1
+            while k >= 0 and sql[k].isspace():
+                k -= 1
+            if k >= 0 and sql[k] == ".":
                 continue
-            replaced = False
-            for name, pat in pats.items():
-                m = pat.match(sql, i)
-                if m:
-                    # a variable NAME is never a reference in these
-                    # positions (round-11 probe: the blind replace
-                    # corrupted them): qualified columns ``t.o``,
-                    # alias position ``... AS o``, loop labels
-                    # ``o: REPEAT`` / ``BREAK o``, and the column names
-                    # of INSERT column lists and SET targets
-                    if i in columns:
-                        continue
-                    k = i - 1
-                    while k >= 0 and sql[k].isspace():
-                        k -= 1
-                    if k >= 0 and sql[k] == ".":
-                        continue
-                    mw = re.search(r"([A-Za-z_]\w*)\s*$", sql[:i])
-                    if mw and mw.group(1).upper() in (
-                        "AS", "BREAK", "LEAVE", "CONTINUE", "ITERATE",
-                    ):
-                        continue
-                    e = m.end()
-                    while e < n and sql[e].isspace():
-                        e += 1
-                    if e < n and sql[e] == ":" and not sql.startswith(
-                        "::", e
-                    ):
-                        continue
-                    out.append(sql[pos:i])
-                    out.append(script_literal(self.variables[name]))
-                    pos = m.end()
-                    i = m.end()
-                    replaced = True
-                    break
-            if not replaced:
-                i += 1
+            mw = re.search(r"([A-Za-z_]\w*)\s*$", sql[:i])
+            if mw and mw.group(1).upper() in (
+                "AS", "BREAK", "LEAVE", "CONTINUE", "ITERATE",
+            ):
+                continue
+            e = m.end()
+            while e < n and sql[e].isspace():
+                e += 1
+            if e < n and sql[e] == ":" and not sql.startswith("::", e):
+                continue
+            out.append(sql[pos:i])
+            out.append(script_literal(self.variables[m.group()]))
+            pos = m.end()
         out.append(sql[pos:])
         return "".join(out)
 
@@ -6581,20 +6103,11 @@ def splice_query_params(sql: str, params: dict[str, object]) -> str:
     outside quoted strings (EXECUTE IMMEDIATE ... USING)."""
     out: list[str] = []
     pos = 0
-    i, n = 0, len(sql)
-    pat = re.compile(r"@(\w+)")
-    while i < n:
-        ch = sql[i]
-        if ch in ("'", '"', "`"):
-            i = _skip_string(sql, i)
-            continue
-        m = pat.match(sql, i)
-        if m and m.group(1) in params:
-            out.append(sql[pos:i])
+    for m in re.finditer(r"@(\w+)", mask(sql)):
+        if m.group(1) in params:
+            out.append(sql[pos : m.start()])
             out.append(script_literal(params[m.group(1)]))
-            pos = i = m.end()
-            continue
-        i += 1
+            pos = m.end()
     out.append(sql[pos:])
     return "".join(out)
 

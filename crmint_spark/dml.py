@@ -45,7 +45,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .dialect import _balanced_end, _find_top_level, _skip_string, _split_top_level
+from .sqllex import balanced_end, find_top_level, mask, split_top_level
 
 _IDENT = r"(?:`[^`]+`|[A-Za-z_][\w.]*)"
 _UPDATE_RE = re.compile(rf"^\s*UPDATE\s+({_IDENT})", re.IGNORECASE)
@@ -155,7 +155,7 @@ def parse_dml(stmt: str):
         rest = s[m.end() :].strip()
         columns = None
         if rest.startswith("("):
-            end = _balanced_end(rest, 0)
+            end = balanced_end(rest, 0)
             head = rest[1 : end - 1]
             # a parenthesized column list, not a subquery
             if not re.match(r"\s*(SELECT|WITH)\b", head, re.IGNORECASE):
@@ -168,15 +168,15 @@ def parse_dml(stmt: str):
 def _parse_update(s: str) -> UpdateStmt | MergeStmt:
     m = _UPDATE_RE.match(s)
     target = _unquote(m.group(1))
-    m_set = _find_top_level(s, _SET_KW_RE, m.end())
+    m_set = find_top_level(s, _SET_KW_RE, m.end())
     if not m_set:
         raise DmlError("UPDATE without SET")
     alias = _parse_alias(s[m.end() : m_set.start()])
-    m_where = _find_top_level(s, _WHERE_RE, m_set.end())
+    m_where = find_top_level(s, _WHERE_RE, m_set.end())
     if not m_where:
         raise DmlError("UPDATE requires a WHERE clause")  # BigQuery parity
     body = s[m_set.end() : m_where.start()]
-    m_from = _find_top_level(body, _FROM_KW_RE)
+    m_from = find_top_level(body, _FROM_KW_RE)
     from_clause = from_alias = None
     if m_from:
         from_text = body[m_from.end() :].strip()
@@ -201,7 +201,7 @@ def _parse_update(s: str) -> UpdateStmt | MergeStmt:
 def _parse_delete(s: str) -> DeleteStmt:
     m = _DELETE_RE.match(s)
     target = _unquote(m.group(1))
-    m_where = _find_top_level(s, _WHERE_RE, m.end())
+    m_where = find_top_level(s, _WHERE_RE, m.end())
     if not m_where:
         raise DmlError("DELETE requires a WHERE clause")  # BigQuery parity
     alias = _parse_alias(s[m.end() : m_where.start()])
@@ -212,7 +212,7 @@ def _split_relation(text: str) -> tuple[str, str | None]:
     """``(subquery) [AS] a`` or ``tbl [AS] a`` -> (relation_sql, alias)."""
     text = text.strip()
     if text.startswith("("):
-        end = _balanced_end(text, 0)
+        end = balanced_end(text, 0)
         rel = text[:end]
         alias = _parse_alias(text[end:])
         return rel, alias
@@ -224,7 +224,7 @@ def _split_relation(text: str) -> tuple[str, str | None]:
 
 def _parse_assignments(body: str) -> list[tuple[str, str]]:
     out = []
-    for part in _split_top_level(body):
+    for part in split_top_level(body):
         eq = part.find("=")
         if eq < 0:
             raise DmlError(f"bad assignment: {part[:60]}")
@@ -238,11 +238,11 @@ def _parse_assignments(body: str) -> list[tuple[str, str]]:
 def _parse_merge(s: str) -> MergeStmt:
     m = _MERGE_RE.match(s)
     target = _unquote(m.group(1))
-    m_using = _find_top_level(s, _USING_RE, m.end())
+    m_using = find_top_level(s, _USING_RE, m.end())
     if not m_using:
         raise DmlError("MERGE without USING")
     target_alias = _parse_alias(s[m.end() : m_using.start()])
-    m_on = _find_top_level(s, _ON_RE, m_using.end())
+    m_on = find_top_level(s, _ON_RE, m_using.end())
     if not m_on:
         raise DmlError("MERGE without ON")
     source_sql, source_alias = _split_relation(s[m_using.end() : m_on.start()])
@@ -309,37 +309,28 @@ def _parse_when(clause: str, stmt: MergeStmt) -> None:
         stmt.not_matched_by_target.append(when)
 
 
+#: parens and the CASE-expression keywords a MERGE clause scan tracks
+_CASE_TOKEN_RE = re.compile(r"[()]|(?<!\w)(?:CASE|END|WHEN|THEN)\b", re.IGNORECASE)
+
+
 def _clause_when_offsets(s: str, start: int) -> list[int]:
     """Offsets of clause-level WHEN keywords — paren-aware AND
     CASE..END-aware, so ``CASE WHEN`` inside a clause condition or
     action never splits the chain."""
     out: list[int] = []
-    depth_case = 0
-    i, n = start, len(s)
-    while i < n:
-        ch = s[i]
-        if ch in ("'", '"', "`"):
-            i = _skip_string(s, i)
+    depth = depth_case = 0
+    for m in _CASE_TOKEN_RE.finditer(mask(s), start):
+        kw = m.group().upper()
+        if kw in "()":
+            depth = depth + 1 if kw == "(" else max(depth - 1, 0)
+        elif depth:
             continue
-        if ch == "(":
-            i = max(_balanced_end(s, i), i + 1)
-            continue
-        m = re.match(r"(CASE|END|WHEN)\b", s[i:], re.IGNORECASE)
-        if m and (i == 0 or (not s[i - 1].isalnum() and s[i - 1] != "_")):
-            kw = m.group(1).upper()
-            if kw == "CASE":
-                depth_case += 1
-                i += 4
-                continue
-            if kw == "END":
-                depth_case = max(0, depth_case - 1)
-                i += 3
-                continue
-            if depth_case == 0:
-                out.append(i)
-            i += 4
-            continue
-        i += 1
+        elif kw == "CASE":
+            depth_case += 1
+        elif kw == "END":
+            depth_case = max(0, depth_case - 1)
+        elif kw == "WHEN" and depth_case == 0:
+            out.append(m.start())
     return out
 
 
@@ -350,15 +341,15 @@ def _parse_insert_action(rest: str, cond: str | None) -> MergeWhen:
         return MergeWhen("insert", cond, insert_columns=None, insert_values=None)
     cols = None
     if r.startswith("("):
-        end = _balanced_end(r, 0)
+        end = balanced_end(r, 0)
         cols = [c.strip().strip("`") for c in r[1 : end - 1].split(",")]
         r = r[end:].strip()
     mv = re.match(r"^VALUES\s*\(", r, re.IGNORECASE)
     if not mv:
         raise DmlError(f"bad INSERT action: {rest[:60]}")
     open_idx = r.index("(", mv.start())
-    end = _balanced_end(r, open_idx)
-    vals = _split_top_level(r[open_idx + 1 : end - 1])
+    end = balanced_end(r, open_idx)
+    vals = split_top_level(r[open_idx + 1 : end - 1])
     return MergeWhen(
         "insert", cond, insert_columns=cols, insert_values=[v.strip() for v in vals]
     )
@@ -367,30 +358,19 @@ def _parse_insert_action(rest: str, cond: str | None) -> MergeWhen:
 def _find_then_outside_case(text: str) -> int:
     """Offset of the THEN that terminates ``AND cond THEN`` when the
     condition may contain CASE..WHEN..THEN..END expressions."""
-    depth_case = 0
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch in ("'", '"', "`"):
-            i = _skip_string(text, i)
+    depth = depth_case = 0
+    for m in _CASE_TOKEN_RE.finditer(mask(text)):
+        kw = m.group().upper()
+        if kw in "()":
+            depth = depth + 1 if kw == "(" else max(depth - 1, 0)
+        elif depth:
             continue
-        if ch == "(":
-            i = max(_balanced_end(text, i), i + 1)
-            continue
-        m = re.match(r"(CASE|END|THEN)\b", text[i:], re.IGNORECASE)
-        if m and (i == 0 or (not text[i - 1].isalnum() and text[i - 1] != "_")):
-            kw = m.group(1).upper()
-            if kw == "CASE":
-                depth_case += 1
-                i += 4
-                continue
-            if kw == "END":
-                depth_case -= 1
-                i += 3
-                continue
-            if depth_case == 0:
-                return i
-        i += 1
+        elif kw == "CASE":
+            depth_case += 1
+        elif kw == "END":
+            depth_case -= 1
+        elif kw == "THEN" and depth_case == 0:
+            return m.start()
     raise DmlError("MERGE WHEN ... AND condition without THEN")
 
 

@@ -30,6 +30,7 @@ from pyspark.ml import PipelineModel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sqllex import balanced_end, iter_calls, split_top_level
 from .estimators import (
     build_pipeline,
     is_classifier,
@@ -193,8 +194,6 @@ def extract_bqml_query(stmt: str) -> str | None:
         return q[1:-1] if q.startswith("(") and q.endswith(")") else q
     # balanced scan, not the legacy non-greedy regexes: an inner query
     # containing "))" would otherwise be truncated in dry-run planning
-    from ..dialect import _balanced_end, _split_top_level
-
     for fn in (
         "ML.PREDICT",
         "ML.EVALUATE",
@@ -207,10 +206,10 @@ def extract_bqml_query(stmt: str) -> str | None:
         )
         if not pm:
             continue
-        end = _balanced_end(stmt, pm.end() - 1)
+        end = balanced_end(stmt, pm.end() - 1)
         if end < 0:
             continue
-        args = [a.strip() for a in _split_top_level(stmt[pm.end() : end - 1])]
+        args = [a.strip() for a in split_top_level(stmt[pm.end() : end - 1])]
         for a in reversed(args):
             if a.startswith("("):
                 return a[1:-1]
@@ -231,10 +230,8 @@ def _split_transform(stmt: str) -> tuple[str, str | None]:
     )
     if not m:
         return stmt, None
-    from ..dialect import _balanced_end
-
     open_idx = stmt.rindex("(", 0, m.end())
-    end = _balanced_end(stmt, open_idx)
+    end = balanced_end(stmt, open_idx)
     if end < 0:
         return stmt, None
     return m.group(1) + stmt[end:], stmt[open_idx + 1 : end - 1].strip()
@@ -245,10 +242,8 @@ def _transform_items(transform_sql: str, drop_label: str | None) -> list[str]:
     that merely pass the label through (at prediction time the label
     column does not exist — BigQuery likewise serves predictions
     without it)."""
-    from ..dialect import _split_top_level
-
     items = []
-    for it in (s.strip() for s in _split_top_level(transform_sql)):
+    for it in (s.strip() for s in split_top_level(transform_sql)):
         if not it:
             continue
         if drop_label and (
@@ -588,13 +583,11 @@ def _fit_vocab_encoders(
     -> (rewritten clause, vocab_aux) where vocab_aux carries the
     persisted vocabulary tables + join/map attachments (None when every
     vocabulary fit inline)."""
-    from ..dialect import _iter_calls, _split_top_level
-
     aux: dict = {"tables": {}, "joins": [], "udfs": []}
     n_aux = 0
     while True:
         calls = list(
-            _iter_calls(
+            iter_calls(
                 transform_sql,
                 tuple(e.replace(".", r"\.") for e in _VOCAB_ENCODERS),
             )
@@ -605,7 +598,7 @@ def _fit_vocab_encoders(
         fn = fn.upper().replace("\\", "")
         args = [
             a.strip()
-            for a in _split_top_level(transform_sql[op + 1 : end - 1])
+            for a in split_top_level(transform_sql[op + 1 : end - 1])
         ]
         expr = args[0]
         extras = args[1:]
@@ -1335,8 +1328,6 @@ def _sub_ml_table_calls(stmt: str, fn_name: str, handler) -> str:
     ``handler(model_name, args)`` (a view name), using BALANCED paren
     scanning — a non-greedy regex would truncate inner queries that
     contain "))" (e.g. ``... ROUND(SUM(v)) AS y FROM t))``)."""
-    from ..dialect import _balanced_end, _split_top_level
-
     pat = re.compile(
         r"\b" + fn_name.replace(".", r"\.") + r"\s*\(", re.IGNORECASE
     )
@@ -1346,11 +1337,11 @@ def _sub_ml_table_calls(stmt: str, fn_name: str, handler) -> str:
         m = pat.search(stmt, pos)
         if not m:
             break
-        end = _balanced_end(stmt, m.end() - 1)
+        end = balanced_end(stmt, m.end() - 1)
         if end < 0:
             break
         args = [
-            a.strip() for a in _split_top_level(stmt[m.end() : end - 1])
+            a.strip() for a in split_top_level(stmt[m.end() : end - 1])
         ]
         # malformed call with no arguments (e.g. ML.PREDICT()): treat
         # like the MODEL-regex miss path instead of raising IndexError

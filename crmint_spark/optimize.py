@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .sqllex import TOKEN_RE, balanced_end
+
 
 def bucket_table(
     df: DataFrame,
@@ -260,60 +262,23 @@ _CTE_HEAVY = None  # compiled lazily (module import cost)
 
 
 def _scan_balanced(s: str, j: int) -> int:
-    """Index just past the ')' that closes the '(' at s[j-1], skipping
-    string literals (single/double quoted, backslash escapes) and
-    -- / /* */ comments so parens inside them don't count."""
-    depth = 1
-    k = j
-    n = len(s)
-    while k < n and depth:
-        c = s[k]
-        if c in ("'", '"'):
-            q = c
-            k += 1
-            while k < n:
-                if s[k] == "\\":
-                    k += 2
-                    continue
-                if s[k] == q:
-                    k += 1
-                    break
-                k += 1
-            continue
-        if c == "-" and s[k : k + 2] == "--":
-            while k < n and s[k] != "\n":
-                k += 1
-            continue
-        if c == "/" and s[k : k + 2] == "/*":
-            e = s.find("*/", k + 2)
-            k = n if e < 0 else e + 2
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        k += 1
-    if depth:
+    """Index just past the ')' that closes the '(' at s[j-1] (the shared
+    lexer skips literals and comments)."""
+    end = balanced_end(s, j - 1)
+    if end < 0:
         raise ValueError("unbalanced parens")
-    return k
+    return end
 
 
 def _skip_ws_comments(s: str, i: int) -> int:
     """Index of the first char at or after ``i`` that is not whitespace
-    or a -- / /* */ comment."""
-    n = len(s)
-    while i < n:
-        if s[i].isspace():
-            i += 1
-        elif s[i : i + 2] == "--":
-            while i < n and s[i] != "\n":
-                i += 1
-        elif s[i : i + 2] == "/*":
-            e = s.find("*/", i + 2)
-            i = n if e < 0 else e + 2
-        else:
-            break
-    return i
+    or a comment."""
+    while True:
+        i += len(s[i:]) - len(s[i:].lstrip())
+        m = TOKEN_RE.match(s, i)
+        if not m or m.lastgroup not in ("hint", "comment"):
+            return i
+        i = m.end()
 
 
 def _parse_top_ctes(sql: str):

@@ -22,7 +22,8 @@ def get_spark(
     """Build (or fetch) the tuned SparkSession.
 
     local[N] for tests; on a real cluster the master/memory settings come
-    from spark-submit and these SQL confs still apply.
+    from spark-submit and these SQL confs still apply. ``extra_conf``
+    overrides any setting below (it is applied last).
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -48,36 +49,22 @@ def get_spark(
         # Shuffled hash join allowed when its size conditions hold
         # (guide §3.1): no sort on either side for moderate build
         # sides; the planner's own size guards still apply, and AQE can
-        # revert to sort-merge. Overridable for clusters that prefer
-        # the always-spillable plan (SPARK_GRAFT_PREFER_SMJ=true).
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        # revert to sort-merge. Clusters that prefer the always-
+        # spillable plan set it back through ``extra_conf``.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         # FileOutputCommitter v2: tasks move their own output instead
         # of a sequential driver-side rename per partition directory at
         # commit — measured ~10% on the engine's hive-partitioned
         # copy-on-write writes locally, and the standard choice on
-        # HDFS-like stores (object stores use their own committers;
-        # override with SPARK_GRAFT_COMMITTER_V=1).
-        .config(
-            "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-            os.environ.get("SPARK_GRAFT_COMMITTER_V", "2"),
-        )
-        # Compression codecs, parameterised for the A/B in
-        # OPTIMIZATION_r11.md (guide §6.4): shuffle/broadcast codec
-        # (lz4 default — fastest locally where shuffles are CPU-bound;
-        # zstd trades CPU for bytes and wins once shuffle I/O is the
-        # bottleneck at cluster scale) and the parquet write codec for
-        # managed tables (snappy default for the same reason).
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "snappy"),
-        )
+        # HDFS-like stores (object stores use their own committers).
+        .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
+        # Compression codecs (A/B in OPTIMIZATION_r11.md, guide §6.4):
+        # lz4 for shuffle/broadcast — fastest locally where shuffles are
+        # CPU-bound; zstd trades CPU for bytes and wins once shuffle I/O
+        # is the bottleneck at cluster scale — and snappy for managed
+        # parquet tables for the same reason.
+        .config("spark.io.compression.codec", "lz4")
+        .config("spark.sql.parquet.compression.codec", "snappy")
         # Read reference-style partitioned layouts efficiently.
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # Partition discovery: list up to N root paths on the driver
@@ -87,11 +74,8 @@ def get_spark(
         # single largest fixed cost of the DML plane at sf0.1 (r12,
         # guide §1/§6). Local directory listing is microseconds; on
         # object-store deployments where driver listing is the
-        # bottleneck, lower it back via the env override.
-        .config(
-            "spark.sql.sources.parallelPartitionDiscovery.threshold",
-            os.environ.get("SPARK_GRAFT_PART_DISCOVERY_THRESHOLD", "512"),
-        )
+        # bottleneck, lower it back through ``extra_conf``.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
         # managed (bucketed) tables live outside the repo tree

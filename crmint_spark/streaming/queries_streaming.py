@@ -117,7 +117,9 @@ def _events_ndjson_dir(spark: SparkSession, sf_dir: str, dup: bool = False) -> s
 
 def _drain_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
     """Run an availableNow pass into a uniquely named memory sink with a
-    fresh checkpoint; returns the sink table.
+    fresh checkpoint; returns the sink's rows, materialized with
+    ``localCheckpoint`` so the sink's temp view is dropped before
+    returning (a session would otherwise keep every drained sink).
 
     The state-store partition count equals spark.sql.shuffle.partitions
     at first batch and every partition is a checkpointed store (a
@@ -144,7 +146,10 @@ def _drain_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
         q.awaitTermination()
     finally:
         spark.conf.set(key, prev)
-    return spark.table(name)
+    try:
+        return spark.table(name).localCheckpoint()
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 # -- 1. watermarked tumbling-window aggregation ------------------------------

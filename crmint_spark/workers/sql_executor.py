@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame
 
 from ..dialect import (
     ScriptContext,
-    _split_top_level,
     classify_statement,
     expand_create_or_replace_table,
     extract_create_table_layout,
@@ -41,6 +40,15 @@ from ..dml import (
     compile_update,
     parse_dml,
     prepare_merge_views,
+)
+from ..sqllex import (
+    balanced_end,
+    find_top_level,
+    iter_calls,
+    mask,
+    segments,
+    split_top_level,
+    sub_code,
 )
 from .base import Worker, WorkerException
 
@@ -180,8 +188,6 @@ def _relation_aliases(sql: str) -> dict[str, str | None]:
     the indexed table" check refuses to route past an unresolvable
     relation in scope (ADVICE r7). Used by index routing to resolve
     which table a searched column belongs to."""
-    from ..dialect import _balanced_end
-
     out: dict[str, str | None] = {}
 
     def _add(rel: str, alias: str | None) -> None:
@@ -217,7 +223,7 @@ def _relation_aliases(sql: str) -> dict[str, str | None]:
         out[key] = None  # unresolvable base: never route through it
         return end
 
-    masked = re.sub(r"'[^']*'", "''", sql)  # a 'from x' literal is not a scan
+    masked = mask(sql, _NON_IDENT_TOKENS)  # a 'from x' literal is not a scan
     for m in _REL_ALIAS_RE.finditer(masked):
         _add(m.group(1), m.group(2) or m.group(3))
         # comma-continued FROM list: FROM a, b c, (SELECT ...) d
@@ -238,7 +244,7 @@ def _relation_aliases(sql: str) -> dict[str, str | None]:
                 masked[pos + sq.end() : pos + sq.end() + 15],
                 re.IGNORECASE,
             ):
-                close = _balanced_end(masked, pos + sq.end() - 1)
+                close = balanced_end(masked, pos + sq.end() - 1)
                 if close < 0:
                     break
                 pos = _add_subquery_base(close)
@@ -253,7 +259,7 @@ def _relation_aliases(sql: str) -> dict[str, str | None]:
             re.IGNORECASE,
         ):
             continue
-        close = _balanced_end(masked, open_idx)
+        close = balanced_end(masked, open_idx)
         if close < 0:
             continue
         _add_subquery_base(close)
@@ -263,8 +269,6 @@ def _relation_aliases(sql: str) -> dict[str, str | None]:
 def _cte_definitions(sql: str) -> dict[str, str]:
     """name (lowercased) -> body for the statement's leading WITH
     clause (non-recursive, best-effort; '' when absent)."""
-    from ..dialect import _balanced_end
-
     out: dict[str, str] = {}
     m = re.match(r"\s*WITH\b", sql, re.IGNORECASE)
     if not m:
@@ -275,7 +279,7 @@ def _cte_definitions(sql: str) -> dict[str, str]:
         if not m_name:
             return out
         open_idx = i + m_name.end() - 1
-        close = _balanced_end(sql, open_idx)
+        close = balanced_end(sql, open_idx)
         if close < 0:
             return out
         out[m_name.group(1).lower()] = sql[open_idx + 1 : close - 1].strip()
@@ -355,9 +359,7 @@ def _vs_trivial_subset(
         return None
     body = body.strip()
     if body.startswith("(") and body.endswith(")"):
-        from ..dialect import _balanced_end
-
-        if _balanced_end(body, 0) == len(body):
+        if balanced_end(body, 0) == len(body):
             body = body[1:-1].strip()
     m = _VS_TRIVIAL_RE.match(body)
     if not m:
@@ -395,34 +397,27 @@ def _qualify_pred(
     references a name that is neither a base column nor a plain
     literal/function token it is safe to leave — conservative: the
     caller falls back to the exact path."""
-    lits: list[str] = []
-
-    def _mask(m: re.Match) -> str:
-        lits.append(m.group(0))
-        return f"\x00{len(lits) - 1}\x00"
-
-    masked = re.sub(r"'[^']*'", _mask, pred)
     cols = {c.lower() for c in columns}
-    out = []
-    pos = 0
-    for m in re.finditer(r"(?<![\w.`])([A-Za-z_]\w*)(?![\w`(])", masked):
-        out.append(masked[pos : m.start()])
+    unknown = False
+
+    def qualify(m: re.Match) -> str:
+        nonlocal unknown
         tok = m.group(1)
         if tok.lower() in cols:
-            out.append(f"{alias}.`{tok}`")
-        elif tok.upper() in (
+            return f"{alias}.`{tok}`"
+        if tok.upper() not in (
             "AND", "OR", "NOT", "IN", "IS", "NULL", "TRUE", "FALSE",
             "BETWEEN", "LIKE", "RLIKE", "ESCAPE", "DIV",
         ):
-            out.append(tok)
-        else:
-            return None  # unknown bare identifier: don't guess
-        pos = m.end()
-    out.append(masked[pos:])
-    res = "".join(out)
-    for i, lit in enumerate(lits):
-        res = res.replace(f"\x00{i}\x00", lit)
-    return res
+            unknown = True  # unknown bare identifier: don't guess
+        return tok
+
+    out = sub_code(
+        pred,
+        lambda seg: re.sub(r"(?<![\w.`])([A-Za-z_]\w*)(?![\w`(])", qualify, seg),
+        ("string",),
+    )
+    return None if unknown else out
 
 
 # ---------------------------------------------------------------------------
@@ -580,26 +575,13 @@ def _split_columns_angle_aware(text: str) -> list[str]:
     splitter broke valid partitioned CREATEs) — and skips comments and
     string literals (round-11 verify probe: a ``--`` comment between
     declarations, or a comma inside a ``DEFAULT 'a,b'`` literal, broke
-    the split). Comment text is dropped from the returned parts so the
+    the split). Comment text is blanked in the returned parts so the
     per-column regex never sees it."""
-    from ..dialect import _skip_comment, _skip_string
-
+    text = mask(text, ("hint", "comment"))
     parts: list[str] = []
-    buf: list[str] = []
-    depth = angle = 0
-    i, n = 0, len(text)
-    while i < n:
-        j = _skip_comment(text, i)
-        if j > i:
-            buf.append(" ")
-            i = j
-            continue
-        ch = text[i]
-        if ch in ("'", '"', "`"):
-            j = _skip_string(text, i)
-            buf.append(text[i:j])
-            i = j
-            continue
+    start = depth = angle = 0
+    for m in re.finditer(r"[()<>,]", mask(text)):
+        ch = m.group()
         if ch == "(":
             depth += 1
         elif ch == ")":
@@ -608,14 +590,10 @@ def _split_columns_angle_aware(text: str) -> list[str]:
             angle += 1
         elif ch == ">":
             angle = max(0, angle - 1)
-        elif ch == "," and depth == 0 and angle == 0:
-            parts.append("".join(buf))
-            buf = []
-            i += 1
-            continue
-        buf.append(ch)
-        i += 1
-    parts.append("".join(buf))
+        elif depth == 0 and angle == 0:
+            parts.append(text[start : m.start()])
+            start = m.end()
+    parts.append(text[start:])
     return [p.strip() for p in parts if p.strip()]
 
 
@@ -671,17 +649,15 @@ def _fill_values_defaults(
     column declares none — BigQuery semantics). Non-VALUES sources
     (SELECT/WITH) pass through untouched; ``DEFAULT`` is not a valid
     scalar there."""
-    from ..dialect import _split_top_level
-
     m = re.match(r"\s*VALUES\b", source_sql, re.IGNORECASE)
     if not m or not re.search(r"(?i)(?<![\w.`])DEFAULT(?![\w$])", source_sql):
         return source_sql
     rows_out = []
-    for tup in _split_top_level(source_sql[m.end():]):
+    for tup in split_top_level(source_sql[m.end():]):
         tup = tup.strip()
         if not (tup.startswith("(") and tup.endswith(")")):
             return source_sql  # not a plain tuple list — leave as-is
-        items = [i.strip() for i in _split_top_level(tup[1:-1])]
+        items = [i.strip() for i in split_top_level(tup[1:-1])]
         for idx, item in enumerate(items):
             if item.upper() == "DEFAULT":
                 col = cols[idx] if idx < len(cols) else None
@@ -710,17 +686,9 @@ def _adopt_column_decls(df, decls: list[tuple[str, str]], table_id: str):
     )
 
 
-def _mask_literals_same_length(sql: str) -> str:
-    """String literals blanked to spaces (offsets preserved) so textual
-    scans never match keywords inside them. Both quote styles mask:
-    BigQuery (and Spark) read double-quoted text as STRINGS, so a
-    predicate like ``name = "current_date"`` must not look like a
-    now-function to the pruned-DML freezer (review finding r8)."""
-    return re.sub(
-        r"'[^']*'|\"[^\"]*\"",
-        lambda m: m.group(0)[0] + " " * (len(m.group(0)) - 2) + m.group(0)[0],
-        sql,
-    )
+#: the token kinds blanked where a scan reads backtick names as code
+#: (``JOIN `p.d.t` ON``, ``t.`col```): comments, hints and strings
+_NON_IDENT_TOKENS = ("hint", "comment", "string")
 
 
 _SCOPE_END_RE = re.compile(
@@ -748,54 +716,21 @@ _NOW_FN_RE = re.compile(
 )
 
 
-def _split_options_pairs(body: str) -> list[str]:
-    """Split an OPTIONS body on top-level commas — paren, BRACKET and
-    string aware (``labels = [("k","v"), ("k2","v2")]`` is one pair;
-    the shared ``_split_top_level`` is bracket-blind — review finding
-    r8)."""
-    out: list[str] = []
-    start = depth = 0
-    i, n = 0, len(body)
-    while i < n:
-        ch = body[i]
-        if ch in ("'", '"', "`"):
-            j = i + 1
-            while j < n and body[j] != ch:
-                j += 1
-            i = j + 1
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            out.append(body[start:i])
-            start = i + 1
-        i += 1
-    out.append(body[start:])
-    return [p for p in out if p.strip()]
-
-
 def _extract_options_kv(sql: str) -> dict | None:
     """The top-level ``OPTIONS(k = v, ...)`` clause of a CREATE/ALTER
     statement as a dict with typed values (bool/number/string; NULL ->
     None so ALTER can clear an option; anything else kept as raw
     text). None when the statement carries no OPTIONS clause."""
-    from ..dialect import _balanced_end, _find_top_level
-
-    masked = _mask_literals_same_length(sql)
     # top-level only: a column-level `x STRING OPTIONS(...)` inside the
     # schema parens is NOT the table's OPTIONS clause
-    m = _find_top_level(
-        masked, re.compile(r"\bOPTIONS\s*\(", re.IGNORECASE)
-    )
+    m = find_top_level(sql, re.compile(r"\bOPTIONS\s*\(", re.IGNORECASE))
     if not m:
         return None
-    end = _balanced_end(sql, m.end() - 1)
+    end = balanced_end(sql, m.end() - 1)
     if end < 0:
         return None
     out: dict = {}
-    for pair in _split_options_pairs(sql[m.end() : end - 1]):
+    for pair in split_top_level(sql[m.end() : end - 1]):
         pm = re.match(r"\s*(\w+)\s*=\s*(.+?)\s*$", pair, re.DOTALL)
         if not pm:
             continue
@@ -929,7 +864,7 @@ def _partition_filter_conjunct(
         ref = rf"(?:\b{re.escape(alias)}\s*\.\s*)?`?\b{re.escape(col)}\b`?"
     else:
         ref = rf"\b{re.escape(alias)}\s*\.\s*`?\b{re.escape(col)}\b`?"
-    masked = _mask_literals_same_length(conj)
+    masked = mask(conj, _NON_IDENT_TOKENS)
     if not re.search(ref, masked, re.IGNORECASE):
         return False
     return bool(_ELIM_OP_RE.search(masked))
@@ -977,36 +912,28 @@ def _scope_where(masked: str, start: int) -> tuple[int, int] | None:
     return (ws, n) if ws is not None else None
 
 
+_CONJ_TOKEN_RE = re.compile(r"[()]|(?<![\w.])(?:AND|OR|BETWEEN)\b", re.IGNORECASE)
+
+
 def _split_conjuncts(clause: str) -> list[str]:
     """Top-level AND split, paren- and string-aware, NOT splitting the
     AND that belongs to a BETWEEN."""
-    from ..dialect import _balanced_end, _skip_string
-
     parts: list[str] = []
-    i, n, seg_start = 0, len(clause), 0
-    between = 0
-    while i < n:
-        ch = clause[i]
-        if ch in ("'", '"', "`"):
-            i = _skip_string(clause, i)
+    seg_start = depth = between = 0
+    for m in _CONJ_TOKEN_RE.finditer(mask(clause)):
+        kw = m.group().upper()
+        if kw in "()":
+            depth = depth + 1 if kw == "(" else max(depth - 1, 0)
+        elif depth:
             continue
-        if ch == "(":
-            i = max(_balanced_end(clause, i), i + 1)
-            continue
-        m = re.match(r"(AND|OR|BETWEEN)\b", clause[i:], re.IGNORECASE)
-        if m and (i == 0 or not (clause[i - 1].isalnum() or clause[i - 1] in "_.")):
-            kw = m.group(1).upper()
-            if kw == "BETWEEN":
-                between += 1
-            elif kw == "AND":
-                if between:
-                    between -= 1
-                else:
-                    parts.append(clause[seg_start:i])
-                    seg_start = i + 3
-            i += m.end()
-            continue
-        i += 1
+        elif kw == "BETWEEN":
+            between += 1
+        elif kw == "AND":
+            if between:
+                between -= 1
+            else:
+                parts.append(clause[seg_start : m.start()])
+                seg_start = m.end()
     parts.append(clause[seg_start:])
     return [p.strip() for p in parts if p.strip()]
 
@@ -1044,7 +971,10 @@ def _is_constant_expr(text: str) -> bool:
     directly after ``,`` or as an INTERVAL qualifier, a bare
     CURRENT_DATE/..., or NULL/TRUE/FALSE. Conservative by construction
     — an unjustified token means no pruning, never wrong pruning."""
-    t = re.sub(r"'[^']*'", "''", text)
+    # every string literal collapses to '' (typed literals stay visible)
+    t = "".join(
+        code + ("''" if lit else "") for code, lit in segments(text, ("string",))
+    )
     if ";" in t or re.search(r"\b(SELECT|FROM)\b", t, re.IGNORECASE):
         return False
     # INTERVAL <n> <unit> consumed as a unit (the unit word would
@@ -1092,10 +1022,8 @@ def _derive_partition_conjunct(
       expression, so the op and bound apply VERBATIM (exact, strict ops
       included).
     """
-    from ..dialect import _balanced_end
-
     c = conj.strip()
-    while c.startswith("(") and _balanced_end(c, 0) == len(c):
+    while c.startswith("(") and balanced_end(c, 0) == len(c):
         c = c[1:-1].strip()
 
     def lhs_kind(lhs: str) -> str | None:
@@ -1118,13 +1046,11 @@ def _derive_partition_conjunct(
 
     # LHS IN (lit, ...)
     m = re.match(r"^(.*?)\s+IN\s*\(", c, re.IGNORECASE | re.DOTALL)
-    if m and _balanced_end(c, m.end() - 1) == len(c):
+    if m and balanced_end(c, m.end() - 1) == len(c):
         kind = lhs_kind(m.group(1))
         if kind is None:
             return None
-        from ..dialect import _split_top_level
-
-        items = _split_top_level(c[m.end() : -1])
+        items = split_top_level(c[m.end() : -1])
         if not items or not all(_is_constant_expr(x) for x in items):
             return None
         vals = [x.strip() if kind == "expr" else g(x) for x in items]
@@ -1578,9 +1504,7 @@ class SparkSQLExecutor(Worker):
             re.IGNORECASE,
         )
         if m:
-            from ..dialect import _balanced_end
-
-            if _balanced_end(sub, sub.index("(", m.end() - 1)) == -1:
+            if balanced_end(sub, sub.index("(", m.end() - 1)) == -1:
                 raise WorkerException(
                     f"unbalanced OPTIONS in: {sub[:120]!r}"
                 )
@@ -1593,11 +1517,9 @@ class SparkSQLExecutor(Worker):
             # STRING must stay metadata-only (review finding r7b).
             tt = None
             if m.group(1).upper() == "SCHEMA":
-                from ..dialect import _split_top_level
-
                 body_start = sub.index("(", m.end() - 1)
-                body_end = _balanced_end(sub, body_start)
-                for pair in _split_top_level(
+                body_end = balanced_end(sub, body_start)
+                for pair in split_top_level(
                     sub[body_start + 1 : body_end - 1]
                 ):
                     km = re.match(
@@ -1745,11 +1667,7 @@ class SparkSQLExecutor(Worker):
         length, so offsets map back), and the \\b anchor rejects
         keyword substrings of identifiers like ``sort_order`` — review
         findings r8."""
-        from ..dialect import _find_top_level, blank_comments_same_length
-
-        m = _find_top_level(
-            blank_comments_same_length(text), self._JOIN_ELIM_TAIL_KW, start
-        )
+        m = find_top_level(text, self._JOIN_ELIM_TAIL_KW, start)
         return m.start() if m else len(text)
 
     _JOIN_CLAUSE_RE = re.compile(
@@ -1793,13 +1711,11 @@ class SparkSQLExecutor(Worker):
         any ``JOIN`` token is NOT part of a parsed top-level clause
         (nested subquery joins, comma-elided ON, exotic forms) — the
         eliminator must see the whole join list or touch nothing."""
-        from ..dialect import _find_top_level, blank_comments_same_length
-
-        masked = blank_comments_same_length(_mask_literals_same_length(sub))
+        masked = mask(sub, _NON_IDENT_TOKENS)
         out: list[re.Match] = []
         pos = 0
         while True:
-            m = _find_top_level(masked, self._JOIN_CLAUSE_RE, pos)
+            m = find_top_level(masked, self._JOIN_CLAUSE_RE, pos)
             if m is None:
                 break
             out.append(m)
@@ -1813,14 +1729,7 @@ class SparkSQLExecutor(Worker):
         """AND ``conj`` into the statement's top-level WHERE clause,
         creating one before the first tail keyword (GROUP/ORDER/...)
         if absent."""
-        from ..dialect import _find_top_level, blank_comments_same_length
-
-        blanked = blank_comments_same_length(
-            _mask_literals_same_length(stmt)
-        )
-        m = _find_top_level(
-            blanked, re.compile(r"\bWHERE\b", re.IGNORECASE)
-        )
+        m = find_top_level(stmt, re.compile(r"\bWHERE\b", re.IGNORECASE))
         if m:
             w_end = self._scan_to_top_keyword(stmt, m.end())
             body = stmt[m.end() : w_end].strip()
@@ -1836,7 +1745,7 @@ class SparkSQLExecutor(Worker):
         """One pass of the eliminator: drop the FIRST top-level join
         provably redundant under the declared keys; None when no join
         qualifies (the statement is left untouched)."""
-        masked = _mask_literals_same_length(sub)
+        masked = mask(sub, _NON_IDENT_TOKENS)
         # SEMI/ANTI excluded explicitly: 'LEFT SEMI JOIN' would slip
         # past the LEFT-capture below (the optional group matches empty
         # before JOIN) and be treated as INNER — eliminating a LEFT
@@ -1951,7 +1860,7 @@ class SparkSQLExecutor(Worker):
         # `cname` are visible to the scans (review finding r8); string
         # literals mask first so quotes can't hide references either.
         remainder = sub[: jm.start()] + " " + sub[on_end:]
-        rem_masked = _mask_literals_same_length(remainder).replace("`", " ")
+        rem_masked = mask(remainder, _NON_IDENT_TOKENS).replace("`", " ")
         sel_list = re.split(r"\bFROM\b", rem_masked, flags=re.IGNORECASE)[0]
         if re.search(
             r"SELECT\s+(?:DISTINCT\s+)?\*", sel_list, re.IGNORECASE
@@ -2113,7 +2022,6 @@ class SparkSQLExecutor(Worker):
         import json
         import shutil
 
-        from ..dialect import _split_top_level
         from ..schema import _TYPE_MAP
 
         spark = self._ctx.spark
@@ -2400,7 +2308,7 @@ class SparkSQLExecutor(Worker):
             from pyspark.sql import functions as F
 
             df = cat.read(name)
-            for part in _split_top_level(
+            for part in split_top_level(
                 re.sub(r"\bADD\s+COLUMN\s+", "", action, flags=re.IGNORECASE)
             ):
                 cm = re.match(
@@ -2835,10 +2743,8 @@ class SparkSQLExecutor(Worker):
             opts: dict[str, str] = {}
             mo = re.search(r"OPTIONS\s*\(", rest, re.IGNORECASE)
             if mo:
-                from ..dialect import _balanced_end, _split_top_level
-
-                end = _balanced_end(rest, mo.end() - 1)
-                for kv in _split_top_level(rest[mo.end() : end - 1]):
+                end = balanced_end(rest, mo.end() - 1)
+                for kv in split_top_level(rest[mo.end() : end - 1]):
                     mk = re.match(r"\s*(\w+)\s*=\s*(.+)$", kv, re.DOTALL)
                     if mk:
                         opts[mk.group(1).lower()] = (
@@ -3083,15 +2989,13 @@ class SparkSQLExecutor(Worker):
         """(mv_name, defining query) for a CREATE MATERIALIZED VIEW
         statement, else None (OPTIONS skipped with the balanced
         scanner, mirroring the dialect's CTAS rewrite)."""
-        from ..dialect import _balanced_end
-
         m = self._MV_CREATE_RE.match(sub)
         if not m:
             return None
         rest = sub[m.end() :]
         mo = re.match(r"OPTIONS\s*\(", rest, re.IGNORECASE)
         if mo:
-            end = _balanced_end(rest, mo.end() - 1)
+            end = balanced_end(rest, mo.end() - 1)
             if end > 0:
                 rest = rest[end:].lstrip()
         ma = re.match(r"AS\b(.*)$", rest, re.IGNORECASE | re.DOTALL)
@@ -3114,17 +3018,11 @@ class SparkSQLExecutor(Worker):
         """Whitespace-collapsed, case-folded OUTSIDE string literals —
         two statements normalize equal iff they are the same query up
         to spacing/keyword case (differing literals never match)."""
-        lits: list[str] = []
-
-        def _mask(m: re.Match) -> str:
-            lits.append(m.group(0))
-            return f"\x00{len(lits) - 1}\x00"
-
-        t = re.sub(r"'[^']*'", _mask, q.strip().rstrip(";").strip())
-        t = re.sub(r"\s+", " ", t).lower()
-        for i, lit in enumerate(lits):
-            t = t.replace(f"\x00{i}\x00", lit)
-        return t.strip()
+        return sub_code(
+            q.strip().rstrip(";").strip(),
+            lambda seg: re.sub(r"\s+", " ", seg).lower(),
+            ("string",),
+        ).strip()
 
     def _base_fingerprints(self, query: str) -> dict[str, str]:
         """Base catalog table -> directory fingerprint at MV
@@ -3183,17 +3081,11 @@ class SparkSQLExecutor(Worker):
         MAX compose as themselves, COUNT composes as SUM of the
         partial counts); HAVING conjuncts compose over the same
         mapping and filter after re-aggregation."""
-        from ..dialect import (
-            _find_top_level,
-            _split_top_level,
-            blank_comments_same_length,
-        )
-
         s = q.strip().rstrip(";").strip()
-        blanked = blank_comments_same_length(_mask_literals_same_length(s))
+        blanked = mask(s, _NON_IDENT_TOKENS)
         if not re.match(r"SELECT\b", blanked, re.IGNORECASE):
             return None
-        mf = _find_top_level(
+        mf = find_top_level(
             blanked, re.compile(r"\bFROM\b", re.IGNORECASE), 6
         )
         if not mf:
@@ -3201,17 +3093,17 @@ class SparkSQLExecutor(Worker):
         items_raw = s[6 : mf.start()]
         if re.match(r"\s*DISTINCT\b", items_raw, re.IGNORECASE):
             return None
-        mg = _find_top_level(
+        mg = find_top_level(
             blanked, re.compile(r"\bGROUP\s+BY\b", re.IGNORECASE), mf.end()
         )
-        mt0 = _find_top_level(blanked, self._AGG_SHAPE_TAIL_KW, mf.end())
+        mt0 = find_top_level(blanked, self._AGG_SHAPE_TAIL_KW, mf.end())
         # GROUP-BY-less global aggregate (round 10, VERDICT r9 #3):
         # the one-row dashboard tile `SELECT SUM(v) FROM t` — parsed
         # with empty keys; containment then re-aggregates the whole MV
         gb_limit = (
             mg.start() if mg else (mt0.start() if mt0 else len(s))
         )
-        mw = _find_top_level(
+        mw = find_top_level(
             blanked, re.compile(r"\bWHERE\b", re.IGNORECASE), mf.end()
         )
         if mw and mw.start() > gb_limit:
@@ -3231,7 +3123,7 @@ class SparkSQLExecutor(Worker):
             self._normalize_query(where_raw) if where_raw else None
         )
         if mg:
-            mt = _find_top_level(
+            mt = find_top_level(
                 blanked, self._AGG_SHAPE_TAIL_KW, mg.end()
             )
             gb_end = mt.start() if mt else len(s)
@@ -3245,11 +3137,8 @@ class SparkSQLExecutor(Worker):
             # #3): conjuncts of `AGG(col) <cmp> literal` or
             # `<agg output name> <cmp> literal` — anything else keeps
             # the shape unusable (conservative)
-            from ..dialect import blank_comments_same_length as _bc
-
-            t_blank = _bc(_mask_literals_same_length(tail))
-            m_rest = _find_top_level(
-                t_blank,
+            m_rest = find_top_level(
+                tail,
                 re.compile(r"\b(?:ORDER\s+BY|LIMIT)\b", re.IGNORECASE),
                 m_h.end(),
             )
@@ -3318,7 +3207,7 @@ class SparkSQLExecutor(Worker):
         keys: dict[str, str] = {}
         aggs: dict[str, tuple[str, str]] = {}
         order: list[tuple[str, str]] = []
-        for item in _split_top_level(items_raw):
+        for item in split_top_level(items_raw):
             it = item.strip()
             m_agg = re.fullmatch(
                 r"(SUM|COUNT|MIN|MAX)\s*\(\s*([^()]*?)\s*\)\s+AS\s+(\w+)",
@@ -3368,7 +3257,7 @@ class SparkSQLExecutor(Worker):
             # every key item must be grouped (names, source cols or
             # 1-based ordinals), and nothing else
             gb_terms = [
-                t.strip() for t in _split_top_level(s[mg.end() : gb_end])
+                t.strip() for t in split_top_level(s[mg.end() : gb_end])
             ]
             grouped: set[str] = set()
             for t in gb_terms:
@@ -3574,7 +3463,7 @@ class SparkSQLExecutor(Worker):
         and BETWEEN-aware (the AND of ``x BETWEEN a AND b`` is not a
         conjunction boundary; a literal containing ' AND ' is masked
         before scanning)."""
-        masked = _mask_literals_same_length(pred)
+        masked = mask(pred, _NON_IDENT_TOKENS)
         upper = masked.upper()  # once, not per character position
         parts: list[str] = []
         start = 0
@@ -3762,8 +3651,6 @@ class SparkSQLExecutor(Worker):
         store = self._mv_store()
         if not store:
             return sub
-        from ..dialect import _sub_outside_strings
-
         memo: dict[str, bool] = {}
         # fixpoint over nesting (an MV defined over another MV): each
         # pass may expose one more stale reference; bounded by the
@@ -3815,9 +3702,7 @@ class SparkSQLExecutor(Worker):
                 # (EXECUTE IMMEDIATE payloads) must not be touched —
                 # the dynamic statement gets its own routing when run;
                 # code_backticks keeps `p.d.mv` references in CODE
-                new = _sub_outside_strings(
-                    sub, seg_sub, code_backticks=True
-                )
+                new = sub_code(sub, seg_sub, ("string",))
                 if new != sub:
                     self.log_info(
                         f"MATERIALIZED VIEW {name} is stale — direct"
@@ -3845,7 +3730,7 @@ class SparkSQLExecutor(Worker):
         cat = self._ctx.catalog
         if cat is None or not cat.has_layouts():
             return sub
-        masked = _mask_literals_same_length(sub)
+        masked = mask(sub, _NON_IDENT_TOKENS)
         aliases = None
         edits: list[tuple[int, int, str]] = []
         for m in _REL_ALIAS_RE.finditer(masked):
@@ -3932,9 +3817,7 @@ class SparkSQLExecutor(Worker):
         schema_text = None
         ms = re.match(r"\s*\(", rest)
         if ms:
-            from ..dialect import _balanced_end
-
-            send = _balanced_end(rest, ms.end() - 1)
+            send = balanced_end(rest, ms.end() - 1)
             schema_text = rest[ms.end() : send - 1]
             rest = rest[send:]
         # ``stmt`` is already transpiled — declared types AND any
@@ -4121,7 +4004,7 @@ class SparkSQLExecutor(Worker):
         cat = self._ctx.catalog
         if cat is None or not cat.has_table_options():
             return
-        masked = _mask_literals_same_length(sub)
+        masked = mask(sub, _NON_IDENT_TOKENS)
         # every base-relation reference: FROM/JOIN heads AND their
         # comma continuations (review finding r8: a comma-listed
         # guarded table silently escaped the guard)
@@ -4190,18 +4073,16 @@ class SparkSQLExecutor(Worker):
         CHANGES (no ``TABLE`` first argument) pass through."""
         import uuid
 
-        from ..dialect import _balanced_end
-
         cat, spark = self._ctx.catalog, self._ctx.spark
         if cat is None:
             return sub
-        masked = _mask_literals_same_length(sub)
+        masked = mask(sub, _NON_IDENT_TOKENS)
         pat = re.compile(r"\b(APPENDS|CHANGES)\s*\(", re.IGNORECASE)
         for m in reversed(list(pat.finditer(masked))):
-            end = _balanced_end(sub, m.end() - 1)
+            end = balanced_end(sub, m.end() - 1)
             if end < 0:
                 continue
-            args = _split_top_level(sub[m.end() : end - 1])
+            args = split_top_level(sub[m.end() : end - 1])
             if not args:
                 continue
             tm = re.match(
@@ -4260,7 +4141,6 @@ class SparkSQLExecutor(Worker):
         table keeps the (always-correct) scan rewrite. Falls through
         likewise when the column is unindexed, the query is not a
         literal, or the query has no tokens (vacuous TRUE)."""
-        from ..dialect import _iter_calls, _split_top_level
         from ..operators.text import SEARCH_INDEX_BUCKETS, search_bucket
 
         store = self._index_store()
@@ -4272,10 +4152,10 @@ class SparkSQLExecutor(Worker):
         if not search_indexes:
             return sub
 
-        calls = list(_iter_calls(sub, ("SEARCH",)))
+        calls = list(iter_calls(sub, ("SEARCH",)))
         if calls and re.search(
             r"\bFOR\s+SYSTEM_TIME\s+AS\s+OF\b",
-            _mask_literals_same_length(sub),
+            mask(sub, _NON_IDENT_TOKENS),
             re.IGNORECASE,
         ):
             # a time-travel read must NEVER serve from an index
@@ -4299,7 +4179,7 @@ class SparkSQLExecutor(Worker):
         aliases = _relation_aliases(sub) if calls else {}
         ctes = _cte_definitions(sub) if calls else {}
         for start, op, end, _name in reversed(calls):
-            args = _split_top_level(sub[op + 1 : end - 1])
+            args = split_top_level(sub[op + 1 : end - 1])
             # 2-arg = LOG_ANALYZER default; the named 3-arg analyzer
             # form routes too when an index with the SAME analyzer
             # exists (round 10, VERDICT r9 #3: the semantically
@@ -4482,8 +4362,6 @@ class SparkSQLExecutor(Worker):
         import math
 
         from ..dialect import (
-            _iter_calls,
-            _split_top_level,
             _vs_distance,
             transpile_statement,
         )
@@ -4498,10 +4376,10 @@ class SparkSQLExecutor(Worker):
         if not vector_indexes:
             return sub
 
-        calls = list(_iter_calls(sub, ("VECTOR_SEARCH",)))
+        calls = list(iter_calls(sub, ("VECTOR_SEARCH",)))
         if calls and re.search(
             r"\bFOR\s+SYSTEM_TIME\s+AS\s+OF\b",
-            _mask_literals_same_length(sub),
+            mask(sub, _NON_IDENT_TOKENS),
             re.IGNORECASE,
         ):
             return sub  # time-travel reads never serve from snapshots
@@ -4521,7 +4399,7 @@ class SparkSQLExecutor(Worker):
             }
         ctes = _cte_definitions(sub) if calls else {}
         for start, op, end, _name in reversed(calls):
-            raw_args = _split_top_level(sub[op + 1 : end - 1])
+            raw_args = split_top_level(sub[op + 1 : end - 1])
             if len(raw_args) < 3:
                 continue
             m_t = re.match(
@@ -4741,20 +4619,18 @@ class SparkSQLExecutor(Worker):
         and are spliced per call."""
         import json
 
-        from ..dialect import _balanced_end, _split_top_level
-
         m = self._CREATE_TVF_RE.match(sub)
         if not m:
             return False
         name, params_raw = m.group(1), m.group(2)
-        body_end = _balanced_end(sub, m.end() - 1)
+        body_end = balanced_end(sub, m.end() - 1)
         if body_end < 0:
             raise WorkerException("CREATE TABLE FUNCTION: unbalanced body")
         body = transpile_statement(
             sub[m.end(): body_end - 1].strip(), self._resolver()
         )
         names: list[str] = []
-        for part in _split_top_level(params_raw):
+        for part in split_top_level(params_raw):
             part = part.strip()
             if not part:
                 continue
@@ -4781,13 +4657,6 @@ class SparkSQLExecutor(Worker):
         """Rewrite ``f(args)`` call sites of stored table functions into
         parenthesized subqueries with the argument expressions spliced
         for the parameter names (word-boundary, outside strings)."""
-        from ..dialect import (
-            _balanced_end,
-            _skip_comment,
-            _skip_string,
-            _split_top_level,
-        )
-
         store = self._tvf_store()
         if not store:
             return sub
@@ -4803,30 +4672,15 @@ class SparkSQLExecutor(Worker):
                     r"(`" + re.escape(name) + r"`|(?<![\w.`])"
                     + re.escape(name) + r")\s*\(",
                 )
-                pos = 0
-                site = None
-                while pos < len(sub):
-                    j = _skip_comment(sub, pos)
-                    if j > pos:
-                        pos = j
-                        continue
-                    ch = sub[pos]
-                    if ch in ("'", '"'):
-                        pos = _skip_string(sub, pos)
-                        continue
-                    m = pat.match(sub, pos)
-                    if m:
-                        site = m
-                        break
-                    pos += 1
+                site = pat.search(mask(sub, _NON_IDENT_TOKENS))
                 if site is None:
                     continue
-                end = _balanced_end(sub, site.end() - 1)
+                end = balanced_end(sub, site.end() - 1)
                 if end < 0:
                     continue
                 args = [
                     a.strip()
-                    for a in _split_top_level(sub[site.end(): end - 1])
+                    for a in split_top_level(sub[site.end(): end - 1])
                     if a.strip()
                 ]
                 if len(args) != len(spec["params"]):
@@ -4862,9 +4716,7 @@ class SparkSQLExecutor(Worker):
 
         from ..dialect import (
             _JS_FN_RE,
-            _balanced_end,
             _js_body_to_sql,
-            _split_top_level,
         )
 
         m = self._CREATE_FN_RE.match(sub)
@@ -4881,11 +4733,11 @@ class SparkSQLExecutor(Worker):
                 " name; use CREATE TEMP FUNCTION for session-scoped"
                 " functions"
             )
-        params_end = _balanced_end(sub, m.end() - 1)
+        params_end = balanced_end(sub, m.end() - 1)
         if params_end < 0:
             raise WorkerException("CREATE FUNCTION: unbalanced parameters")
         names: list[str] = []
-        for part in _split_top_level(sub[m.end(): params_end - 1]):
+        for part in split_top_level(sub[m.end(): params_end - 1]):
             part = part.strip()
             if not part:
                 continue
@@ -4942,7 +4794,7 @@ class SparkSQLExecutor(Worker):
                         "CREATE FUNCTION: expected AS (expression)"
                     )
                 body_open = params_end + m_as.end() - 1
-            body_end = _balanced_end(sub, body_open)
+            body_end = balanced_end(sub, body_open)
             if body_end < 0:
                 raise WorkerException("CREATE FUNCTION: unbalanced body")
             raw = sub[body_open + 1: body_end - 1].strip()
@@ -4974,13 +4826,7 @@ class SparkSQLExecutor(Worker):
         functions into parenthesized expressions with the argument
         texts spliced for the parameter names; a declared RETURNS type
         becomes an outer CAST (BigQuery coerces the body result)."""
-        from ..dialect import (
-            _balanced_end,
-            _map_bq_types,
-            _skip_comment,
-            _skip_string,
-            _split_top_level,
-        )
+        from ..dialect import _map_bq_types
 
         store = self._fn_store()
         if not store:
@@ -4994,29 +4840,15 @@ class SparkSQLExecutor(Worker):
                     r"(`" + re.escape(name) + r"`|(?<![\w.`])"
                     + re.escape(name) + r")\s*\(",
                 )
-                pos = 0
-                site = None
-                while pos < len(sub):
-                    j = _skip_comment(sub, pos)
-                    if j > pos:
-                        pos = j
-                        continue
-                    if sub[pos] in ("'", '"'):
-                        pos = _skip_string(sub, pos)
-                        continue
-                    m = pat.match(sub, pos)
-                    if m:
-                        site = m
-                        break
-                    pos += 1
+                site = pat.search(mask(sub, _NON_IDENT_TOKENS))
                 if site is None:
                     continue
-                end = _balanced_end(sub, site.end() - 1)
+                end = balanced_end(sub, site.end() - 1)
                 if end < 0:
                     continue
                 args = [
                     a.strip()
-                    for a in _split_top_level(sub[site.end(): end - 1])
+                    for a in split_top_level(sub[site.end(): end - 1])
                     if a.strip()
                 ]
                 if len(args) != len(spec["params"]):
@@ -5047,23 +4879,13 @@ class SparkSQLExecutor(Worker):
 
     @staticmethod
     def _splice_word(sql: str, name: str, replacement: str) -> str:
-        from ..dialect import _skip_string
-
         pat = re.compile(rf"(?<![\w$.`]){re.escape(name)}(?![\w$])")
         out: list[str] = []
         pos = 0
-        i, n = 0, len(sql)
-        while i < n:
-            if sql[i] in ("'", '"', "`"):
-                i = _skip_string(sql, i)
-                continue
-            m = pat.match(sql, i)
-            if m:
-                out.append(sql[pos:i])
-                out.append(replacement)
-                pos = i = m.end()
-                continue
-            i += 1
+        for m in pat.finditer(mask(sql)):
+            out.append(sql[pos : m.start()])
+            out.append(replacement)
+            pos = m.end()
         out.append(sql[pos:])
         return "".join(out)
 
@@ -5093,13 +4915,13 @@ class SparkSQLExecutor(Worker):
         procedure."""
         import json
 
-        from ..dialect import _split_top_level, parse_script_block
+        from ..dialect import parse_script_block
 
         m = self._CREATE_PROC_RE.match(raw_stmt)
         if m:
             name, params_raw, body = m.group(1), m.group(2), m.group(3)
             sig: list[tuple[str, str]] = []
-            for part in _split_top_level(params_raw):
+            for part in split_top_level(params_raw):
                 part = part.strip()
                 if not part:
                     continue
@@ -5174,7 +4996,7 @@ class SparkSQLExecutor(Worker):
             self.log_info(f"CALL {name} validated (dry run)")
             return True
         sig = [tuple(p) for p in store[name]["sig"]]
-        args = [a.strip() for a in _split_top_level(args_raw) if a.strip()]
+        args = [a.strip() for a in split_top_level(args_raw) if a.strip()]
         if len(args) != len(sig):
             raise WorkerException(
                 f"CALL {name}: expected {len(sig)} args, got {len(args)}"
@@ -5809,7 +5631,6 @@ class SparkSQLExecutor(Worker):
         routing chain; INTO captures the first result row into script
         variables. Returns None if not an EXECUTE IMMEDIATE."""
         from ..dialect import (
-            _split_top_level,
             splice_query_params,
             transpile_statement as _transpile,
         )
@@ -5818,13 +5639,11 @@ class SparkSQLExecutor(Worker):
         if not m:
             return None
         spark = self._ctx.spark
-        from ..dialect import blank_comments_same_length as _blank_comments
-
         # comments are blanked (string-aware) FIRST: an INTO/USING word
         # inside a trailing comment mis-split the statement, and an
         # apostrophe or trailing `--` would corrupt the parenthesized
         # expression wraps below (round-10 review wave 2)
-        body = _blank_comments(m.group(1)).strip().rstrip(";").strip()
+        body = mask(m.group(1), ("hint", "comment")).strip().rstrip(";").strip()
         # split off top-level INTO / USING clauses (scan outside strings
         # and parens via the dialect's top-level splitter on a sentinel)
         into_vars: list[str] = []
@@ -5848,7 +5667,7 @@ class SparkSQLExecutor(Worker):
             )
         params: dict[str, object] = {}
         if using_raw:
-            for part in _split_top_level(using_raw):
+            for part in split_top_level(using_raw):
                 pm = re.match(
                     r"(.+?)\s+AS\s+(\w+)\s*$", part.strip(),
                     re.IGNORECASE | re.DOTALL,
@@ -5890,26 +5709,10 @@ class SparkSQLExecutor(Worker):
     def _clause_split(body: str, keyword: str) -> "tuple[str, str] | None":
         """Split ``body`` at a TOP-LEVEL (outside strings/parens)
         trailing ``keyword`` clause; -> (head, clause_text) or None."""
-        from ..dialect import _skip_string
-
-        pat = re.compile(rf"\b{keyword}\b", re.IGNORECASE)
-        depth = 0
-        i, n = 0, len(body)
-        while i < n:
-            ch = body[i]
-            if ch in ("'", '"', "`"):
-                i = _skip_string(body, i)
-                continue
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0:
-                mm = pat.match(body, i)
-                if mm:
-                    return body[:i].strip(), body[mm.end():].strip()
-            i += 1
-        return None
+        mm = find_top_level(body, re.compile(rf"\b{keyword}\b", re.IGNORECASE))
+        if mm is None:
+            return None
+        return body[: mm.start()].strip(), body[mm.end() :].strip()
 
     # -- BigQuery CREATE EXTERNAL TABLE ----------------------------------
 
@@ -5927,7 +5730,7 @@ class SparkSQLExecutor(Worker):
         the copying twin). CSV (skip_leading_rows/field_delimiter),
         NDJSON, parquet and ORC; the optional column list maps BigQuery
         types through the engine's type table."""
-        from ..dialect import _balanced_end, _map_bq_types
+        from ..dialect import _map_bq_types
         from ..catalog import _safe_view_name
         from ..ml.sql_ml import _parse_options
 
@@ -5935,7 +5738,7 @@ class SparkSQLExecutor(Worker):
         if not m:
             return False
         name, schema_raw = m.group(1), m.group(2)
-        end = _balanced_end(sub, m.end() - 1)
+        end = balanced_end(sub, m.end() - 1)
         if end < 0:
             raise WorkerException(
                 "CREATE EXTERNAL TABLE: unbalanced OPTIONS(...)"
@@ -6051,14 +5854,14 @@ class SparkSQLExecutor(Worker):
     def _try_export_load(self, sub: str, resolver) -> bool:
         import os
 
-        from ..dialect import _balanced_end, transpile_statement
+        from ..dialect import transpile_statement
         from ..ml.sql_ml import _parse_options
         from .file_io import FileImporter, gzip_codec_for
 
         spark = self._ctx.spark
         m = self._EXPORT_DATA_RE.match(sub)
         if m:
-            end = _balanced_end(sub, m.end() - 1)
+            end = balanced_end(sub, m.end() - 1)
             if end < 0:
                 raise WorkerException("EXPORT DATA: unbalanced OPTIONS(...)")
             opts = _parse_options(sub[m.end(): end - 1])
@@ -6124,7 +5927,7 @@ class SparkSQLExecutor(Worker):
         m = self._LOAD_DATA_RE.match(sub)
         if m:
             mode, target = m.group(1).upper(), m.group(2)
-            end = _balanced_end(sub, m.end() - 1)
+            end = balanced_end(sub, m.end() - 1)
             if end < 0:
                 raise WorkerException("LOAD DATA: unbalanced FILES(...)")
             opts = _parse_options(sub[m.end(): end - 1])
@@ -6407,7 +6210,7 @@ class SparkSQLExecutor(Worker):
         them once per statement). None = the predicate carries other
         non-determinism and the caller must fall back to the
         single-pass full rewrite."""
-        masked = _mask_literals_same_length(text)
+        masked = mask(text, _NON_IDENT_TOKENS)
         if _DML_NONDET_RE.search(masked):
             return None
         ms = list(_NOW_FN_RE.finditer(masked))
@@ -6550,7 +6353,7 @@ class SparkSQLExecutor(Worker):
         # re-insert it). CURRENT_* count too: Spark pins them per query
         # execution, and probe and rewrite are two executions.
         for text in (dml.on, dml.source_sql):
-            masked = _mask_literals_same_length(text)
+            masked = mask(text, _NON_IDENT_TOKENS)
             if _DML_NONDET_RE.search(masked) or _NOW_FN_RE.search(masked):
                 return False
         meta, path, all_dirs = cand
@@ -6626,48 +6429,39 @@ class SparkSQLExecutor(Worker):
         raise WorkerException(f"DML target not found: {table_id}")
 
     def _reads_own_storage(self, df, table_id: str) -> bool:
-        """True when ``df``'s plan reads any file under the catalog
-        table's storage directory — the self-reference test for the
-        INSERT direct-append fast path (an in-place append while
-        scanning the same files relies on Spark freezing the listing,
-        an implementation detail). Unreadable plans count as
-        self-referencing: stage, never risk it.
+        """True when ``df``'s plan reads the catalog table's storage
+        directory — the self-reference test for the INSERT direct-append
+        fast path (an in-place append while scanning the same files
+        relies on Spark freezing the listing, an implementation detail).
 
-        Two complementary probes, because ``Dataset.inputFiles()``
-        resolves plan-tree leaves but does NOT traverse subquery
-        expressions — an uncorrelated scalar subquery over the target
-        (``.. WHERE x > (SELECT MAX(x) FROM t)``) survives analysis as
-        an expression and is invisible to it (r12 review). The
-        formatted explain string prints every scan location INCLUDING
-        the subquery sections, so a path match there stages too. A
-        false positive (e.g. a sibling table whose path shares this
-        prefix) only costs the staged copy the slow path always paid."""
+        Structural, through py4j: every leaf of the analyzed plan and of
+        each subquery in it (``subqueriesAll``: an uncorrelated scalar
+        subquery ``.. WHERE x > (SELECT MAX(x) FROM t)`` survives
+        analysis as an expression, not a leaf) is checked for a file
+        relation whose root path lies under the table's directory. No
+        plan text is read, so Spark's truncation of long locations in
+        explain output cannot hide a reference. An unreadable plan
+        counts as self-referencing: stage, never risk it."""
         import os
-        from urllib.parse import unquote, urlparse
+
+        def seq(s) -> list:
+            return [s.apply(i) for i in range(s.size())]
 
         try:
-            raw_root = self._ctx.catalog.path_for(table_id).rstrip(os.sep)
-            root = os.path.realpath(raw_root) + os.sep
-            if any(
-                os.path.realpath(
-                    unquote(urlparse(f).path) or f
-                ).startswith(root)
-                for f in df.inputFiles()
-            ):
-                return True
-            mode = (
-                df.sparkSession._jvm.org.apache.spark.sql.execution
-                .ExplainMode.fromString("formatted")
-            )
-            plan_text = df._jdf.queryExecution().explainString(mode)
-            pat = (
-                "(?:"
-                + re.escape(raw_root)
-                + "|"
-                + re.escape(root.rstrip(os.sep))
-                + r")(?=[/\]\s,])"
-            )
-            return re.search(pat, plan_text) is not None
+            root = os.path.realpath(self._ctx.catalog.path_for(table_id))
+            plan = df._jdf.queryExecution().analyzed()
+            for p in [plan, *seq(plan.subqueriesAll())]:
+                for leaf in seq(p.collectLeaves()):
+                    if leaf.getClass().getSimpleName() != "LogicalRelation":
+                        continue
+                    rel = leaf.relation()
+                    if rel.getClass().getSimpleName() != "HadoopFsRelation":
+                        continue
+                    for path in seq(rel.location().rootPaths()):
+                        real = os.path.realpath(path.toUri().getPath())
+                        if real == root or real.startswith(root + os.sep):
+                            return True
+            return False
         except Exception:
             return True
 
@@ -6896,8 +6690,6 @@ class SparkSQLExecutor(Worker):
             stmt = _sub_ml_table_calls(
                 stmt, fn, lambda n, a, _c=cols: f"(SELECT {_c} WHERE 1 = 0)"
             )
-        from ..dialect import _balanced_end
-
         m = re.match(
             r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?TABLE\s+\S+\s*(?:USING\s+\w+\s*)?AS\b(.*)$"
             r"|^\s*INSERT\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?\S+\s*(.*)$",
@@ -6907,7 +6699,7 @@ class SparkSQLExecutor(Worker):
         query = None
         if m:
             query = (m.group(1) or m.group(2) or "").strip()
-            while query.startswith("(") and _balanced_end(query, 0) == len(query):
+            while query.startswith("(") and balanced_end(query, 0) == len(query):
                 query = query[1:-1].strip()
             if not re.match(r"^(SELECT|WITH|FROM)\b", query, re.IGNORECASE):
                 query = None

@@ -176,3 +176,20 @@ def test_ndjson_drops_coexist_per_dup_flavor(spark):
     assert plain1 == plain2 and os.path.isdir(plain1)
     assert dup1 == dup2 and os.path.isdir(dup1)
     assert plain1 != dup1
+
+
+def test_streaming_queries_drop_their_memory_sinks(spark):
+    """Each streaming driver materializes its sink's rows and drops the
+    ``__stream_q_*`` temp view before returning: a long-lived session
+    must not keep one registered sink per drained query."""
+    from crmint_spark.streaming import queries_streaming as qs
+
+    sf = "/root/testdata/sf0.001"
+    for fn in (qs.streaming_windowed_counts, qs.streaming_dedup_keys):
+        rows = fn(spark, sf).collect()
+        assert rows
+    left = [
+        t.name for t in spark.catalog.listTables()
+        if t.name.startswith("__stream_q_")
+    ]
+    assert left == []
