@@ -3657,9 +3657,6 @@ def _rewrite_from_unnest(sql: str) -> str:
     return "".join(out)
 
 
-_FROM_WORD_RE = re.compile(r"(?<![\w$])FROM(?![\w$])", re.IGNORECASE)
-
-
 def _rewrite_array_subquery(sql: str) -> str:
     """``ARRAY(SELECT expr FROM ...)`` -> scalar subquery collecting the
     column: ``(SELECT collect_list(expr) FROM ...)``; the DISTINCT form
@@ -3692,7 +3689,7 @@ def _rewrite_array_subquery(sql: str) -> str:
             wrap_struct = m_struct.group(1).upper() == "STRUCT"
             body = body[m_struct.end():]
         # select list = text up to the first top-level FROM
-        m_from = find_top_level(body, _FROM_WORD_RE)
+        m_from = find_top_level(body, _FROM_RE)
         if m_from is None:
             i = end
             continue

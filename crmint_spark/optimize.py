@@ -261,20 +261,12 @@ def explain_has_exchange(df: DataFrame) -> bool:
 _CTE_HEAVY = None  # compiled lazily (module import cost)
 
 
-def _scan_balanced(s: str, j: int) -> int:
-    """Index just past the ')' that closes the '(' at s[j-1] (the shared
-    lexer skips literals and comments)."""
-    end = balanced_end(s, j - 1)
-    if end < 0:
-        raise ValueError("unbalanced parens")
-    return end
-
-
 def _skip_ws_comments(s: str, i: int) -> int:
     """Index of the first char at or after ``i`` that is not whitespace
     or a comment."""
     while True:
-        i += len(s[i:]) - len(s[i:].lstrip())
+        rest = s[i:]
+        i += len(rest) - len(rest.lstrip())
         m = TOKEN_RE.match(s, i)
         if not m or m.lastgroup not in ("hint", "comment"):
             return i
@@ -303,7 +295,9 @@ def _parse_top_ctes(sql: str):
             break
         name = m.group(1)
         j = i + m.end()
-        k = _scan_balanced(s, j)
+        k = balanced_end(s, j - 1)
+        if k < 0:
+            raise ValueError("unbalanced parens")
         ctes.append((name, s[j : k - 1]))
         i = _skip_ws_comments(s, k)
         if i < len(s) and s[i] == ",":

@@ -196,9 +196,8 @@ def test_insert_guard_reads_the_plan_under_a_long_catalog_root(spark, monkeypatc
     # characters: the target as the SECOND root path of a scan inside a
     # subquery was invisible to the explain-string probe
     c.write(spark.sql("SELECT 9 AS id, 'o' AS seg, 0.0 AS bal"), "p.d.o")
-    spark.read.parquet(c.path_for("p.d.o"), c.path_for("p.d.t")).createOrReplaceTempView(
-        "__guard_both"
-    )
+    both = spark.read.parquet(c.path_for("p.d.o"), c.path_for("p.d.t"))
+    both.createOrReplaceTempView("__guard_both")
     probe = spark.sql("SELECT 1 AS x WHERE 1 > (SELECT COUNT(*) FROM __guard_both)")
     w = run(spark, c, "SELECT 1;")
     assert w._reads_own_storage(probe, "p.d.t") is True
