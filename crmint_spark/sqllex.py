@@ -130,9 +130,10 @@ def iter_calls(sql: str, names: tuple[str, ...]):
     """Yield (start, open_paren, end, name_lower) for every call in code
     of a function in ``names`` (word-bounded, case-insensitive), left to
     right; the arguments of a yielded call are not searched."""
-    pat = re.compile(r"\b(" + "|".join(names) + r")\s*\(", re.IGNORECASE)
-    if not pat.search(sql):
-        return  # masking only removes matches: nothing to find
+    alt = "|".join(names)
+    if not re.search(rf"\b(?:{alt})", sql, re.IGNORECASE):
+        return  # no name anywhere, so none in code: skip the masking
+    pat = re.compile(rf"\b({alt})\s*\(", re.IGNORECASE)
     masked = mask(sql)
     m = pat.search(masked)
     while m:
