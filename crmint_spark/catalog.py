@@ -242,11 +242,6 @@ def _as_read_nullable(dt):
     return dt
 
 
-def clear_load_cache() -> None:
-    """Drop every cached reader plan (e.g. after regenerating testdata)."""
-    _LOAD_CACHE.clear()
-
-
 def _session_stopped(df: DataFrame) -> bool:
     try:
         sc = df.sparkSession.sparkContext
@@ -1606,36 +1601,6 @@ class Catalog:
                 d for d in os.listdir(base) if os.path.isdir(os.path.join(base, d))
             )
         return sorted(names)
-
-    def register_virtual_shards(
-        self,
-        project: str,
-        dataset: str,
-        family: str,
-        df: DataFrame,
-        suffix_col: str,
-    ) -> list[str]:
-        """Register date-sharded tables ``<family><suffix>`` as zero-copy
-        filtered views over one DataFrame (the BigQuery ``events_YYYYMMDD``
-        layout; ref: model_bqml.sql:91, output.sql:18). ``suffix_col``
-        holds each row's shard suffix. At 100 TB the same surface comes
-        from a single date-partitioned table instead — see
-        ``register_partitioned_wildcard``."""
-        from pyspark.sql import functions as F
-
-        suffixes = [
-            r[0]
-            for r in df.select(suffix_col).distinct().collect()
-        ]
-        shard_map = self._virtual.setdefault((project, dataset), {})
-        out = []
-        for s in sorted(suffixes):
-            table = f"{family}{s}"
-            view = _safe_view_name(f"{project}.{dataset}.{table}")
-            df.filter(F.col(suffix_col) == s).createOrReplaceTempView(view)
-            shard_map[table] = view
-            out.append(table)
-        return out
 
     def register_shard_names(
         self, project: str, dataset: str, tables: list[str]

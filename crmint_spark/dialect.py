@@ -3907,6 +3907,16 @@ def _default_resolver(table_id: str) -> str:
     return _safe_view_name(table_id.replace("*", "__star__"))
 
 
+#: the qualifier of an INFORMATION_SCHEMA view quoted in parts, as in
+#: `region-us`.INFORMATION_SCHEMA.JOBS or `p`.`d`.INFORMATION_SCHEMA.TABLES:
+#: with its backticks off it resolves like the bare spelling
+_SPLIT_QUALIFIER_RE = re.compile(
+    r"(?<![\w`.\-])(?:`[\w\-.]+`|[\w\-]+)(?:\.(?:`[\w\-.]+`|[\w\-]+))?"
+    r"(?=\.INFORMATION_SCHEMA\.)",
+    re.IGNORECASE,
+)
+
+
 def _rewrite_backtick_tables(sql: str, resolver=None) -> str:
     """```proj.ds.table``` -> safe single-part view name. Wildcard
     (``events_*``) and ``__TABLES_SUMMARY__`` names go through
@@ -3939,7 +3949,11 @@ def _rewrite_backtick_tables(sql: str, resolver=None) -> str:
     # aware, so `-- user's note` cannot swallow later names.
     sql = sub_code(
         sql,
-        lambda seg: re.sub(r"`([A-Za-z0-9_\-.*]+)`", repl, seg),
+        lambda seg: re.sub(
+            r"`([A-Za-z0-9_\-.*]+)`",
+            repl,
+            _SPLIT_QUALIFIER_RE.sub(lambda m: m.group().replace("`", ""), seg),
+        ),
         ("string",),
     )
     # bare (unbackticked) INFORMATION_SCHEMA references — the common
@@ -5923,13 +5937,6 @@ def expand_create_or_replace_table(stmt: str) -> list[str]:
     ]
 
 
-_DECLARE_RE = re.compile(
-    r"^\s*DECLARE\s+(\w+)\s+[\w<>,() ]+?(?:\s+DEFAULT\s+(.+))?$",
-    re.IGNORECASE | re.DOTALL,
-)
-_SET_RE = re.compile(r"^\s*SET\s+(\w+)\s*=\s*(.+)$", re.IGNORECASE | re.DOTALL)
-
-
 _SYSVAR_RE = re.compile(
     r"@@(row_count|last_job_id|time_zone)\b", re.IGNORECASE
 )
@@ -6109,12 +6116,44 @@ def splice_query_params(sql: str, params: dict[str, object]) -> str:
     return "".join(out)
 
 
+#: script-statement kinds by head, tried in order (the first match
+#: wins); the groups are what the executor's handler for the kind reads
+_STATEMENT_KINDS = tuple(
+    (kind, re.compile(pat, re.IGNORECASE | re.DOTALL))
+    for kind, pat in (
+        # every SET @@... is a system-variable assignment, well formed
+        # or not, so none can reach Spark's own SET command
+        ("set_system", r"^\s*SET\s+@@(\w*(?:\.\w+)*)\s*(?:=\s*(.+))?"),
+        ("declare", r"^\s*DECLARE\s+(\w+)\s+[\w<>,() ]+?(?:\s+DEFAULT\s+(.+))?$"),
+        ("set", r"^\s*SET\s+(\w+)\s*=\s*(.+)$"),
+        (
+            "create_procedure",
+            r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?PROCEDURE\s+`?([\w.\-]+)`?"
+            r"\s*\((.*?)\)\s*(BEGIN\b.*)$",
+        ),
+        ("call", r"^\s*CALL\s+`?([\w.\-]+)`?\s*\((.*)\)\s*$"),
+        ("raise", r"^\s*RAISE(?:\s+USING\s+MESSAGE\s*=\s*(.+?))?\s*$"),
+        ("flow", r"^\s*(BREAK|LEAVE|CONTINUE|ITERATE|RETURN)(?:\s+(\w+))?\s*$"),
+        # optional loop label ("lbl: WHILE ... END WHILE lbl")
+        (
+            "block",
+            r"^\s*(?:([A-Za-z_]\w*)\s*:\s*)?"
+            r"(?:IF|WHILE|LOOP|REPEAT|FOR|CASE|BEGIN(?!\s+TRANSACTION\b))\b",
+        ),
+        ("execute_immediate", r"^\s*EXECUTE\s+IMMEDIATE\s+(.*)$"),
+    )
+)
+
+
 def classify_statement(sql: str) -> tuple[str, re.Match | None]:
-    """-> ('declare'|'set'|'sql', match)."""
-    m = _DECLARE_RE.match(sql)
-    if m:
-        return "declare", m
-    m = _SET_RE.match(sql)
-    if m:
-        return "set", m
+    """The kind of one script statement (``split_script`` output) and the
+    match of its head: 'set_system' (``SET @@name [= expr]``),
+    'declare', 'set', 'create_procedure', 'call', 'raise', 'flow'
+    (BREAK/LEAVE/CONTINUE/ITERATE/RETURN [label]), 'block' (an optionally
+    labelled IF/WHILE/LOOP/REPEAT/FOR/CASE/BEGIN block),
+    'execute_immediate', or 'sql' (match None) for everything else."""
+    for kind, pat in _STATEMENT_KINDS:
+        m = pat.match(sql)
+        if m:
+            return kind, m
     return "sql", None

@@ -30,7 +30,7 @@ from pyspark.ml.classification import (
     MultilayerPerceptronClassifier,
     RandomForestClassifier,
 )
-from pyspark.ml.feature import StringIndexer, VectorAssembler, VectorSizeHint
+from pyspark.ml.feature import VectorAssembler, VectorSizeHint
 from pyspark.ml.regression import GBTRegressor, LinearRegression, RandomForestRegressor
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -245,18 +245,6 @@ def build_pipeline(
         kwargs["tol"] = 0.01
     stages.append(cls(**kwargs))
     return Pipeline(stages=stages)
-
-
-def string_index(df: DataFrame, cols: list[str]) -> tuple[DataFrame, list[str]]:
-    """Index string feature columns; returns (df, replacement col names)."""
-    out_cols: list[str] = []
-    for c in cols:
-        idx = StringIndexer(
-            inputCol=c, outputCol=f"{c}_idx", handleInvalid="keep"
-        ).fit(df)
-        df = idx.transform(df)
-        out_cols.append(f"{c}_idx")
-    return df, out_cols
 
 
 def predict_with_probability(

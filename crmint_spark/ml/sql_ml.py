@@ -30,7 +30,7 @@ from pyspark.ml import PipelineModel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sqllex import balanced_end, iter_calls, split_top_level
+from ..sqllex import balanced_end, iter_calls, split_top_level, string_value
 from .estimators import (
     build_pipeline,
     is_classifier,
@@ -151,36 +151,38 @@ class ModelRegistry:
             return json.load(f)
 
 
+_OPTION_LIST_RE = re.compile(r"\[(.*)\]|array\s*\((.*)\)", re.I | re.S)
+
+
 def _parse_options(opts: str) -> dict:
-    """OPTIONS(...) k=v parser: strings, numbers, ['list','items'] (also
-    in the transpiled ``array('items')`` spelling — the dialect's
-    array-literal rewrite runs before BQML interception)."""
+    """OPTIONS(...) k=v parser, keys upper-cased: strings, numbers,
+    ['list','items'] (also in the transpiled ``array('items')`` spelling
+    — the dialect's array-literal rewrite runs before BQML interception);
+    anything else, HPARAM_RANGE(a, b) / HPARAM_CANDIDATES([..]) calls
+    included, is kept as raw text."""
     out: dict = {}
-    for m in re.finditer(
-        # HPARAM_RANGE(a, b) / HPARAM_CANDIDATES([..]) call values kept
-        # raw (one nested paren level covers the array(..) spelling)
-        r"(\w+)\s*=\s*(HPARAM_\w+\s*\((?:[^()]|\([^()]*\))*\)"
-        r"|\[[^\]]*\]|array\s*\([^)]*\)|'[^']*'|\"[^\"]*\"|[\w.]+)",
-        opts,
-        re.IGNORECASE,
-    ):
-        key, raw = m.group(1).upper(), m.group(2).strip()
-        if raw.startswith("[") or raw.lower().startswith("array"):
-            inner = raw[raw.index("(") + 1 : -1] if raw.lower().startswith("array") else raw[1:-1]
-            out[key] = [
-                v.strip().strip("'\"") for v in inner.split(",") if v.strip()
-            ]
-        elif raw[0] in "'\"":
-            out[key] = raw.strip("'\"")
-        else:
+    for pair in split_top_level(opts):
+        key, _, raw = pair.partition("=")
+        key, raw = key.strip(), raw.strip()
+        if not re.fullmatch(r"\w+", key) or not raw:
+            continue
+        lm = _OPTION_LIST_RE.fullmatch(raw)
+        if lm:
+            value = []
+            for item in split_top_level(lm.group(1) or lm.group(2) or ""):
+                item = item.strip()
+                if item:
+                    text = string_value(item)
+                    value.append(item if text is None else text)
+        elif (value := string_value(raw)) is None:
             try:
-                out[key] = int(raw)
+                value = int(raw)
             except ValueError:
                 try:
-                    out[key] = float(raw)
+                    value = float(raw)
                 except ValueError:
-                    out[key] = raw
-        # keep original case variant too for hyperparam passthrough
+                    value = raw
+        out[key.upper()] = value
     return out
 
 

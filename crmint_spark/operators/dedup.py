@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..functions import MINHASH_PRIME, hash_str
+from ..functions import MINHASH_PRIME, hash_str, minhash_value
 
 # Fixed universal-hash coefficients for the minhash permutations
 # (mirrored literally in the DuckDB oracle SQL).
@@ -134,12 +134,7 @@ def minhash_signatures(
     """
     sh = shingle_docs(spark, sf_dir, doc_where=doc_where)
     aggs = [
-        F.min(
-            F.pmod(
-                F.lit(a) * F.pmod(F.col("sh"), F.lit(MINHASH_PRIME)) + F.lit(b),
-                F.lit(MINHASH_PRIME),
-            )
-        ).alias(f"mh{i}")
+        F.min(minhash_value(F.col("sh"), a, b)).alias(f"mh{i}")
         for i, (a, b) in enumerate(MINHASH_SEEDS)
     ]
     return sh.groupBy("doc_id").agg(*aggs)

@@ -31,6 +31,8 @@ TOKEN_RE = re.compile(
 KINDS = ("hint", "comment", "string", "ident")
 
 _PAREN_RE = re.compile(TOKEN_RE.pattern + r"|[()]", re.S)
+_ESCAPE_RE = re.compile(r"\\(.)", re.S)
+_ESCAPES = {"n": "\n", "t": "\t", "r": "\r"}
 _NOT_NL_RE = re.compile(r"[^\n]")
 
 
@@ -44,6 +46,20 @@ def mask(sql: str, kinds: tuple[str, ...] = KINDS) -> str:
     original, and no keyword inside a literal or comment can match."""
     return TOKEN_RE.sub(
         lambda m: _blank(m.group()) if m.lastgroup in kinds else m.group(), sql
+    )
+
+
+def string_value(text: str) -> str | None:
+    """The value of ``text`` when it is exactly one terminated string
+    literal (quotes off, backslash escapes resolved), else None."""
+    m = TOKEN_RE.fullmatch(text)
+    if m is None or m.lastgroup != "string":
+        return None
+    q = 3 if text[:3] in ("'''", '"""') else 1
+    if len(text) < 2 * q or text[-q:] != text[:q]:
+        return None
+    return _ESCAPE_RE.sub(
+        lambda e: _ESCAPES.get(e.group(1), e.group(1)), text[q:-q]
     )
 
 

@@ -25,6 +25,8 @@ from ..dialect import (
     classify_statement,
     expand_create_or_replace_table,
     extract_create_table_layout,
+    parse_script_block,
+    splice_system_vars,
     split_script,
     transpile_statement,
 )
@@ -123,16 +125,14 @@ _JOB_DEST_RE = re.compile(
 )
 
 
-_STRING_LIT_RE = re.compile(r"'(?:\\.|[^'\\])*'|\"(?:\\.|[^\"\\])*\"")
-
-
 def classify_statement_type(sql: str) -> str:
     """BigQuery ``INFORMATION_SCHEMA.JOBS.statement_type`` spelling for
     one engine statement (best-effort; 'SCRIPT' for heads BigQuery has
-    no job spelling for). String literals are masked first — the
+    no job spelling for). Comments, strings and quoted names are masked
+    first: a leading comment must not hide the head, and the
     CREATE_TABLE_AS_SELECT lookahead must not match an 'AS' inside an
     OPTIONS description (review finding r8)."""
-    masked = _STRING_LIT_RE.sub("''", sql)
+    masked = mask(sql)
     for pat, stype in _STMT_TYPE_PATTERNS:
         if pat.match(masked):
             return stype
@@ -1087,19 +1087,6 @@ def _derive_partition_conjunct(
     return None
 
 
-def _pick_integral_id(df) -> str | None:
-    """The column used to key an index layout: a UNIQUE, non-null
-    integral column, preferring id-named ones. Uniqueness is VERIFIED
-    (one agg job at index-build time) — a non-unique key would collapse
-    distinct rows into one posting list, turning the conjunctive
-    ``HAVING count(DISTINCT token) = n`` into silent false positives
-    (review finding r7: the old name-only preference could key postings
-    by a foreign key like ``user_id``). None when no unique integral
-    column exists — the caller raises and the scan/exact path serves."""
-    col, _, _ = _pick_integral_id_stats(df)
-    return col
-
-
 def _pick_integral_id_stats(df) -> tuple[str | None, int, int]:
     """(column, row count, min value) in ONE aggregation pass — the id
     pick, its uniqueness proof, and the quantizer's (n, lo) stats share
@@ -1179,6 +1166,7 @@ class SparkSQLExecutor(Worker):
     ]
 
     _txn = None  # open-transaction state; see _try_transaction_stmt
+    _suppress_job = False  # a sub-step of one statement; see _record_job
 
     def _model_registry(self):
         from ..ml.sql_ml import ModelRegistry
@@ -1196,27 +1184,16 @@ class SparkSQLExecutor(Worker):
     def _asof_path(self, table_id: str, expr: str) -> str:
         """Evaluate a FOR SYSTEM_TIME AS OF timestamp expression and
         resolve the catalog version directory holding that state."""
-        from ..dialect import transpile_statement as _t
-
-        cat, spark = self._ctx.catalog, self._ctx.spark
+        cat = self._ctx.catalog
         if cat is None:
             raise WorkerException(
                 "FOR SYSTEM_TIME AS OF requires a catalog-backed session"
             )
-        # epoch micros computed IN SQL — collect()'d naive datetimes are
-        # rendered in the driver's local zone, which need not be the
-        # session's UTC
-        ts_us = spark.sql(
-            _t(
-                f"SELECT unix_micros(CAST(({expr}\n) AS TIMESTAMP)) AS t",
-                self._resolver(),
-            )
-        ).first()["t"]
+        ts_us = self._epoch_micros(expr, self._resolver())
         if ts_us is None:
             raise WorkerException(
                 f"FOR SYSTEM_TIME AS OF evaluated to NULL: {expr!r}"
             )
-        ts_us = int(ts_us)
         try:
             return cat.resolve_as_of(table_id, ts_us)
         except ValueError as e:
@@ -1252,10 +1229,18 @@ class SparkSQLExecutor(Worker):
         register_engine_udfs(self._ctx.spark)
         registry = self._model_registry()
         resolver = self._resolver()
-        sctx = ScriptContext()
         self._txn = None
+        # the script's system state, set here once: @@row_count (the
+        # latest DML), the zone a SET @@time_zone saved to restore, and
+        # the dict of @@last_job_id / @@time_zone that every
+        # ScriptContext of this run shares for its splices
+        self._row_count = 0
         self._tz_original = None
-        self._tz_cache = None
+        self._system = {
+            "last_job_id": None,
+            "time_zone": self._ctx.spark.conf.get("spark.sql.session.timeZone"),
+        }
+        sctx = ScriptContext(system=self._system)
         try:
             result = self._exec_statements(
                 split_script(self._params["script"]), sctx, resolver, registry
@@ -1277,12 +1262,11 @@ class SparkSQLExecutor(Worker):
             # SET @@time_zone is script-scoped: never leak a zone into
             # the shared SparkSession (restore + release the serializing
             # lock acquired by the first SET)
-            if getattr(self, "_tz_original", None) is not None:
+            if self._tz_original is not None:
                 self._ctx.spark.conf.set(
                     "spark.sql.session.timeZone", self._tz_original
                 )
                 self._tz_original = None
-                self._tz_cache = None
                 SparkSQLExecutor._TZ_LOCK.release()
         if self._txn is not None:
             self._txn_rollback()
@@ -1360,122 +1344,111 @@ class SparkSQLExecutor(Worker):
             cat.drop(backup)
         self._txn = None
 
+    # -- script statements -------------------------------------------------
+
+    #: statement kind (``dialect.classify_statement``) -> handler; each
+    #: handler takes (match, statement, sctx, resolver, registry) and
+    #: returns the statement's result or None
+    _STATEMENT_HANDLERS = {
+        "set_system": "_exec_set_system",
+        "declare": "_exec_declare",
+        "set": "_exec_set",
+        "create_procedure": "_exec_create_procedure",
+        "call": "_exec_call",
+        "raise": "_exec_raise",
+        "flow": "_exec_flow",
+        "block": "_exec_block",
+        "execute_immediate": "_exec_execute_immediate",
+        "sql": "_exec_sql",
+    }
+
     def _exec_statements(
         self, stmts: list[str], sctx, resolver, registry
     ) -> DataFrame | None:
-        """Walk a (sub-)script's statement list: DECLARE/SET scripting,
-        procedural blocks (IF/WHILE/LOOP/BEGIN), EXECUTE IMMEDIATE, and
-        plain statements. Raises control-flow signals upward."""
-        from ..dialect import parse_script_block
-
-        spark = self._ctx.spark
+        """Walk a (sub-)script's statement list: classify each statement
+        once and run it through the handler for its kind. Control-flow
+        signals go upward; a RETURN carries the latest result."""
         last: DataFrame | None = None
-        for raw_stmt in stmts:
-            self._sync_system_vars(sctx)
-            sm = re.match(
-                r"^\s*SET\s+@@(\w+(?:\.\w+)*)\s*=\s*(.+)$",
-                raw_stmt,
-                re.IGNORECASE | re.DOTALL,
-            )
-            if sm:
-                self._set_system_var(
-                    sm.group(1).lower(), sm.group(2).strip(), sctx, resolver
-                )
-                continue
-            kind, m = classify_statement(raw_stmt)
-            if kind == "declare":
-                name, default = m.group(1), m.group(2)
-                value = None
-                if default:
-                    expr = transpile_statement(
-                        sctx.substitute(default.strip()), resolver
-                    )
-                    value = spark.sql(f"SELECT {expr}").first()[0]
-                sctx.variables[name] = value
-                continue
-            if kind == "set":
-                name, expr = m.group(1), m.group(2).strip()
-                sql_expr = transpile_statement(sctx.substitute(expr), resolver)
-                # scalar subqueries allowed: SET x = (SELECT ...)
-                value = spark.sql(f"SELECT {sql_expr}").first()[0]
-                sctx.variables[name] = value
-                continue
-            if self._try_procedure(raw_stmt, sctx, resolver, registry):
-                continue
-            rm = re.match(
-                r"^\s*RAISE(?:\s+USING\s+MESSAGE\s*=\s*(.+?))?\s*$",
-                raw_stmt,
-                re.IGNORECASE | re.DOTALL,
-            )
-            if rm:
-                # RAISE [USING MESSAGE = expr]: a user error (BigQuery
-                # scripting) — caught by BEGIN...EXCEPTION handlers like
-                # any other failure. A bare RAISE outside a handler
-                # re-raises generically (the engine splices
-                # @@error.message textually, so inside a handler the
-                # message is available to an explicit RAISE USING).
-                if self._params["dry_run"]:
-                    continue
-                if rm.group(1):
-                    expr = transpile_statement(
-                        sctx.substitute(rm.group(1).strip()), resolver
-                    )
-                    msg = spark.sql(f"SELECT ({expr}\n)").first()[0]
-                else:
-                    msg = "raised exception (bare RAISE)"
-                raise WorkerException(str(msg))
-            flow = re.match(
-                r"^\s*(BREAK|LEAVE|CONTINUE|ITERATE|RETURN)"
-                r"(?:\s+(\w+))?\s*$",
-                raw_stmt,
-                re.IGNORECASE,
-            )
-            if flow:
-                kw = flow.group(1).upper()
-                label = flow.group(2)
-                if kw in ("BREAK", "LEAVE"):
-                    raise _BreakSignal(label)
-                if kw in ("CONTINUE", "ITERATE"):
-                    raise _ContinueSignal(label)
-                raise _ReturnSignal(last)
-            # BigQuery loop labels: label: WHILE ... END WHILE label
-            lbl = None
-            block_stmt = raw_stmt
-            lm = re.match(
-                r"^\s*([A-Za-z_]\w*)\s*:\s*"
-                r"((?:WHILE|LOOP|FOR|BEGIN|REPEAT)\b.*)$",
-                raw_stmt,
-                re.IGNORECASE | re.DOTALL,
-            )
-            if lm:
-                lbl, block_stmt = lm.group(1), lm.group(2)
-            block = parse_script_block(block_stmt)
-            if block is not None and lbl:
-                block["label"] = lbl
-            if block is not None:
-                result = self._exec_block(block, sctx, resolver, registry)
-                if result is not None:
-                    last = result
-                continue
-            # EXECUTE IMMEDIATE parses the RAW statement: its INTO
-            # clause names variables, which substitution would replace
-            # with their current literals
-            ei = self._try_execute_immediate(raw_stmt, sctx, resolver, registry)
-            if ei is not None:
-                handled, result = ei
-                if handled:
-                    sctx.row_count = getattr(self, "_row_count", 0)
-                    if result is not None:
-                        last = result
-                    continue
-            sub = sctx.substitute(raw_stmt)
-            result = self._run_statement(sub, resolver, registry)
-            # @@row_count tracks the most recent DML for the NEXT
-            # statement's substitution (BigQuery system variable)
-            sctx.row_count = getattr(self, "_row_count", 0)
+        for stmt in stmts:
+            kind, m = classify_statement(stmt)
+            handler = getattr(self, self._STATEMENT_HANDLERS[kind])
+            try:
+                result = handler(m, stmt, sctx, resolver, registry)
+            except _ReturnSignal as sig:
+                if sig.last is None:
+                    sig.last = last
+                raise
             if result is not None:
                 last = result
         return last
+
+    def _eval_row(self, *exprs: str, resolver=None):
+        """The one row of BigQuery expressions ``exprs``, evaluated as
+        ``SELECT (e1), ... FROM VALUES (0) AS __one(__one)``. Over a
+        one-row VALUES relation Catalyst's ConvertToLocalRelation folds
+        the projection on the driver, so a constant, RAND() or
+        CURRENT_TIMESTAMP() costs no Spark job; a scalar subquery still
+        runs its own. A newline before each closing paren keeps a
+        trailing ``-- comment`` from swallowing it."""
+        cols = ", ".join(
+            f"({transpile_statement(e, resolver)}\n)" for e in exprs
+        )
+        return self._ctx.spark.sql(
+            f"SELECT {cols} FROM VALUES (0) AS __one(__one)"
+        ).first()
+
+    def _epoch_micros(self, expr: str, resolver=None) -> int | None:
+        """A timestamp expression as epoch micros, computed in SQL:
+        collect()'d naive datetimes render in the driver's local zone,
+        which need not be the session's."""
+        us = self._eval_row(
+            f"unix_micros(CAST(({expr}\n) AS TIMESTAMP))", resolver=resolver
+        )[0]
+        return None if us is None else int(us)
+
+    def _exec_declare(self, m, stmt, sctx, resolver, registry) -> None:
+        name, default = m.group(1), m.group(2)
+        sctx.variables[name] = None
+        if default:
+            sctx.variables[name] = self._eval_row(
+                sctx.substitute(default.strip()), resolver=resolver
+            )[0]
+
+    def _exec_set(self, m, stmt, sctx, resolver, registry) -> None:
+        # scalar subqueries allowed: SET x = (SELECT ...)
+        sctx.variables[m.group(1)] = self._eval_row(
+            sctx.substitute(m.group(2).strip()), resolver=resolver
+        )[0]
+
+    def _exec_raise(self, m, stmt, sctx, resolver, registry) -> None:
+        """RAISE [USING MESSAGE = expr]: a user error (BigQuery
+        scripting), caught by BEGIN...EXCEPTION handlers like any other
+        failure. A bare RAISE outside a handler re-raises generically
+        (the engine splices @@error.message textually, so inside a
+        handler the message is available to an explicit RAISE USING)."""
+        if self._params["dry_run"]:
+            return
+        msg = "raised exception (bare RAISE)"
+        if m.group(1):
+            msg = self._eval_row(
+                sctx.substitute(m.group(1).strip()), resolver=resolver
+            )[0]
+        raise WorkerException(str(msg))
+
+    def _exec_flow(self, m, stmt, sctx, resolver, registry) -> None:
+        kw, label = m.group(1).upper(), m.group(2)
+        if kw in ("BREAK", "LEAVE"):
+            raise _BreakSignal(label)
+        if kw in ("CONTINUE", "ITERATE"):
+            raise _ContinueSignal(label)
+        raise _ReturnSignal(None)
+
+    def _exec_sql(self, m, stmt, sctx, resolver, registry) -> DataFrame | None:
+        result = self._run_statement(sctx.substitute(stmt), resolver, registry)
+        # @@row_count tracks the most recent DML for the NEXT
+        # statement's substitution (BigQuery system variable)
+        sctx.row_count = self._row_count
+        return result
 
     # -- DROP / ALTER TABLE DDL --------------------------------------------
 
@@ -3969,18 +3942,12 @@ class SparkSQLExecutor(Worker):
             if exp is None:
                 opts = {**opts, "expiration_timestamp_us": None}
             else:
-                row = self._ctx.spark.sql(
-                    transpile_statement(
-                        f"SELECT unix_micros(CAST(({exp}\n) AS TIMESTAMP))"
-                        " AS t",
-                        None,
-                    )
-                ).first()
-                if row["t"] is None:
+                us = self._epoch_micros(exp)
+                if us is None:
                     raise WorkerException(
                         f"expiration_timestamp evaluated to NULL: {exp!r}"
                     )
-                opts = {**opts, "expiration_timestamp_us": int(row["t"])}
+                opts = {**opts, "expiration_timestamp_us": us}
         cat.set_table_options(table_id, opts)
         engine = [
             k
@@ -4073,7 +4040,7 @@ class SparkSQLExecutor(Worker):
         CHANGES (no ``TABLE`` first argument) pass through."""
         import uuid
 
-        cat, spark = self._ctx.catalog, self._ctx.spark
+        cat = self._ctx.catalog
         if cat is None:
             return sub
         masked = mask(sub, _NON_IDENT_TOKENS)
@@ -4100,14 +4067,7 @@ class SparkSQLExecutor(Worker):
             def _bound(expr: str) -> int | None:
                 if re.match(r"\s*NULL\s*$", expr, re.IGNORECASE):
                     return None
-                row = spark.sql(
-                    transpile_statement(
-                        f"SELECT unix_micros(CAST(({expr}\n) AS TIMESTAMP))"
-                        " AS t",
-                        resolver,
-                    )
-                ).first()
-                return None if row["t"] is None else int(row["t"])
+                return self._epoch_micros(expr, resolver)
 
             try:
                 df = cat.change_history(
@@ -4891,70 +4851,50 @@ class SparkSQLExecutor(Worker):
 
     # -- stored procedures -------------------------------------------------
 
-    _CREATE_PROC_RE = re.compile(
-        r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?PROCEDURE\s+`?([\w.\-]+)`?"
-        r"\s*\((.*?)\)\s*(BEGIN\b.*)$",
-        re.IGNORECASE | re.DOTALL,
-    )
-    _CALL_RE = re.compile(
-        r"^\s*CALL\s+`?([\w.\-]+)`?\s*\((.*)\)\s*$",
-        re.IGNORECASE | re.DOTALL,
-    )
-
     def _proc_store_path(self) -> str:
         root = (
             self._ctx.catalog.root if self._ctx.catalog else "/tmp/crmint_models"
         )
         return os.path.join(root, "_procedures.json")
 
-    def _try_procedure(self, raw_stmt, sctx, resolver, registry) -> bool:
+    def _exec_create_procedure(self, m, stmt, sctx, resolver, registry) -> None:
         """CREATE [OR REPLACE] PROCEDURE name(IN/OUT/INOUT p TYPE, ...)
-        BEGIN ... END persists the body; CALL name(args) executes it in
-        a fresh variable scope, copying OUT/INOUT values back into the
-        caller's variables. RETURN inside a procedure exits only the
-        procedure."""
+        BEGIN ... END persists the body for CALL."""
         import json
 
-        from ..dialect import parse_script_block
+        name, params_raw, body = m.group(1), m.group(2), m.group(3)
+        sig: list[tuple[str, str]] = []
+        for part in split_top_level(params_raw):
+            part = part.strip()
+            if not part:
+                continue
+            pm = re.match(
+                r"(?:(IN|OUT|INOUT)\s+)?([A-Za-z_]\w*)\s+\S.*",
+                part,
+                re.IGNORECASE | re.DOTALL,
+            )
+            if not pm:
+                raise WorkerException(f"bad procedure parameter: {part!r}")
+            sig.append(((pm.group(1) or "IN").upper(), pm.group(2)))
+        if parse_script_block(body) is None:
+            raise WorkerException("procedure body must be a BEGIN ... END block")
+        path = self._proc_store_path()
+        store = {}
+        if os.path.exists(path):
+            with open(path) as fh:
+                store = json.load(fh)
+        store[name] = {"sig": sig, "body": body}
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with open(path, "w") as fh:
+            json.dump(store, fh)
+        self.log_info(f"CREATE PROCEDURE {name} ({len(sig)} params)")
 
-        m = self._CREATE_PROC_RE.match(raw_stmt)
-        if m:
-            name, params_raw, body = m.group(1), m.group(2), m.group(3)
-            sig: list[tuple[str, str]] = []
-            for part in split_top_level(params_raw):
-                part = part.strip()
-                if not part:
-                    continue
-                pm = re.match(
-                    r"(?:(IN|OUT|INOUT)\s+)?([A-Za-z_]\w*)\s+\S.*",
-                    part,
-                    re.IGNORECASE | re.DOTALL,
-                )
-                if not pm:
-                    raise WorkerException(
-                        f"bad procedure parameter: {part!r}"
-                    )
-                sig.append(
-                    ((pm.group(1) or "IN").upper(), pm.group(2))
-                )
-            if parse_script_block(body) is None:
-                raise WorkerException(
-                    "procedure body must be a BEGIN ... END block"
-                )
-            path = self._proc_store_path()
-            store = {}
-            if os.path.exists(path):
-                with open(path) as fh:
-                    store = json.load(fh)
-            store[name] = {"sig": sig, "body": body}
-            os.makedirs(os.path.dirname(path), exist_ok=True)
-            with open(path, "w") as fh:
-                json.dump(store, fh)
-            self.log_info(f"CREATE PROCEDURE {name} ({len(sig)} params)")
-            return True
-        m = self._CALL_RE.match(raw_stmt)
-        if not m:
-            return False
+    def _exec_call(self, m, stmt, sctx, resolver, registry) -> None:
+        """CALL name(args) runs a stored procedure in a fresh variable
+        scope, copying OUT/INOUT values back into the caller's
+        variables. RETURN inside a procedure exits only the procedure."""
+        import json
+
         name, args_raw = m.group(1), m.group(2)
         if name.upper() == "BQ.REFRESH_MATERIALIZED_VIEW":
             # BigQuery's system procedure: manual MV refresh. The
@@ -4976,7 +4916,7 @@ class SparkSQLExecutor(Worker):
                 )
             if self._params["dry_run"]:
                 self.log_info(f"CALL {name} validated (dry run)")
-                return True
+                return
             self._run_statement_inner(
                 f"CREATE OR REPLACE MATERIALIZED VIEW `{mv}` AS"
                 f" {e['query_raw']}",
@@ -4984,7 +4924,7 @@ class SparkSQLExecutor(Worker):
                 registry,
             )
             self.log_info(f"MATERIALIZED VIEW {mv} refreshed")
-            return True
+            return
         path = self._proc_store_path()
         store = {}
         if os.path.exists(path):
@@ -4994,21 +4934,20 @@ class SparkSQLExecutor(Worker):
             raise WorkerException(f"CALL: unknown procedure `{name}`")
         if self._params["dry_run"]:
             self.log_info(f"CALL {name} validated (dry run)")
-            return True
+            return
         sig = [tuple(p) for p in store[name]["sig"]]
         args = [a.strip() for a in split_top_level(args_raw) if a.strip()]
         if len(args) != len(sig):
             raise WorkerException(
                 f"CALL {name}: expected {len(sig)} args, got {len(args)}"
             )
-        inner = ScriptContext()
+        inner = ScriptContext(row_count=sctx.row_count, system=sctx.system)
         out_map: list[tuple[str, str]] = []  # (param, caller var)
         for (mode, pname), arg in zip(sig, args):
             if mode == "IN":
-                expr = transpile_statement(sctx.substitute(arg), resolver)
-                inner.variables[pname] = (
-                    self._ctx.spark.sql(f"SELECT ({expr}\n)").first()[0]
-                )
+                inner.variables[pname] = self._eval_row(
+                    sctx.substitute(arg), resolver=resolver
+                )[0]
             else:
                 vm = re.fullmatch(r"[A-Za-z_]\w*", arg)
                 if not vm:
@@ -5028,31 +4967,30 @@ class SparkSQLExecutor(Worker):
             pass
         for pname, var in out_map:
             sctx.variables[var] = inner.variables.get(pname)
+        sctx.row_count = self._row_count
         self.log_info(f"CALL {name} done")
-        return True
 
     # -- procedural blocks -------------------------------------------------
 
     _MAX_LOOP_ITERATIONS = 100_000
 
-    def _eval_cond(self, cond: str, sctx, resolver) -> bool:
-        expr = transpile_statement(sctx.substitute(cond), resolver)
-        # newline before the closing paren: a condition ending in a
-        # trailing -- comment must not swallow it (round 11)
-        val = self._ctx.spark.sql(f"SELECT ({expr}\n)").first()[0]
-        return bool(val)
-
-    def _exec_block(
-        self, block: dict, sctx, resolver, registry
-    ) -> DataFrame | None:
-        """Execute one parsed IF/WHILE/LOOP/BEGIN block. In dry-run,
-        every branch/body is validated instead of one path executing."""
+    def _exec_block(self, m, stmt, sctx, resolver, registry) -> DataFrame | None:
+        """Execute one IF/WHILE/LOOP/REPEAT/FOR/CASE/BEGIN block (``m``
+        holds its optional label). In dry-run, every branch/body is
+        validated instead of one path executing."""
+        block = parse_script_block(stmt)
+        block["label"] = m.group(1)
         kind = block["kind"]
         dry = bool(self._params["dry_run"])
 
         def run(body: str) -> DataFrame | None:
             return self._exec_statements(
                 split_script(body), sctx, resolver, registry
+            )
+
+        def holds(cond: str) -> bool:
+            return bool(
+                self._eval_row(sctx.substitute(cond), resolver=resolver)[0]
             )
 
         if kind == "IF":
@@ -5063,7 +5001,7 @@ class SparkSQLExecutor(Worker):
                     run(block["else"])
                 return None
             for cond, body in block["branches"]:
-                if self._eval_cond(cond, sctx, resolver):
+                if holds(cond):
                     return run(body)
             if block["else"]:
                 return run(block["else"])
@@ -5121,9 +5059,7 @@ class SparkSQLExecutor(Worker):
                 return None
             last: DataFrame | None = None
             for _ in range(self._MAX_LOOP_ITERATIONS):
-                if kind == "WHILE" and not self._eval_cond(
-                    block["cond"], sctx, resolver
-                ):
+                if kind == "WHILE" and not holds(block["cond"]):
                     return last
                 try:
                     result = run(block["body"])
@@ -5138,9 +5074,7 @@ class SparkSQLExecutor(Worker):
                         raise
                     # falls through: REPEAT's ITERATE still jumps to
                     # the UNTIL test (BigQuery), WHILE/LOOP just spin
-                if kind == "REPEAT" and self._eval_cond(
-                    block["cond"], sctx, resolver
-                ):
+                if kind == "REPEAT" and holds(block["cond"]):
                     return last
             raise WorkerException(
                 f"{kind} exceeded {self._MAX_LOOP_ITERATIONS} iterations"
@@ -5197,10 +5131,8 @@ class SparkSQLExecutor(Worker):
         re-raised."""
         import time as _time
 
-        from ..dialect import splice_system_vars
-
-        if re.match(r"\s*SET\s+@@", sub, re.IGNORECASE):
-            # only the script loop's intercept may assign system
+        if classify_statement(sub)[0] == "set_system":
+            # only the script loop's handler may assign system
             # variables; reaching here means EXECUTE IMMEDIATE (BigQuery
             # forbids control statements in dynamic SQL) — raise instead
             # of letting Spark's SET record a junk conf key silently
@@ -5208,7 +5140,9 @@ class SparkSQLExecutor(Worker):
                 "SET @@... is not allowed in dynamic SQL"
             )
         if "@@" in sub:
-            sub = splice_system_vars(sub, self._system_vars())
+            sub = splice_system_vars(
+                sub, {"row_count": self._row_count, **self._system}
+            )
         # dml_statistics describes THIS statement only: NULL unless one
         # of the DML handlers below sets it
         self._dml_stats = None
@@ -5221,11 +5155,6 @@ class SparkSQLExecutor(Worker):
         self._record_job(sub, t0)
         return result
 
-    def _sync_system_vars(self, sctx) -> None:
-        vals = self._system_vars()
-        sctx.row_count = vals.pop("row_count")
-        sctx.system = vals
-
     #: serializes SET @@time_zone scripts across the SHARED SparkSession
     #: (PipelineRunner runs workers on a thread pool over one session):
     #: the second zone-setting script blocks until the first finishes,
@@ -5235,22 +5164,24 @@ class SparkSQLExecutor(Worker):
     #: inherent to a shared SQLConf (BigQuery gives every job its own).
     _TZ_LOCK = threading.Lock()
 
-    def _set_system_var(self, name: str, expr: str, sctx, resolver) -> None:
+    def _exec_set_system(self, m, stmt, sctx, resolver, registry) -> None:
         """``SET @@time_zone = <expr>`` — the one assignable system
         variable the engine supports (BigQuery scripting). Scoped to the
         SCRIPT: _run_script restores the session time zone afterwards
         (under _TZ_LOCK, held from first SET to script end). Anything
         else raises loudly (never silently ignored)."""
-        spark = self._ctx.spark
+        name, expr = m.group(1).lower(), m.group(2)
         if name != "time_zone":
             raise WorkerException(
                 f"SET @@{name} is not supported (assignable system"
                 " variables: @@time_zone)"
             )
+        if expr is None:
+            raise WorkerException("SET @@time_zone needs `= <STRING>`")
         if self._params["dry_run"]:
             return
-        sql_expr = transpile_statement(sctx.substitute(expr), resolver)
-        tz = spark.sql(f"SELECT ({sql_expr}\n)").first()[0]
+        spark = self._ctx.spark
+        tz = self._eval_row(sctx.substitute(expr.strip()), resolver=resolver)[0]
         if not isinstance(tz, str) or not tz:
             raise WorkerException("SET @@time_zone needs a STRING zone")
         if not re.fullmatch(r"[+-]\d{2}:\d{2}", tz):
@@ -5262,7 +5193,7 @@ class SparkSQLExecutor(Worker):
                 raise WorkerException(
                     f"SET @@time_zone: unknown time zone {tz!r}"
                 ) from None
-        if getattr(self, "_tz_original", None) is None:
+        if self._tz_original is None:
             SparkSQLExecutor._TZ_LOCK.acquire()
             try:
                 self._tz_original = spark.conf.get(
@@ -5275,25 +5206,8 @@ class SparkSQLExecutor(Worker):
                 SparkSQLExecutor._TZ_LOCK.release()
                 raise
         spark.conf.set("spark.sql.session.timeZone", tz)
-        self._tz_cache = tz
+        self._system["time_zone"] = tz
         self.log_info(f"SET @@time_zone = {tz}")
-
-    def _system_vars(self) -> dict:
-        """Current values of the spliceable scripting system variables
-        (BigQuery system variables: @@row_count, @@last_job_id,
-        @@time_zone). The zone is cached per script — a conf.get is a
-        py4j round-trip, and paying two per statement is the same class
-        of overhead as the per-statement count() job this round removed;
-        SET @@time_zone refreshes the cache."""
-        tz = getattr(self, "_tz_cache", None)
-        if tz is None:
-            tz = self._ctx.spark.conf.get("spark.sql.session.timeZone")
-            self._tz_cache = tz
-        return {
-            "row_count": getattr(self, "_row_count", 0),
-            "last_job_id": getattr(self, "_last_job_id", None),
-            "time_zone": tz,
-        }
 
     def _record_job(self, sub: str, t0: float, error: str | None = None) -> None:
         """Append one row to the catalog's jobs plane (queryable as
@@ -5307,11 +5221,11 @@ class SparkSQLExecutor(Worker):
             return
         if self._params.get("dry_run"):
             return  # BigQuery dry runs create no job
-        if getattr(self, "_suppress_job", False):
+        if self._suppress_job:
             return  # sub-step of one user statement (temp-table inner)
         import time as _time
 
-        self._last_job_id = cat.record_job(
+        self._system["last_job_id"] = cat.record_job(
             {
                 "creation_time": t0,
                 "start_time": t0,
@@ -5322,7 +5236,7 @@ class SparkSQLExecutor(Worker):
                 "state": "DONE",  # BigQuery: failed jobs are DONE + error_result
                 "user_email": "crmint-spark@localhost",
                 "destination_table": statement_destination(sub),
-                "dml_statistics": None if error else getattr(self, "_dml_stats", None),
+                "dml_statistics": None if error else self._dml_stats,
                 "error_message": error,
                 "cache_hit": False,
             }
@@ -5616,29 +5530,20 @@ class SparkSQLExecutor(Worker):
 
     # -- EXECUTE IMMEDIATE ------------------------------------------------
 
-    _EXEC_IMM_RE = re.compile(
-        r"^\s*EXECUTE\s+IMMEDIATE\s+(.*)$", re.IGNORECASE | re.DOTALL
-    )
-
-    def _try_execute_immediate(
-        self, sub: str, sctx, resolver, registry
-    ) -> "tuple[bool, DataFrame | None] | None":
+    def _exec_execute_immediate(
+        self, m, stmt, sctx, resolver, registry
+    ) -> DataFrame | None:
         """BigQuery dynamic SQL:
         ``EXECUTE IMMEDIATE <string expr> [INTO v1, v2] [USING e AS n,
         ...]``. The string expression evaluates engine-side (CONCAT /
         FORMAT / variables all work), @name parameters splice as typed
         literals, and the resulting statement runs through the full
         routing chain; INTO captures the first result row into script
-        variables. Returns None if not an EXECUTE IMMEDIATE."""
-        from ..dialect import (
-            splice_query_params,
-            transpile_statement as _transpile,
-        )
+        variables. The statement arrives unsubstituted: its INTO clause
+        names variables, which substitution would replace with their
+        current literals."""
+        from ..dialect import splice_query_params
 
-        m = self._EXEC_IMM_RE.match(sub)
-        if not m:
-            return None
-        spark = self._ctx.spark
         # comments are blanked (string-aware) FIRST: an INTO/USING word
         # inside a trailing comment mis-split the statement, and an
         # apostrophe or trailing `--` would corrupt the parenthesized
@@ -5655,11 +5560,7 @@ class SparkSQLExecutor(Worker):
         if im is not None:
             body, into_raw = im
             into_vars = [v.strip() for v in into_raw.split(",") if v.strip()]
-        # body is already comment-blanked above, so the parenthesized
-        # wrap is safe from trailing `-- note` forms (round-10 probe)
-        sql_text = spark.sql(
-            f"SELECT ({_transpile(sctx.substitute(body), resolver)})"
-        ).first()[0]
+        sql_text = self._eval_row(sctx.substitute(body), resolver=resolver)[0]
         if not isinstance(sql_text, str) or not sql_text.strip():
             raise WorkerException(
                 "EXECUTE IMMEDIATE expression must evaluate to a "
@@ -5677,17 +5578,18 @@ class SparkSQLExecutor(Worker):
                         "EXECUTE IMMEDIATE USING requires `expr AS name` "
                         "parameters (positional ? is not supported)"
                     )
-                params[pm.group(2)] = spark.sql(
-                    f"SELECT ({_transpile(sctx.substitute(pm.group(1)), resolver)})"
-                ).first()[0]
+                params[pm.group(2)] = self._eval_row(
+                    sctx.substitute(pm.group(1)), resolver=resolver
+                )[0]
         dyn = splice_query_params(sql_text, params) if params else sql_text
         self.log_info(f"EXECUTE IMMEDIATE: {dyn[:200]}")
         # the dynamic statement sees only @params, never script
         # variables (BigQuery semantics — an alias named like a DECLARE
         # must not be rewritten)
         result = self._run_statement(dyn, resolver, registry)
+        sctx.row_count = self._row_count
         if self._params["dry_run"]:
-            return True, None
+            return None
         if into_vars:
             if result is None:
                 raise WorkerException(
@@ -5702,8 +5604,8 @@ class SparkSQLExecutor(Worker):
                 )
             for name, val in zip(into_vars, vals):
                 sctx.variables[name] = val
-            return True, None
-        return True, result
+            return None
+        return result
 
     @staticmethod
     def _clause_split(body: str, keyword: str) -> "tuple[str, str] | None":
@@ -6216,17 +6118,16 @@ class SparkSQLExecutor(Worker):
         ms = list(_NOW_FN_RE.finditer(masked))
         if not ms:
             return text
-        now = self._ctx.spark.sql(
-            "SELECT date_format(current_timestamp(),"
-            " 'yyyy-MM-dd HH:mm:ss.SSSSSS') AS t,"
-            " CAST(current_date() AS STRING) AS d"
-        ).first()
+        ts, day = self._eval_row(
+            "date_format(current_timestamp(), 'yyyy-MM-dd HH:mm:ss.SSSSSS')",
+            "CAST(current_date() AS STRING)",
+        )
         out = text
         for m in reversed(ms):
             lit = (
-                f"TIMESTAMP '{now['t']}'"
+                f"TIMESTAMP '{ts}'"
                 if m.group(1).lower() == "current_timestamp"
-                else f"DATE '{now['d']}'"
+                else f"DATE '{day}'"
             )
             out = out[: m.start()] + lit + out[m.end() :]
         return out

@@ -1125,6 +1125,39 @@ def test_statement_type_classifier():
     assert c("ASSERT 1 = 1") == "ASSERT"
 
 
+def test_statement_type_reads_past_a_leading_comment(spark, cat):
+    """EXECUTE IMMEDIATE text that opens with a comment is still a
+    SELECT job (it was recorded as 'SCRIPT')."""
+    seed(spark, cat)
+    run(
+        spark, cat,
+        "EXECUTE IMMEDIATE '/* note */ SELECT id FROM `p.d.t`';"
+        "EXECUTE IMMEDIATE 'SELECT id FROM `p.d.t`'",
+    )
+    rows = _jobs(spark, cat, "query LIKE '%SELECT id FROM%'")
+    assert [r["statement_type"] for r in rows] == ["SELECT", "SELECT"]
+
+
+def test_region_qualifier_quoted_apart_reads_jobs(spark, cat):
+    """A region qualifier quoted apart from the view name reads the jobs
+    view like the one-piece quoted name (it failed with
+    REQUIRES_SINGLE_PART_NAMESPACE)."""
+    seed(spark, cat)
+    run(spark, cat, "UPDATE `p.d.t` SET bal = 0 WHERE id = 1")
+    got = [
+        run(
+            spark, cat,
+            f"SELECT statement_type FROM {name}"
+            " WHERE statement_type = 'UPDATE'",
+        ).result.collect()
+        for name in (
+            "`region-us`.INFORMATION_SCHEMA.JOBS",
+            "`region-us.INFORMATION_SCHEMA.JOBS`",
+        )
+    ]
+    assert got[0] == got[1] and len(got[0]) == 1
+
+
 def test_leading_comment_does_not_defeat_routing(spark, cat):
     """Statements are routed on their head keyword; a comment attached
     to the statement's first line must be stripped by split_script or

@@ -105,6 +105,34 @@ def test_options_split_skips_escaped_quote():
     assert opts == {"description": r"a\'b, c", "labels": "[('k','v')]"}
 
 
+def test_model_options_skip_escaped_quote():
+    # the CREATE MODEL OPTIONS parser read 'it\' as the description and
+    # MAX_ITERATIONS = 50 from inside the string
+    from crmint_spark.ml.sql_ml import _parse_options
+
+    opts = _parse_options(
+        r"model_type='logistic_reg', description='it\'s max_iterations = 50',"
+        " input_label_cols=['y'], uris=array('a,b', 'c'),"
+        " l1_reg=HPARAM_RANGE(0.001, 0.1), max_iterations=7"
+    )
+    assert opts == {
+        "MODEL_TYPE": "logistic_reg",
+        "DESCRIPTION": "it's max_iterations = 50",
+        "INPUT_LABEL_COLS": ["y"],
+        "URIS": ["a,b", "c"],
+        "L1_REG": "HPARAM_RANGE(0.001, 0.1)",
+        "MAX_ITERATIONS": 7,
+    }
+
+
+def test_string_value_reads_one_literal():
+    assert sqllex.string_value(r"'it\'s'") == "it's"
+    assert sqllex.string_value('"""a "b" c"""') == 'a "b" c'
+    assert sqllex.string_value('"x"') == "x"
+    for text in ("'a' || 'b'", "'open", "abc", "`t`"):
+        assert sqllex.string_value(text) is None
+
+
 def test_pruned_dml_sees_rand_after_escaped_quote():
     # the masked predicate must still show RAND(): a pruned two-pass DML
     # with a non-deterministic predicate would see different row sets

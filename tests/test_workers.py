@@ -200,6 +200,107 @@ def test_sql_executor_script_with_declare_set(ctx):
     assert rows == {(1, "a"), (2, "b")}
 
 
+def _script_jobs(spark, script: str):
+    """Run ``script`` without a catalog under its own Spark job group ->
+    (worker, jobs the group launched). A control job in a second group
+    runs last: the listener bus delivers jobs in order, so once the
+    control shows, every job of the script has been counted."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"script-{uuid.uuid4().hex[:8]}"
+    w = find_worker("SparkSQLExecutor")(
+        {"script": script, "dry_run": False},
+        WorkerContext(spark=spark, catalog=None),
+    )
+    try:
+        sc.setJobGroup(group, "script under test")
+        w.execute()
+        sc.setJobGroup(group + "-end", "control")
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.time() + 60
+    while not sc.statusTracker().getJobIdsForGroup(group + "-end"):
+        assert time.time() < deadline, "control job never reported"
+        time.sleep(0.05)
+    return w, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_constant_script_statements_launch_no_spark_job(spark):
+    """DECLARE / SET / IF / WHILE / RAISE values that fold to constants
+    evaluate on the driver: the whole script launches no Spark job."""
+    w, jobs = _script_jobs(spark, """
+    DECLARE i INT64 DEFAULT 0;
+    DECLARE total INT64 DEFAULT 10;
+    DECLARE msg STRING DEFAULT '';
+    WHILE i < 3 DO
+      SET i = i + 1;
+      SET total = total + i;
+    END WHILE;
+    IF total = 16 THEN
+      SET msg = CONCAT('total ', CAST(total AS STRING));
+    END IF;
+    BEGIN
+      RAISE USING MESSAGE = CONCAT('boom: ', msg);
+    EXCEPTION WHEN ERROR THEN
+      SET msg = @@error.message;
+    END;
+    SELECT i AS i, total AS total, msg AS msg
+    """)
+    assert jobs == 0
+    row = w.result.first()
+    assert (row["i"], row["total"]) == (3, 16)
+    assert "boom: total 16" in row["msg"]
+
+
+def test_script_scalars_keep_their_values(ctx):
+    """Scalar subqueries, non-deterministic and time functions, a
+    condition ending in a ``--`` comment, and CALL arguments evaluate
+    to the same values through the one scalar path."""
+    import datetime
+
+    def run(script):
+        w = find_worker("SparkSQLExecutor")(
+            {"script": script, "dry_run": False}, ctx
+        )
+        w.execute()
+        return w
+
+    run("""
+    CREATE PROCEDURE `p.d.bump`(IN step INT64, INOUT acc INT64)
+    BEGIN
+      SET acc = acc + step;
+    END
+    """)
+    before = datetime.datetime.now()
+    row = run("""
+    DECLARE top INT64;
+    DECLARE hit BOOL DEFAULT FALSE;
+    DECLARE commented STRING DEFAULT 'no';
+    DECLARE ts TIMESTAMP DEFAULT CURRENT_TIMESTAMP();
+    DECLARE acc INT64 DEFAULT 5;
+    SET top = (SELECT MAX(v) FROM (SELECT 3 AS v UNION ALL SELECT 9 UNION ALL SELECT 4));
+    IF RAND() < 2 THEN
+      SET hit = TRUE;
+    END IF;
+    IF top > 8 -- the scalar subquery's MAX
+    THEN
+      SET commented = 'yes';
+    END IF;
+    CALL `p.d.bump`(top * 2, acc);
+    SELECT top AS top, hit AS hit, commented AS commented, ts AS ts, acc AS acc
+    """).result.first()
+    after = datetime.datetime.now()
+    assert (row["top"], row["hit"], row["commented"], row["acc"]) == (
+        9, True, "yes", 23,
+    )
+    assert isinstance(row["ts"], datetime.datetime)
+    slack = datetime.timedelta(seconds=1)
+    assert before - slack <= row["ts"] <= after + slack, (before, row["ts"])
+
+
 def test_sql_executor_approx_sketches_option(ctx):
     """The approx_sketches script option swaps the HLL family from the
     exact-set algebra to DataSketches aggregates end-to-end; the
