@@ -6124,7 +6124,12 @@ _STATEMENT_KINDS = tuple(
         # every SET @@... is a system-variable assignment, well formed
         # or not, so none can reach Spark's own SET command
         ("set_system", r"^\s*SET\s+@@(\w*(?:\.\w+)*)\s*(?:=\s*(.+))?"),
-        ("declare", r"^\s*DECLARE\s+(\w+)\s+[\w<>,() ]+?(?:\s+DEFAULT\s+(.+))?$"),
+        # DECLARE a[, b ...] [type] [DEFAULT expr]
+        (
+            "declare",
+            r"^\s*DECLARE\s+(\w+(?:\s*,\s*\w+)*)"
+            r"(?:\s+(?!DEFAULT\b)[\w<>,() ]+?)?(?:\s+DEFAULT\s+(.+))?$",
+        ),
         ("set", r"^\s*SET\s+(\w+)\s*=\s*(.+)$"),
         (
             "create_procedure",

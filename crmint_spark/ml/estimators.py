@@ -262,3 +262,24 @@ def predict_with_probability(
             F.round(vector_to_array("probability")[positive_index], 6),
         )
     return scored
+
+
+def predict_output(
+    model: PipelineModel, model_type: str, df: DataFrame
+) -> DataFrame:
+    """``ML.PREDICT``'s output columns: a classifier's positive-class
+    ``probability`` (ref: model_bqml.sql:26-29) and ``predicted_label``,
+    or a regressor's ``predicted_value``. Vector columns are dropped:
+    they have no SQL type and are not parquet-writable."""
+    if is_classifier(model_type):
+        scored = predict_with_probability(model, df).withColumnRenamed(
+            "prediction", "predicted_label"
+        )
+    else:
+        scored = model.transform(df).withColumnRenamed(
+            "prediction", "predicted_value"
+        )
+    drop = [
+        f.name for f in scored.schema.fields if f.dataType.typeName() == "vector"
+    ]
+    return scored.drop(*drop) if drop else scored

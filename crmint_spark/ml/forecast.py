@@ -757,18 +757,20 @@ def forecast_frame(
     )
 
 
-_ML_FORECAST_RE = re.compile(
-    r"ML\.FORECAST\s*\(\s*MODEL\s+`?([\w.\-]+)`?\s*"
-    r"(?:,\s*STRUCT\s*\(\s*([^()]*?)\s*\))?\s*\)",
-    re.IGNORECASE,
-)
-
-
-def _parse_forecast_struct(body: str | None) -> tuple[int | None, float]:
-    """(horizon | None, confidence_level) from a ``STRUCT(5 AS horizon,
-    0.9 AS confidence_level)`` body, either field order."""
+def _forecast_options(fn: str, args: list[str]) -> tuple[int | None, float]:
+    """(horizon | None, confidence_level) from the optional
+    ``STRUCT(5 AS horizon, 0.9 AS confidence_level)`` argument of
+    ``fn``, either field order."""
     horizon: int | None = None
     conf = FORECAST_CONFIDENCE_LEVEL
+    if not args:
+        return horizon, conf
+    st = len(args) == 1 and re.fullmatch(
+        r"STRUCT\s*\((.*)\)", args[0], re.IGNORECASE | re.DOTALL
+    )
+    if not st:
+        raise ValueError(f"{fn} expects (MODEL m [, STRUCT(...)])")
+    body = st.group(1).strip()
     if not body:
         return horizon, conf
     for part in body.split(","):
@@ -801,25 +803,15 @@ def _parse_forecast_struct(body: str | None) -> tuple[int | None, float]:
     return horizon, conf
 
 
-def rewrite_ml_forecast(spark: SparkSession, stmt: str, registry) -> str:
-    """Replace ML.FORECAST(MODEL m [, STRUCT(n AS horizon [, c AS
-    confidence_level])]) with a temp view of the forecast rows."""
-    counter = [0]
-
-    def repl(m: re.Match) -> str:
-        name = m.group(1)
-        meta = registry.load_meta(name)
-        h, conf = _parse_forecast_struct(m.group(2))
-        horizon = h if h is not None else int(meta.get("horizon", 10))
-        df = forecast_frame(
-            spark, meta["state"], horizon, meta.get("holiday"), conf
-        )
-        counter[0] += 1
-        view = f"__ml_forecast_{counter[0]}"
-        df.createOrReplaceTempView(view)
-        return view
-
-    return _ML_FORECAST_RE.sub(repl, stmt)
+def ml_forecast(spark: SparkSession, registry, name, args, cte) -> DataFrame:
+    """``ML.FORECAST(MODEL m [, STRUCT(n AS horizon [, c AS
+    confidence_level])])``: the forecast rows."""
+    meta = registry.load_meta(name)
+    h, conf = _forecast_options("ML.FORECAST", args)
+    horizon = h if h is not None else int(meta.get("horizon", 10))
+    return forecast_frame(
+        spark, meta["state"], horizon, meta.get("holiday"), conf
+    )
 
 
 # z-scores for the supported anomaly_prob_threshold values (two-sided
@@ -921,113 +913,81 @@ def detect_anomalies_frame(
     )
 
 
-def rewrite_ml_detect_anomalies(
-    spark: SparkSession, stmt: str, registry
-) -> str:
-    """Replace ML.DETECT_ANOMALIES(MODEL m, STRUCT(p AS
-    anomaly_prob_threshold), (query)) with a temp view. Uses the
-    balanced-paren call scanner — a non-greedy regex would truncate
-    inner queries containing "))"."""
-    from .sql_ml import _inner_query, _sub_ml_table_calls
+def ml_detect_anomalies(
+    spark: SparkSession, registry, name, args, cte
+) -> DataFrame:
+    """``ML.DETECT_ANOMALIES(MODEL m, STRUCT(p AS
+    anomaly_prob_threshold | c AS contamination)[, (query)])``: the
+    input rows flagged against the model."""
+    from .sql_ml import _apply_transform, _inner_query
 
-    counter = [0]
-
-    def handler(name: str, args: list[str]) -> str:
-        if len(args) not in (1, 2):
-            raise ValueError(
-                "ML.DETECT_ANOMALIES expects (MODEL m, STRUCT(p AS "
-                "anomaly_prob_threshold | contamination) [, (query)])"
-            )
-        meta = registry.load_meta(name)
-        if len(args) == 1 and (
-            not _STRUCT_CONTAMINATION_RE.match(args[0])
-            or not meta.get("source_sql")
-        ):
-            raise ValueError(
-                "ML.DETECT_ANOMALIES without an input query needs a"
-                " contamination STRUCT and a model with a persisted"
-                " training source"
-            )
-        mc = _STRUCT_CONTAMINATION_RE.match(args[0])
-        if mc:
-            # contamination anomalies: reconstruction loss for
-            # AUTOENCODER/PCA, centroid distance for KMEANS —
-            # BigQuery's contract for each model family. The persisted
-            # TRANSFORM clause replays over the input first.
-            from .sql_ml import _apply_transform
-            from .sql_ml import _inner_query as _iq
-
-            if meta["model_type"] not in ("AUTOENCODER", "PCA", "KMEANS"):
-                raise ValueError(
-                    "STRUCT(c AS contamination) needs an AUTOENCODER,"
-                    f" PCA or KMEANS model, got {meta['model_type']}"
-                )
-            if len(args) == 1:
-                # no input query -> training data; source_sql already
-                # embeds any TRANSFORM wrap
-                df_in = spark.sql(meta["source_sql"])
-            else:
-                df_in = _apply_transform(
-                    spark, _iq(args[1]), meta, drop_label=True
-                )
-            if meta["model_type"] in ("AUTOENCODER", "PCA"):
-                from .pca_model import detect_reconstruction_anomalies
-
-                out = detect_reconstruction_anomalies(
-                    spark, meta["pca"], df_in, float(mc.group(1))
-                )
-            elif meta["model_type"] == "KMEANS":
-                from .kmeans import detect_distance_anomalies
-
-                out = detect_distance_anomalies(
-                    spark, meta["kmeans"], df_in, float(mc.group(1))
-                )
-            counter[0] += 1
-            view = f"__ml_detect_{counter[0]}"
-            out.createOrReplaceTempView(view)
-            return view
-        ms = _STRUCT_THRESHOLD_RE.match(args[0])
-        if not ms:
-            raise ValueError(f"bad anomaly threshold arg: {args[0]!r}")
-        p = float(ms.group(1))
-        df = spark.sql(_inner_query(args[1]))
-        cols = meta.get("detect_cols", {})
-        out = detect_anomalies_frame(
-            spark,
-            meta["state"],
-            df,
-            cols.get("ts", "ts"),
-            cols.get("y", "y"),
-            cols.get("id"),
-            p,
-            meta.get("holiday"),
+    if len(args) not in (1, 2):
+        raise ValueError(
+            "ML.DETECT_ANOMALIES expects (MODEL m, STRUCT(p AS "
+            "anomaly_prob_threshold | contamination) [, (query)])"
         )
-        counter[0] += 1
-        view = f"__ml_detect_{counter[0]}"
-        out.createOrReplaceTempView(view)
-        return view
+    meta = registry.load_meta(name)
+    if len(args) == 1 and (
+        not _STRUCT_CONTAMINATION_RE.match(args[0])
+        or not meta.get("source_sql")
+    ):
+        raise ValueError(
+            "ML.DETECT_ANOMALIES without an input query needs a"
+            " contamination STRUCT and a model with a persisted"
+            " training source"
+        )
+    mc = _STRUCT_CONTAMINATION_RE.match(args[0])
+    if mc:
+        # contamination anomalies: reconstruction loss for
+        # AUTOENCODER/PCA, centroid distance for KMEANS — BigQuery's
+        # contract for each model family. The persisted TRANSFORM
+        # clause replays over the input first.
+        if meta["model_type"] not in ("AUTOENCODER", "PCA", "KMEANS"):
+            raise ValueError(
+                "STRUCT(c AS contamination) needs an AUTOENCODER,"
+                f" PCA or KMEANS model, got {meta['model_type']}"
+            )
+        if len(args) == 1:
+            # no input query -> training data; source_sql already
+            # embeds any TRANSFORM wrap
+            df_in = spark.sql(meta["source_sql"])
+        else:
+            df_in = _apply_transform(
+                spark, _inner_query(args[1]), meta, drop_label=True
+            )
+        if meta["model_type"] == "KMEANS":
+            from .kmeans import detect_distance_anomalies
 
-    return _sub_ml_table_calls(stmt, "ML.DETECT_ANOMALIES", handler)
+            return detect_distance_anomalies(
+                spark, meta["kmeans"], df_in, float(mc.group(1))
+            )
+        from .pca_model import detect_reconstruction_anomalies
+
+        return detect_reconstruction_anomalies(
+            spark, meta["pca"], df_in, float(mc.group(1))
+        )
+    ms = _STRUCT_THRESHOLD_RE.match(args[0])
+    if not ms:
+        raise ValueError(f"bad anomaly threshold arg: {args[0]!r}")
+    cols = meta.get("detect_cols", {})
+    return detect_anomalies_frame(
+        spark,
+        meta["state"],
+        spark.sql(_inner_query(args[1])),
+        cols.get("ts", "ts"),
+        cols.get("y", "y"),
+        cols.get("id"),
+        float(ms.group(1)),
+        meta.get("holiday"),
+    )
 
 
-_ML_ARIMA_EVALUATE_RE = re.compile(
-    r"ML\.ARIMA_EVALUATE\s*\(\s*MODEL\s+`?([\w.\-]+)`?\s*"
-    r"(?:,\s*STRUCT\s*\([^)]*\)\s*)?\)",
-    re.IGNORECASE,
-)
-
-_ML_ARIMA_COEFFICIENTS_RE = re.compile(
-    r"ML\.ARIMA_COEFFICIENTS\s*\(\s*MODEL\s+`?([\w.\-]+)`?\s*\)",
-    re.IGNORECASE,
-)
-
-
-def rewrite_ml_arima_coefficients(
-    spark: SparkSession, stmt: str, registry
-) -> str:
-    """Replace ``ML.ARIMA_COEFFICIENTS(MODEL m)`` with a per-series
-    coefficients view in BigQuery's column shape: ar_coefficients,
-    ma_coefficients, intercept_or_drift.
+def ml_arima_coefficients(
+    spark: SparkSession, registry, name, args, cte
+) -> DataFrame:
+    """``ML.ARIMA_COEFFICIENTS(MODEL m)``: per-series coefficients in
+    BigQuery's column shape: ar_coefficients, ma_coefficients,
+    intercept_or_drift.
 
     DOCUMENTED DIVERGENCE (same note as the module header): the fitted
     model is the deterministic Holt / Holt-Winters substitute, so there
@@ -1036,33 +996,24 @@ def rewrite_ml_arima_coefficients(
     (the final trend state), which is the substitute's exact analog of
     an ARIMA drift constant. Pure functions of the persisted fold
     state, so the DuckDB oracle replays every value."""
-    counter = [0]
-
-    def repl(m: re.Match) -> str:
-        meta = registry.load_meta(m.group(1))
-        rows = [
-            (s["series_id"], [], [], _r6(s["trend"]))
-            for s in meta["state"]
-        ]
-        df = spark.createDataFrame(
-            rows,
-            "series_id string, ar_coefficients array<double>,"
-            " ma_coefficients array<double>, intercept_or_drift double",
-        )
-        counter[0] += 1
-        view = f"__ml_arima_coefficients_{counter[0]}"
-        df.createOrReplaceTempView(view)
-        return view
-
-    return _ML_ARIMA_COEFFICIENTS_RE.sub(repl, stmt)
+    rows = [
+        (s["series_id"], [], [], _r6(s["trend"]))
+        for s in registry.load_meta(name)["state"]
+    ]
+    return spark.createDataFrame(
+        rows,
+        "series_id string, ar_coefficients array<double>,"
+        " ma_coefficients array<double>, intercept_or_drift double",
+    )
 
 
-def rewrite_ml_arima_evaluate(
-    spark: SparkSession, stmt: str, registry
-) -> str:
-    """Replace ``ML.ARIMA_EVALUATE(MODEL m)`` with a per-series
-    fit-diagnostics view in BigQuery's column shape: non_seasonal_p/d/q,
-    has_drift, log_likelihood, AIC, variance, seasonal_periods.
+def ml_arima_evaluate(
+    spark: SparkSession, registry, name, args, cte
+) -> DataFrame:
+    """``ML.ARIMA_EVALUATE(MODEL m[, STRUCT(...)])``: per-series
+    fit diagnostics in BigQuery's column shape: non_seasonal_p/d/q,
+    has_drift, log_likelihood, AIC, variance, seasonal_periods. The
+    STRUCT options are ignored.
 
     DOCUMENTED DIVERGENCE (same note as the module header): the fitted
     model is the deterministic Holt / Holt-Winters substitute, so there
@@ -1073,47 +1024,37 @@ def rewrite_ml_arima_evaluate(
     fold state, so the DuckDB oracle reproduces every value."""
     import math
 
-    counter = [0]
-
-    def repl(m: re.Match) -> str:
-        meta = registry.load_meta(m.group(1))
-        rows = []
-        for s in meta["state"]:
-            n_resid = int(s.get("n_resid", s["n_obs"] - 1))
-            per = int(s.get("period", 0))
-            variance = s["sse"] / n_resid
-            ll = (
-                -(n_resid / 2.0) * (math.log(2.0 * math.pi * variance) + 1.0)
-                if variance > 0
-                else None
-            )
-            k = 5 + per if per > 0 else 4
-            rows.append(
-                (
-                    s["series_id"],
-                    None,
-                    None,
-                    None,
-                    False,
-                    round(ll, 6) if ll is not None else None,
-                    round(-2.0 * ll + 2.0 * k, 6) if ll is not None else None,
-                    round(variance, 6),
-                    per if per > 0 else None,
-                )
-            )
-        df = spark.createDataFrame(
-            rows,
-            "series_id string, non_seasonal_p bigint, non_seasonal_d bigint,"
-            " non_seasonal_q bigint, has_drift boolean,"
-            " log_likelihood double, aic double, variance double,"
-            " seasonal_periods bigint",
+    rows = []
+    for s in registry.load_meta(name)["state"]:
+        n_resid = int(s.get("n_resid", s["n_obs"] - 1))
+        per = int(s.get("period", 0))
+        variance = s["sse"] / n_resid
+        ll = (
+            -(n_resid / 2.0) * (math.log(2.0 * math.pi * variance) + 1.0)
+            if variance > 0
+            else None
         )
-        counter[0] += 1
-        view = f"__ml_arima_evaluate_{counter[0]}"
-        df.createOrReplaceTempView(view)
-        return view
-
-    return _ML_ARIMA_EVALUATE_RE.sub(repl, stmt)
+        k = 5 + per if per > 0 else 4
+        rows.append(
+            (
+                s["series_id"],
+                None,
+                None,
+                None,
+                False,
+                round(ll, 6) if ll is not None else None,
+                round(-2.0 * ll + 2.0 * k, 6) if ll is not None else None,
+                round(variance, 6),
+                per if per > 0 else None,
+            )
+        )
+    return spark.createDataFrame(
+        rows,
+        "series_id string, non_seasonal_p bigint, non_seasonal_d bigint,"
+        " non_seasonal_q bigint, has_drift boolean,"
+        " log_likelihood double, aic double, variance double,"
+        " seasonal_periods bigint",
+    )
 
 
 def _r6(x: float) -> float:
@@ -1356,40 +1297,21 @@ _EXPLAIN_COLS = [
 ]
 
 
-_ML_EXPLAIN_FORECAST_RE = re.compile(
-    r"ML\.EXPLAIN_FORECAST\s*\(\s*MODEL\s+`?([\w.\-]+)`?\s*"
-    r"(?:,\s*STRUCT\s*\(\s*([^()]*?)\s*\))?\s*\)",
-    re.IGNORECASE,
-)
-
-
-def rewrite_ml_explain_forecast(
-    spark: SparkSession, stmt: str, registry
-) -> str:
-    """Replace ML.EXPLAIN_FORECAST(MODEL m [, STRUCT(n AS horizon)])
-    with a temp view of the decomposition rows (VERDICT r6 #4)."""
-    counter = [0]
-
-    def repl(m: re.Match) -> str:
-        name = m.group(1)
-        meta = registry.load_meta(name)
-        if meta.get("model_type") != "ARIMA_PLUS":
-            raise ValueError(
-                "ML.EXPLAIN_FORECAST requires an ARIMA_PLUS model"
-            )
-        h, conf = _parse_forecast_struct(m.group(2))
-        horizon = h if h is not None else int(meta.get("horizon", 10))
-        df = explain_forecast_frame(
-            spark,
-            meta["state"],
-            horizon,
-            meta.get("holiday"),
-            conf,
-            history_path=meta.get("history_path"),
-        )
-        counter[0] += 1
-        view = f"__ml_explain_forecast_{counter[0]}"
-        df.createOrReplaceTempView(view)
-        return view
-
-    return _ML_EXPLAIN_FORECAST_RE.sub(repl, stmt)
+def ml_explain_forecast(
+    spark: SparkSession, registry, name, args, cte
+) -> DataFrame:
+    """``ML.EXPLAIN_FORECAST(MODEL m [, STRUCT(n AS horizon)])``: the
+    decomposition rows (VERDICT r6 #4)."""
+    meta = registry.load_meta(name)
+    if meta.get("model_type") != "ARIMA_PLUS":
+        raise ValueError("ML.EXPLAIN_FORECAST requires an ARIMA_PLUS model")
+    h, conf = _forecast_options("ML.EXPLAIN_FORECAST", args)
+    horizon = h if h is not None else int(meta.get("horizon", 10))
+    return explain_forecast_frame(
+        spark,
+        meta["state"],
+        horizon,
+        meta.get("holiday"),
+        conf,
+        history_path=meta.get("history_path"),
+    )

@@ -21,6 +21,7 @@ has no model DDL, so the script executor intercepts these statements:
 
 from __future__ import annotations
 
+import itertools
 import os
 import re
 import shutil
@@ -35,9 +36,17 @@ from .estimators import (
     build_pipeline,
     is_classifier,
     load_model,
+    predict_output,
     predict_with_probability,
     save_model,
     strip_training_summary,
+)
+from .forecast import (
+    ml_arima_coefficients,
+    ml_arima_evaluate,
+    ml_detect_anomalies,
+    ml_explain_forecast,
+    ml_forecast,
 )
 
 _CREATE_MODEL_RE = re.compile(
@@ -1324,40 +1333,27 @@ def try_create_model(
     return df
 
 
+_MODEL_ARG_RE = re.compile(r"MODEL\s+`?([\w.\-]+)`?", re.IGNORECASE)
 
-def _sub_ml_table_calls(stmt: str, fn_name: str, handler) -> str:
-    """Replace each ``fn_name(MODEL m, ...)`` call with
-    ``handler(model_name, args)`` (a view name), using BALANCED paren
-    scanning — a non-greedy regex would truncate inner queries that
-    contain "))" (e.g. ``... ROUND(SUM(v)) AS y FROM t))``)."""
-    pat = re.compile(
-        r"\b" + fn_name.replace(".", r"\.") + r"\s*\(", re.IGNORECASE
-    )
+
+def sub_model_calls(text: str, names: tuple[str, ...], fn) -> str:
+    """``text`` with every call in code of a function in ``names``
+    (regex alternatives, as for ``sqllex.iter_calls``) whose first
+    argument is ``MODEL m`` replaced by ``fn(fn_name_lower, m, args)``.
+    ``args`` are the remaining arguments, each already rewritten the
+    same way, so the innermost call is replaced first. A call without a
+    ``MODEL`` argument (``ML.PREDICT()``) stays as written."""
     out: list[str] = []
     pos = 0
-    while True:
-        m = pat.search(stmt, pos)
-        if not m:
-            break
-        end = balanced_end(stmt, m.end() - 1)
-        if end < 0:
-            break
-        args = [
-            a.strip() for a in split_top_level(stmt[m.end() : end - 1])
-        ]
-        # malformed call with no arguments (e.g. ML.PREDICT()): treat
-        # like the MODEL-regex miss path instead of raising IndexError
-        mm = args and re.match(
-            r"MODEL\s+`?([\w.\-]+)`?$", args[0], re.IGNORECASE
-        )
-        if not mm:
-            out.append(stmt[pos : m.end()])
-            pos = m.end()
+    for start, open_idx, end, fn_name in iter_calls(text, names):
+        args = split_top_level(text[open_idx + 1 : end - 1])
+        mm = _MODEL_ARG_RE.fullmatch(args[0].strip())
+        if mm is None:
             continue
-        out.append(stmt[pos : m.start()])
-        out.append(handler(mm.group(1), args[1:]))
+        rest = [sub_model_calls(a, names, fn).strip() for a in args[1:]]
+        out += [text[pos:start], fn(fn_name, mm.group(1), rest)]
         pos = end
-    out.append(stmt[pos:])
+    out.append(text[pos:])
     return "".join(out)
 
 
@@ -1383,455 +1379,322 @@ def _score_mf(model, meta: dict, df: DataFrame) -> DataFrame:
     return out.drop(f"__{u}_idx", f"__{i}_idx")
 
 
-def rewrite_ml_transform(
-    spark: SparkSession, stmt: str, registry: ModelRegistry
-) -> str:
-    """Replace ``ML.TRANSFORM(MODEL m, (q))`` with the input query run
-    through the model's persisted TRANSFORM clause — BigQuery's way to
-    inspect exactly the features a model would see. Models created
-    without a TRANSFORM clause pass the input through unchanged (same
-    as BigQuery)."""
-    from ..dialect import extract_with_clause
+# -- ML table-function handlers ---------------------------------------
+#
+# Each handler takes (spark, registry, model name, the call's arguments
+# after MODEL m, the statement's WITH clause) and returns the call's
+# result; rewrite_ml_calls registers it as a view.
 
-    cte = extract_with_clause(stmt)
-    counter = [0]
 
-    def handler(name: str, args: list[str]) -> str:
-        meta = registry.load_meta(name)
-        if not args:
-            raise ValueError("ML.TRANSFORM needs (MODEL m, (query))")
-        df = _apply_transform(
-            spark, _inner_query(args[0]), meta, cte, drop_label=False,
-            densify=False,
+def _ml_transform(spark, registry, name, args, cte) -> DataFrame:
+    """``ML.TRANSFORM(MODEL m, (q))``: the input query run through the
+    model's persisted TRANSFORM clause — BigQuery's way to inspect
+    exactly the features a model would see. Models created without a
+    TRANSFORM clause pass the input through unchanged (same as
+    BigQuery)."""
+    meta = registry.load_meta(name)
+    if not args:
+        raise ValueError("ML.TRANSFORM needs (MODEL m, (query))")
+    return _apply_transform(
+        spark, _inner_query(args[0]), meta, cte, drop_label=False,
+        densify=False,
+    )
+
+
+def _ml_feature_info(spark, registry, name, args, cte) -> DataFrame:
+    """``ML.FEATURE_INFO(MODEL m)``: the per-feature training statistics
+    (BigQuery's column shape: input, min, max, mean, stddev,
+    category_count, null_count). Stats are recomputed from the persisted
+    (transformed) training source — the same rows the fit consumed — so
+    the DuckDB oracle can reproduce every value; numeric features report
+    min/max/mean/stddev, categorical (string) features report
+    category_count."""
+    meta = registry.load_meta(name)
+    src = meta.get("source_sql")
+    if not src:
+        raise ValueError(
+            f"ML.FEATURE_INFO(MODEL `{name}`): this model predates"
+            " source persistence — retrain it"
         )
-        counter[0] += 1
-        view = f"__ml_transform_{counter[0]}"
-        df.createOrReplaceTempView(view)
-        return view
-
-    return _sub_ml_table_calls(stmt, "ML.TRANSFORM", handler)
-
-
-def rewrite_ml_feature_info(
-    spark: SparkSession, stmt: str, registry: ModelRegistry
-) -> str:
-    """Replace ``ML.FEATURE_INFO(MODEL m)`` with the per-feature
-    training statistics view (BigQuery's column shape: input, min, max,
-    mean, stddev, category_count, null_count). Stats are recomputed
-    from the persisted (transformed) training source — the same rows
-    the fit consumed — so the DuckDB oracle can reproduce every value;
-    numeric features report min/max/mean/stddev, categorical (string)
-    features report category_count."""
-    counter = [0]
-
-    def handler(name: str, args: list[str]) -> str:
-        meta = registry.load_meta(name)
-        src = meta.get("source_sql")
-        if not src:
-            raise ValueError(
-                f"ML.FEATURE_INFO(MODEL `{name}`): this model predates"
-                " source persistence — retrain it"
-            )
-        df = spark.sql(src)
-        label = meta.get("label")
-        split_col = meta.get("data_split", {}).get("split_col")
-        feats = [
-            (c, t) for c, t in df.dtypes if c != label and c != split_col
-        ]
-        # ONE aggregation pass over all features (a per-column agg loop
-        # would be N scans of the training source at scale)
-        aggs = []
-        for i, (c, t) in enumerate(feats):
-            if t == "string" or t.startswith(("array<", "struct<")):
-                # categorical / encoded (sparse one-hot) features:
-                # category_count + nulls, no numeric moments
-                aggs += [
-                    F.count_distinct(F.col(c)).alias(f"cc_{i}"),
-                    F.count_if(F.col(c).isNull()).alias(f"nulls_{i}"),
-                ]
-            else:
-                aggs += [
-                    F.round(F.min(F.col(c)).cast("double"), 6).alias(
-                        f"mn_{i}"
-                    ),
-                    F.round(F.max(F.col(c)).cast("double"), 6).alias(
-                        f"mx_{i}"
-                    ),
-                    F.round(F.avg(F.col(c)), 6).alias(f"mean_{i}"),
-                    F.round(F.stddev_samp(F.col(c)), 6).alias(f"sd_{i}"),
-                    F.count_if(F.col(c).isNull()).alias(f"nulls_{i}"),
-                ]
-        agg = df.agg(*aggs).first() if aggs else None
-        rows = []
-        for i, (c, t) in enumerate(feats):
-            if t == "string" or t.startswith(("array<", "struct<")):
-                rows.append(
-                    (
-                        c,
-                        None,
-                        None,
-                        None,
-                        None,
-                        int(agg[f"cc_{i}"]),
-                        int(agg[f"nulls_{i}"]),
-                    )
+    df = spark.sql(src)
+    label = meta.get("label")
+    split_col = meta.get("data_split", {}).get("split_col")
+    feats = [(c, t) for c, t in df.dtypes if c != label and c != split_col]
+    # ONE aggregation pass over all features (a per-column agg loop
+    # would be N scans of the training source at scale)
+    aggs = []
+    for i, (c, t) in enumerate(feats):
+        if t == "string" or t.startswith(("array<", "struct<")):
+            # categorical / encoded (sparse one-hot) features:
+            # category_count + nulls, no numeric moments
+            aggs += [
+                F.count_distinct(F.col(c)).alias(f"cc_{i}"),
+                F.count_if(F.col(c).isNull()).alias(f"nulls_{i}"),
+            ]
+        else:
+            aggs += [
+                F.round(F.min(F.col(c)).cast("double"), 6).alias(f"mn_{i}"),
+                F.round(F.max(F.col(c)).cast("double"), 6).alias(f"mx_{i}"),
+                F.round(F.avg(F.col(c)), 6).alias(f"mean_{i}"),
+                F.round(F.stddev_samp(F.col(c)), 6).alias(f"sd_{i}"),
+                F.count_if(F.col(c).isNull()).alias(f"nulls_{i}"),
+            ]
+    agg = df.agg(*aggs).first() if aggs else None
+    rows = []
+    for i, (c, t) in enumerate(feats):
+        if t == "string" or t.startswith(("array<", "struct<")):
+            rows.append(
+                (
+                    c,
+                    None,
+                    None,
+                    None,
+                    None,
+                    int(agg[f"cc_{i}"]),
+                    int(agg[f"nulls_{i}"]),
                 )
-            else:
-                rows.append(
-                    (
-                        c,
-                        agg[f"mn_{i}"],
-                        agg[f"mx_{i}"],
-                        agg[f"mean_{i}"],
-                        agg[f"sd_{i}"],
-                        None,
-                        int(agg[f"nulls_{i}"]),
-                    )
+            )
+        else:
+            rows.append(
+                (
+                    c,
+                    agg[f"mn_{i}"],
+                    agg[f"mx_{i}"],
+                    agg[f"mean_{i}"],
+                    agg[f"sd_{i}"],
+                    None,
+                    int(agg[f"nulls_{i}"]),
                 )
-        out = spark.createDataFrame(
-            rows,
-            "input string, min double, max double, mean double,"
-            " stddev double, category_count bigint, null_count bigint",
+            )
+    return spark.createDataFrame(
+        rows,
+        "input string, min double, max double, mean double,"
+        " stddev double, category_count bigint, null_count bigint",
+    )
+
+
+def _ml_confusion_matrix(spark, registry, name, args, cte) -> DataFrame:
+    """``ML.CONFUSION_MATRIX(MODEL m, (q)[, STRUCT(t AS threshold)])``:
+    the binary confusion grid at the given threshold (default 0.5) —
+    BigQuery's shape: expected_label, row-per-actual with predicted
+    counts pivoted into columns ``_0`` / ``_1`` (classifier models
+    only)."""
+    model, meta = _load(registry, name)
+    if not is_classifier(meta["model_type"]):
+        raise ValueError(
+            f"ML.CONFUSION_MATRIX: model `{name}` is not a classifier"
         )
-        counter[0] += 1
-        view = f"__ml_feature_info_{counter[0]}"
-        out.createOrReplaceTempView(view)
-        return view
-
-    return _sub_ml_table_calls(stmt, "ML.FEATURE_INFO", handler)
-
-
-def rewrite_ml_confusion_matrix(
-    spark: SparkSession, stmt: str, registry: ModelRegistry
-) -> str:
-    """Replace ``ML.CONFUSION_MATRIX(MODEL m, (q)[, STRUCT(t AS
-    threshold)])`` with the binary confusion grid at the given
-    threshold (default 0.5) — BigQuery's shape: expected_label,
-    row-per-actual with predicted counts pivoted into columns
-    ``_0`` / ``_1`` (classifier models only)."""
-    from ..dialect import extract_with_clause
-
-    cte = extract_with_clause(stmt)
-    counter = [0]
-
-    def handler(name: str, args: list[str]) -> str:
-        model, meta = _load(registry, name)
-        if not is_classifier(meta["model_type"]):
-            raise ValueError(
-                f"ML.CONFUSION_MATRIX: model `{name}` is not a classifier"
-            )
-        threshold = 0.5
-        inner = None
-        for a in args:
-            m_t = re.search(
-                r"STRUCT\s*\(\s*([0-9.]+)\s+AS\s+threshold\s*\)",
-                a,
-                re.IGNORECASE,
-            )
-            if m_t:
-                threshold = float(m_t.group(1))
-            elif a.strip().startswith("("):
-                inner = _inner_query(a)
-        if inner is None:
-            raise ValueError(
-                "ML.CONFUSION_MATRIX needs (MODEL m, (query))"
-            )
-        df = _apply_transform(spark, inner, meta, cte, drop_label=False)
-        label = meta["label"]
-        scored = predict_with_probability(model, df)
-        pred = F.when(F.col("probability") >= threshold, 1).otherwise(0)
-        grid = (
-            scored.select(
-                F.col(label).cast("string").alias("expected_label"),
-                pred.alias("p"),
-            )
-            .groupBy("expected_label")
-            .agg(
-                F.count_if(F.col("p") == 0).alias("_0"),
-                F.count_if(F.col("p") == 1).alias("_1"),
-            )
-            .orderBy("expected_label")
+    threshold = 0.5
+    inner = None
+    for a in args:
+        m_t = re.search(
+            r"STRUCT\s*\(\s*([0-9.]+)\s+AS\s+threshold\s*\)",
+            a,
+            re.IGNORECASE,
         )
-        counter[0] += 1
-        view = f"__ml_confusion_{counter[0]}"
-        grid.createOrReplaceTempView(view)
-        return view
-
-    return _sub_ml_table_calls(stmt, "ML.CONFUSION_MATRIX", handler)
+        if m_t:
+            threshold = float(m_t.group(1))
+        elif a.strip().startswith("("):
+            inner = _inner_query(a)
+    if inner is None:
+        raise ValueError("ML.CONFUSION_MATRIX needs (MODEL m, (query))")
+    df = _apply_transform(spark, inner, meta, cte, drop_label=False)
+    label = meta["label"]
+    scored = predict_with_probability(model, df)
+    pred = F.when(F.col("probability") >= threshold, 1).otherwise(0)
+    return (
+        scored.select(
+            F.col(label).cast("string").alias("expected_label"),
+            pred.alias("p"),
+        )
+        .groupBy("expected_label")
+        .agg(
+            F.count_if(F.col("p") == 0).alias("_0"),
+            F.count_if(F.col("p") == 1).alias("_1"),
+        )
+        .orderBy("expected_label")
+    )
 
 
 ROC_THRESHOLDS = [i / 20.0 for i in range(21)]
 
 
-def rewrite_ml_roc_curve(
-    spark: SparkSession, stmt: str, registry: ModelRegistry
-) -> str:
-    """Replace ``ML.ROC_CURVE(MODEL m, (q))`` with the threshold table
-    in BigQuery's shape (threshold, recall, false_positive_rate,
-    true_positives, false_positives, true_negatives, false_negatives)
-    over a fixed 21-point threshold grid (BigQuery picks its own grid;
-    the metric definitions are identical). One aggregation pass — the
-    grid is computed from per-threshold conditional counts, not 21
-    scans."""
-    from ..dialect import extract_with_clause
-
-    cte = extract_with_clause(stmt)
-    counter = [0]
-
-    def handler(name: str, args: list[str]) -> str:
-        model, meta = _load(registry, name)
-        if not is_classifier(meta["model_type"]):
-            raise ValueError(
-                f"ML.ROC_CURVE: model `{name}` is not a classifier"
+def _ml_roc_curve(spark, registry, name, args, cte) -> DataFrame:
+    """``ML.ROC_CURVE(MODEL m, (q))``: the threshold table in BigQuery's
+    shape (threshold, recall, false_positive_rate, true_positives,
+    false_positives, true_negatives, false_negatives) over a fixed
+    21-point threshold grid (BigQuery picks its own grid; the metric
+    definitions are identical). One aggregation pass — the grid is
+    computed from per-threshold conditional counts, not 21 scans."""
+    model, meta = _load(registry, name)
+    if not is_classifier(meta["model_type"]):
+        raise ValueError(f"ML.ROC_CURVE: model `{name}` is not a classifier")
+    if not args:
+        raise ValueError("ML.ROC_CURVE needs (MODEL m, (query))")
+    df = _apply_transform(
+        spark, _inner_query(args[0]), meta, cte, drop_label=False
+    )
+    label = meta["label"]
+    scored = predict_with_probability(model, df).select(
+        F.col(label).cast("int").alias("y"),
+        F.col("probability").alias("p"),
+    )
+    aggs = []
+    for i, t in enumerate(ROC_THRESHOLDS):
+        hit = F.col("p") >= F.lit(t)
+        aggs += [
+            F.count_if(hit & (F.col("y") == 1)).alias(f"tp_{i}"),
+            F.count_if(hit & (F.col("y") == 0)).alias(f"fp_{i}"),
+            F.count_if(~hit & (F.col("y") == 0)).alias(f"tn_{i}"),
+            F.count_if(~hit & (F.col("y") == 1)).alias(f"fn_{i}"),
+        ]
+    row = scored.agg(*aggs).first()
+    out_rows = []
+    for i, t in enumerate(ROC_THRESHOLDS):
+        tp, fp = int(row[f"tp_{i}"]), int(row[f"fp_{i}"])
+        tn, fn = int(row[f"tn_{i}"]), int(row[f"fn_{i}"])
+        recall = tp / (tp + fn) if tp + fn else None
+        fpr = fp / (fp + tn) if fp + tn else None
+        out_rows.append(
+            (
+                t,
+                round(recall, 6) if recall is not None else None,
+                round(fpr, 6) if fpr is not None else None,
+                tp,
+                fp,
+                tn,
+                fn,
             )
-        if not args:
-            raise ValueError("ML.ROC_CURVE needs (MODEL m, (query))")
-        df = _apply_transform(
-            spark, _inner_query(args[0]), meta, cte, drop_label=False
         )
-        label = meta["label"]
-        scored = predict_with_probability(model, df).select(
-            F.col(label).cast("int").alias("y"),
-            F.col("probability").alias("p"),
-        )
-        aggs = []
-        for i, t in enumerate(ROC_THRESHOLDS):
-            hit = F.col("p") >= F.lit(t)
-            aggs += [
-                F.count_if(hit & (F.col("y") == 1)).alias(f"tp_{i}"),
-                F.count_if(hit & (F.col("y") == 0)).alias(f"fp_{i}"),
-                F.count_if(~hit & (F.col("y") == 0)).alias(f"tn_{i}"),
-                F.count_if(~hit & (F.col("y") == 1)).alias(f"fn_{i}"),
-            ]
-        row = scored.agg(*aggs).first()
-        out_rows = []
-        for i, t in enumerate(ROC_THRESHOLDS):
-            tp, fp = int(row[f"tp_{i}"]), int(row[f"fp_{i}"])
-            tn, fn = int(row[f"tn_{i}"]), int(row[f"fn_{i}"])
-            recall = tp / (tp + fn) if tp + fn else None
-            fpr = fp / (fp + tn) if fp + tn else None
-            out_rows.append(
-                (
-                    t,
-                    round(recall, 6) if recall is not None else None,
-                    round(fpr, 6) if fpr is not None else None,
-                    tp,
-                    fp,
-                    tn,
-                    fn,
-                )
-            )
-        out = spark.createDataFrame(
-            out_rows,
-            "threshold double, recall double, false_positive_rate double,"
-            " true_positives bigint, false_positives bigint,"
-            " true_negatives bigint, false_negatives bigint",
-        )
-        counter[0] += 1
-        view = f"__ml_roc_{counter[0]}"
-        out.createOrReplaceTempView(view)
-        return view
-
-    return _sub_ml_table_calls(stmt, "ML.ROC_CURVE", handler)
+    return spark.createDataFrame(
+        out_rows,
+        "threshold double, recall double, false_positive_rate double,"
+        " true_positives bigint, false_positives bigint,"
+        " true_negatives bigint, false_negatives bigint",
+    )
 
 
-def rewrite_ml_explain_predict(
-    spark: SparkSession, stmt: str, registry: ModelRegistry
-) -> str:
-    """Replace ``ML.EXPLAIN_PREDICT(MODEL m, (q)[, STRUCT(k AS
-    top_k_features)])`` with per-row predictions plus the top-k feature
+def _ml_explain_predict(spark, registry, name, args, cte) -> DataFrame:
+    """``ML.EXPLAIN_PREDICT(MODEL m, (q)[, STRUCT(k AS
+    top_k_features)])``: per-row predictions plus the top-k feature
     attributions. For linear/logistic models the attribution is the
     exact local contribution coef * feature_value (BigQuery uses the
     same for linear models); tree/MLP models raise a targeted error
     naming ML.GLOBAL_EXPLAIN as the supported alternative."""
-    from ..dialect import extract_with_clause
-
-    cte = extract_with_clause(stmt)
-    counter = [0]
-
-    def handler(name: str, args: list[str]) -> str:
-        model, meta = _load(registry, name)
-        if meta["model_type"] not in ("LOGISTIC_REG", "LINEAR_REG"):
-            raise ValueError(
-                "ML.EXPLAIN_PREDICT: per-row attributions are supported"
-                " for LOGISTIC_REG/LINEAR_REG (coef * value); for"
-                f" {meta['model_type']} use ML.GLOBAL_EXPLAIN"
-            )
-        top_k = 3
-        inner = None
-        for a in args:
-            m_k = re.search(
-                r"STRUCT\s*\(\s*(\d+)\s+AS\s+top_k_features\s*\)",
-                a,
-                re.IGNORECASE,
-            )
-            if m_k:
-                top_k = int(m_k.group(1))
-            elif a.strip().startswith("("):
-                inner = _inner_query(a)
-        if inner is None:
-            raise ValueError(
-                "ML.EXPLAIN_PREDICT needs (MODEL m, (query))"
-            )
-        df = _apply_transform(spark, inner, meta, cte, drop_label=True)
-        coefs = dict(_model_feature_rows(model, meta))
-        coefs.pop("__INTERCEPT__", None)
-        contribs = F.array(
-            *[
-                F.struct(
-                    F.lit(c).alias("feature"),
-                    F.round(F.col(c) * F.lit(w), 6).alias("attribution"),
-                )
-                for c, w in coefs.items()
-            ]
+    model, meta = _load(registry, name)
+    if meta["model_type"] not in ("LOGISTIC_REG", "LINEAR_REG"):
+        raise ValueError(
+            "ML.EXPLAIN_PREDICT: per-row attributions are supported"
+            " for LOGISTIC_REG/LINEAR_REG (coef * value); for"
+            f" {meta['model_type']} use ML.GLOBAL_EXPLAIN"
         )
-        ranked = F.slice(
-            F.reverse(
-                F.array_sort(
-                    contribs,
-                    lambda a, b: F.when(
-                        F.abs(a["attribution"]) < F.abs(b["attribution"]),
-                        -1,
-                    )
-                    .when(
-                        F.abs(a["attribution"]) > F.abs(b["attribution"]), 1
-                    )
-                    .otherwise(0),
-                )
-            ),
-            1,
-            top_k,
+    top_k = 3
+    inner = None
+    for a in args:
+        m_k = re.search(
+            r"STRUCT\s*\(\s*(\d+)\s+AS\s+top_k_features\s*\)",
+            a,
+            re.IGNORECASE,
         )
-        if is_classifier(meta["model_type"]):
-            scored = predict_with_probability(model, df).withColumnRenamed(
-                "prediction", "predicted_label"
+        if m_k:
+            top_k = int(m_k.group(1))
+        elif a.strip().startswith("("):
+            inner = _inner_query(a)
+    if inner is None:
+        raise ValueError("ML.EXPLAIN_PREDICT needs (MODEL m, (query))")
+    df = _apply_transform(spark, inner, meta, cte, drop_label=True)
+    coefs = dict(_model_feature_rows(model, meta))
+    coefs.pop("__INTERCEPT__", None)
+    contribs = F.array(
+        *[
+            F.struct(
+                F.lit(c).alias("feature"),
+                F.round(F.col(c) * F.lit(w), 6).alias("attribution"),
             )
-        else:
-            scored = model.transform(df).withColumnRenamed(
-                "prediction", "predicted_value"
-            )
-        drop = [
-            f.name
-            for f in scored.schema.fields
-            if f.dataType.typeName() == "vector"
+            for c, w in coefs.items()
         ]
-        out = scored.drop(*drop).withColumn(
-            "top_feature_attributions", ranked
-        )
-        counter[0] += 1
-        view = f"__ml_explain_predict_{counter[0]}"
-        out.createOrReplaceTempView(view)
-        return view
+    )
+    ranked = F.slice(
+        F.reverse(
+            F.array_sort(
+                contribs,
+                lambda a, b: F.when(
+                    F.abs(a["attribution"]) < F.abs(b["attribution"]),
+                    -1,
+                )
+                .when(F.abs(a["attribution"]) > F.abs(b["attribution"]), 1)
+                .otherwise(0),
+            )
+        ),
+        1,
+        top_k,
+    )
+    return predict_output(model, meta["model_type"], df).withColumn(
+        "top_feature_attributions", ranked
+    )
 
-    return _sub_ml_table_calls(stmt, "ML.EXPLAIN_PREDICT", handler)
 
-
-def rewrite_ml_recommend(
-    spark: SparkSession, stmt: str, registry: ModelRegistry
-) -> str:
-    """Replace ``ML.RECOMMEND(MODEL m[, (user query)])`` with a scored
-    view. BigQuery semantics: without an input, every (user, item) pair
+def _ml_recommend(spark, registry, name, args, cte) -> DataFrame:
+    """``ML.RECOMMEND(MODEL m[, (user query)])``: scored user-item
+    pairs. BigQuery semantics: without an input, every (user, item) pair
     from the training data is scored; with an input query, only the
     input's users are paired against all training items. The
-    users-by-items cross product is intentional — identical to
-    BigQuery, which warns about its size; at scale pass an input query
-    (the cross join then broadcasts the item side, |items| rows)."""
-    counter = [0]
-
-    def handler(name: str, args: list[str]) -> str:
-        model, meta = _load(registry, name)
-        if meta["model_type"] != "MATRIX_FACTORIZATION":
-            raise ValueError(
-                f"ML.RECOMMEND: model `{name}` is"
-                f" {meta['model_type']}, not MATRIX_FACTORIZATION"
-            )
-        u, i = meta["user_col"], meta["item_col"]
-        src = spark.sql(meta["source_sql"])
-        users = (
-            spark.sql(_inner_query(args[0])).select(u).distinct()
-            if args
-            else src.select(u).distinct()
+    users-by-items cross product is intentional — identical to BigQuery,
+    which warns about its size; at scale pass an input query (the cross
+    join then broadcasts the item side, |items| rows)."""
+    model, meta = _load(registry, name)
+    if meta["model_type"] != "MATRIX_FACTORIZATION":
+        raise ValueError(
+            f"ML.RECOMMEND: model `{name}` is"
+            f" {meta['model_type']}, not MATRIX_FACTORIZATION"
         )
-        items = src.select(i).distinct()
-        scored = _score_mf(
-            model, meta, users.crossJoin(F.broadcast(items))
-        )
-        counter[0] += 1
-        view = f"__ml_recommend_{counter[0]}"
-        scored.createOrReplaceTempView(view)
-        return view
+    u, i = meta["user_col"], meta["item_col"]
+    src = spark.sql(meta["source_sql"])
+    users = (
+        spark.sql(_inner_query(args[0])).select(u).distinct()
+        if args
+        else src.select(u).distinct()
+    )
+    items = src.select(i).distinct()
+    return _score_mf(model, meta, users.crossJoin(F.broadcast(items)))
 
-    return _sub_ml_table_calls(stmt, "ML.RECOMMEND", handler)
 
+def _ml_predict(spark, registry, name, args, cte) -> DataFrame:
+    """``ML.PREDICT(MODEL m, (q))``: the scored input query."""
+    inner = _inner_query(args[0])
+    meta = registry.load_meta(name)
+    if meta["model_type"] in ("KMEANS", "PCA", "AUTOENCODER"):
+        src = _apply_transform(spark, inner, meta, cte, drop_label=True)
+        if meta["model_type"] == "KMEANS":
+            from .kmeans import assign_frame
 
-def rewrite_ml_predict(
-    spark: SparkSession, stmt: str, registry: ModelRegistry
-) -> str:
-    """Replace every ML.PREDICT(MODEL m, (q)) with a temp view of the
-    scored result. Outer CTEs are re-scoped into the inner query (the
-    reference's SQL references them from inside ML.* calls)."""
-    from ..dialect import extract_with_clause
+            return assign_frame(spark, meta["kmeans"], src)
+        from .pca_model import project_frame
 
-    cte = extract_with_clause(stmt)
-    counter = [0]
-
-    def handler(name: str, args: list[str]) -> str:
-        inner = _inner_query(args[0])
-        meta0 = registry.load_meta(name)
-        if meta0["model_type"] in ("KMEANS", "PCA", "AUTOENCODER"):
-            src = _apply_transform(spark, inner, meta0, cte, drop_label=True)
-            if meta0["model_type"] == "KMEANS":
-                from .kmeans import assign_frame
-
-                scored = assign_frame(spark, meta0["kmeans"], src)
-            else:
-                from .pca_model import project_frame
-
-                scored = project_frame(spark, meta0["pca"], src)
-                if meta0["model_type"] == "AUTOENCODER":
-                    # BigQuery's autoencoder latent column names
-                    for i in range(len(meta0["pca"]["components"])):
-                        scored = scored.withColumnRenamed(
-                            f"principal_component_{i + 1}",
-                            f"latent_col_{i}",
-                        )
-            counter[0] += 1
-            view = f"__ml_predict_{counter[0]}"
-            scored.createOrReplaceTempView(view)
-            return view
-        model, meta = load_model(registry.path(name)), meta0
-        df = _apply_transform(spark, inner, meta, cte, drop_label=True)
-        if meta["model_type"] == "MATRIX_FACTORIZATION":
-            scored = _score_mf(model, meta, df)
-        elif is_classifier(meta["model_type"]):
-            scored = predict_with_probability(model, df).withColumnRenamed(
-                "prediction", "predicted_label"
-            )
-        else:
-            scored = model.transform(df).withColumnRenamed(
-                "prediction", "predicted_value"
-            )
-        drop = [f.name for f in scored.schema.fields if f.dataType.typeName() == "vector"]
-        scored = scored.drop(*drop)
-        counter[0] += 1
-        view = f"__ml_predict_{counter[0]}"
-        scored.createOrReplaceTempView(view)
-        return view
-
-    return _sub_ml_table_calls(stmt, "ML.PREDICT", handler)
+        scored = project_frame(spark, meta["pca"], src)
+        if meta["model_type"] == "AUTOENCODER":
+            # BigQuery's autoencoder latent column names
+            for i in range(len(meta["pca"]["components"])):
+                scored = scored.withColumnRenamed(
+                    f"principal_component_{i + 1}", f"latent_col_{i}"
+                )
+        return scored
+    model = load_model(registry.path(name))
+    df = _apply_transform(spark, inner, meta, cte, drop_label=True)
+    if meta["model_type"] == "MATRIX_FACTORIZATION":
+        return _score_mf(model, meta, df)
+    return predict_output(model, meta["model_type"], df)
 
 
 EMBED_DIM = 8
 
 
-def rewrite_ml_generate_embedding(
-    spark: SparkSession, stmt: str, registry: ModelRegistry
-) -> str:
-    """Replace ``ML.GENERATE_EMBEDDING(MODEL m, (q))`` with a temp view
-    adding ``ml_generate_embedding_result`` (ARRAY<FLOAT64>) and
-    ``ml_generate_embedding_status`` ('' on success) to the input rows
-    — BigQuery's output contract for text embedding
-    (the input query must expose a ``content`` STRING column).
+def _ml_generate_embedding(spark, registry, name, args, cte) -> DataFrame:
+    """``ML.GENERATE_EMBEDDING(MODEL m, (q))``: the input rows plus
+    ``ml_generate_embedding_result`` (ARRAY<FLOAT64>) and
+    ``ml_generate_embedding_status`` ('' on success) — BigQuery's output
+    contract for text embedding (the input query must expose a
+    ``content`` STRING column).
 
     DOCUMENTED DIVERGENCE: BigQuery delegates to a hosted remote model
     over a connection; no such endpoint exists in-cluster, so the
@@ -1849,62 +1712,49 @@ def rewrite_ml_generate_embedding(
     map-only at any corpus size."""
     from ..functions import hash_str
 
-    counter = [0]
-
-    def handler(name: str, args: list[str]) -> str:
-        if not args:
-            raise ValueError(
-                "ML.GENERATE_EMBEDDING needs (MODEL m, (query))"
-            )
-        df = spark.sql(_inner_query(args[0]))
-        if "content" not in df.columns:
-            raise ValueError(
-                "ML.GENERATE_EMBEDDING: the input query must expose a"
-                " 'content' STRING column (BigQuery's contract)"
-            )
-        toks = F.filter(
-            F.split(F.lower(F.col("content")), "[^a-z0-9]+"),
-            lambda x: x != "",
+    if not args:
+        raise ValueError("ML.GENERATE_EMBEDDING needs (MODEL m, (query))")
+    df = spark.sql(_inner_query(args[0]))
+    if "content" not in df.columns:
+        raise ValueError(
+            "ML.GENERATE_EMBEDDING: the input query must expose a"
+            " 'content' STRING column (BigQuery's contract)"
         )
-        # ONE fold with an EMBED_DIM-wide accumulator instead of
-        # EMBED_DIM separate aggregates (r11, guide §1.2): HOF lambdas
-        # evaluate interpreted, so the old shape re-split and re-hashed
-        # the content once per dimension. Per-dimension vote order is
-        # unchanged (outer fold over tokens, inner zip over dims), so
-        # the sums are IEEE-identical.
-        suffixes = F.array(*[F.lit(f":{d}") for d in range(EMBED_DIM)])
-        zero = F.array(*[F.lit(0.0) for _ in range(EMBED_DIM)])
-        emb = F.aggregate(
-            F.col("__ge_toks"),
-            zero,
-            lambda acc, t: F.zip_with(
-                acc,
-                suffixes,
-                lambda a, sfx: a
-                + F.when(
-                    F.pmod(hash_str(F.concat(t, sfx)), F.lit(2)) == 0,
-                    F.lit(1.0),
-                ).otherwise(F.lit(-1.0)),
-            ),
-        )
-        norm = F.sqrt(
-            F.aggregate(emb, F.lit(0.0), lambda a, x: a + x * x)
-        )
-        result = F.when(
-            norm > 0, F.transform(emb, lambda x: x / norm)
-        ).otherwise(emb)
-        out = (
-            df.withColumn("__ge_toks", toks)
-            .withColumn("ml_generate_embedding_result", result)
-            .withColumn("ml_generate_embedding_status", F.lit(""))
-            .drop("__ge_toks")
-        )
-        counter[0] += 1
-        view = f"__ml_generate_embedding_{counter[0]}"
-        out.createOrReplaceTempView(view)
-        return view
-
-    return _sub_ml_table_calls(stmt, "ML.GENERATE_EMBEDDING", handler)
+    toks = F.filter(
+        F.split(F.lower(F.col("content")), "[^a-z0-9]+"),
+        lambda x: x != "",
+    )
+    # ONE fold with an EMBED_DIM-wide accumulator instead of
+    # EMBED_DIM separate aggregates (r11, guide §1.2): HOF lambdas
+    # evaluate interpreted, so the old shape re-split and re-hashed
+    # the content once per dimension. Per-dimension vote order is
+    # unchanged (outer fold over tokens, inner zip over dims), so
+    # the sums are IEEE-identical.
+    suffixes = F.array(*[F.lit(f":{d}") for d in range(EMBED_DIM)])
+    zero = F.array(*[F.lit(0.0) for _ in range(EMBED_DIM)])
+    emb = F.aggregate(
+        F.col("__ge_toks"),
+        zero,
+        lambda acc, t: F.zip_with(
+            acc,
+            suffixes,
+            lambda a, sfx: a
+            + F.when(
+                F.pmod(hash_str(F.concat(t, sfx)), F.lit(2)) == 0,
+                F.lit(1.0),
+            ).otherwise(F.lit(-1.0)),
+        ),
+    )
+    norm = F.sqrt(F.aggregate(emb, F.lit(0.0), lambda a, x: a + x * x))
+    result = F.when(
+        norm > 0, F.transform(emb, lambda x: x / norm)
+    ).otherwise(emb)
+    return (
+        df.withColumn("__ge_toks", toks)
+        .withColumn("ml_generate_embedding_result", result)
+        .withColumn("ml_generate_embedding_status", F.lit(""))
+        .drop("__ge_toks")
+    )
 
 
 def _model_feature_rows(model, meta: dict) -> list[tuple[str, float]]:
@@ -1924,433 +1774,346 @@ def _model_feature_rows(model, meta: dict) -> list[tuple[str, float]]:
     return list(zip(feats, vals))
 
 
-_ML_TRAINING_INFO_RE = re.compile(
-    r"ML\.TRAINING_INFO\s*\(\s*MODEL\s+`?([\w.\-]+)`?\s*\)", re.IGNORECASE
-)
-
-
-def rewrite_ml_training_info(
-    spark: SparkSession, stmt: str, registry: ModelRegistry
-) -> str:
-    """``ML.TRAINING_INFO(MODEL m)`` -> per-iteration training table in
-    BigQuery's column shape (training_run, iteration, loss, eval_loss,
-    learning_rate, duration_ms). The loss column is the REAL optimizer
-    objective history Spark's summary exposed at fit time (persisted in
-    the meta — summaries do not survive model reload); eval_loss /
-    learning_rate / duration_ms are NULL — Spark's LBFGS/OWLQN exposes
-    no per-iteration eval pass, step size, or wall time (documented).
-    Models whose estimator has no objective history (tree ensembles)
-    reject loudly naming ML.FEATURE_IMPORTANCE instead."""
-    counter = [0]
-
-    def repl(m: re.Match) -> str:
-        meta = registry.load_meta(m.group(1))
-        hist = meta.get("loss_history")
-        if not hist:
-            raise ValueError(
-                f"ML.TRAINING_INFO: {meta['model_type']} exposes no"
-                " per-iteration objective history (tree ensembles:"
-                " inspect ML.FEATURE_IMPORTANCE / ML.GLOBAL_EXPLAIN)"
-            )
-        rows = [
-            (1, i, round(float(loss), 6), None, None, None)
-            for i, loss in enumerate(hist)
-        ]
-        df = spark.createDataFrame(
-            rows,
-            "training_run bigint, iteration bigint, loss double,"
-            " eval_loss double, learning_rate double, duration_ms bigint",
+def _ml_training_info(spark, registry, name, args, cte) -> DataFrame:
+    """``ML.TRAINING_INFO(MODEL m)``: the per-iteration training table
+    in BigQuery's column shape (training_run, iteration, loss,
+    eval_loss, learning_rate, duration_ms). The loss column is the REAL
+    optimizer objective history Spark's summary exposed at fit time
+    (persisted in the meta — summaries do not survive model reload);
+    eval_loss / learning_rate / duration_ms are NULL — Spark's
+    LBFGS/OWLQN exposes no per-iteration eval pass, step size, or wall
+    time (documented). Models whose estimator has no objective history
+    (tree ensembles) reject loudly naming ML.FEATURE_IMPORTANCE
+    instead."""
+    meta = registry.load_meta(name)
+    hist = meta.get("loss_history")
+    if not hist:
+        raise ValueError(
+            f"ML.TRAINING_INFO: {meta['model_type']} exposes no"
+            " per-iteration objective history (tree ensembles:"
+            " inspect ML.FEATURE_IMPORTANCE / ML.GLOBAL_EXPLAIN)"
         )
-        counter[0] += 1
-        view = f"__ml_training_info_{counter[0]}"
-        df.createOrReplaceTempView(view)
-        return view
-
-    return _ML_TRAINING_INFO_RE.sub(repl, stmt)
-
-
-_ML_FEATURE_IMPORTANCE_RE = re.compile(
-    r"ML\.FEATURE_IMPORTANCE\s*\(\s*MODEL\s+`?([\w.\-]+)`?\s*\)",
-    re.IGNORECASE,
-)
-
-
-def rewrite_ml_feature_importance(
-    spark: SparkSession, stmt: str, registry: ModelRegistry
-) -> str:
-    """``ML.FEATURE_IMPORTANCE(MODEL m)`` -> (feature,
-    importance_weight, importance_gain, importance_cover) for tree
-    ensembles — BigQuery's boosted-tree importance table.
-    importance_weight carries Spark's impurity-based
-    featureImportances; gain/cover are NULL (Spark MLlib exposes a
-    single importance measure — documented divergence)."""
-    counter = [0]
-
-    def repl(m: re.Match) -> str:
-        model, meta = _load(registry, m.group(1))
-        est = model.stages[-1]
-        if not hasattr(est, "featureImportances"):
-            raise ValueError(
-                f"ML.FEATURE_IMPORTANCE needs a tree-ensemble model"
-                f" (BOOSTED_TREE_*/RANDOM_FOREST_*), got"
-                f" {meta['model_type']} — linear models: ML.WEIGHTS"
-            )
-        feats = meta["features"]
-        rows = [
-            (f, round(float(est.featureImportances[i]), 6), None, None)
-            for i, f in enumerate(feats)
-        ]
-        df = spark.createDataFrame(
-            rows,
-            "feature string, importance_weight double,"
-            " importance_gain double, importance_cover double",
-        )
-        counter[0] += 1
-        view = f"__ml_feature_importance_{counter[0]}"
-        df.createOrReplaceTempView(view)
-        return view
-
-    return _ML_FEATURE_IMPORTANCE_RE.sub(repl, stmt)
-
-
-_ML_PC_RE = re.compile(
-    r"ML\.PRINCIPAL_COMPONENTS\s*\(\s*MODEL\s+`?([\w.\-]+)`?\s*\)",
-    re.IGNORECASE,
-)
-_ML_PC_INFO_RE = re.compile(
-    r"ML\.PRINCIPAL_COMPONENT_INFO\s*\(\s*MODEL\s+`?([\w.\-]+)`?\s*\)",
-    re.IGNORECASE,
-)
-
-
-def rewrite_ml_principal_components(
-    spark: SparkSession, stmt: str, registry: ModelRegistry
-) -> str:
-    """``ML.PRINCIPAL_COMPONENTS(MODEL m)`` /
-    ``ML.PRINCIPAL_COMPONENT_INFO(MODEL m)`` -> loading / eigenvalue
-    tables in BigQuery's column shapes (PCA docs)."""
-    from .pca_model import (
-        principal_component_info_frame,
-        principal_components_frame,
+    rows = [
+        (1, i, round(float(loss), 6), None, None, None)
+        for i, loss in enumerate(hist)
+    ]
+    return spark.createDataFrame(
+        rows,
+        "training_run bigint, iteration bigint, loss double,"
+        " eval_loss double, learning_rate double, duration_ms bigint",
     )
 
-    counter = [0]
 
-    def make(frame_fn):
-        def repl(m: re.Match) -> str:
-            meta = registry.load_meta(m.group(1))
-            if meta["model_type"] != "PCA":
-                raise ValueError(
-                    "ML.PRINCIPAL_COMPONENTS/_INFO requires a PCA model,"
-                    f" got {meta['model_type']}"
-                )
-            df = frame_fn(spark, meta["pca"])
-            counter[0] += 1
-            view = f"__ml_pc_{counter[0]}"
-            df.createOrReplaceTempView(view)
-            return view
-
-        return repl
-
-    # _INFO first: its name contains the other's prefix
-    stmt = _ML_PC_INFO_RE.sub(make(principal_component_info_frame), stmt)
-    return _ML_PC_RE.sub(make(principal_components_frame), stmt)
-
-
-_ML_CENTROIDS_RE = re.compile(
-    r"ML\.CENTROIDS\s*\(\s*MODEL\s+`?([\w.\-]+)`?\s*\)", re.IGNORECASE
-)
+def _ml_feature_importance(spark, registry, name, args, cte) -> DataFrame:
+    """``ML.FEATURE_IMPORTANCE(MODEL m)``: (feature, importance_weight,
+    importance_gain, importance_cover) for tree ensembles — BigQuery's
+    boosted-tree importance table. importance_weight carries Spark's
+    impurity-based featureImportances; gain/cover are NULL (Spark MLlib
+    exposes a single importance measure — documented divergence)."""
+    model, meta = _load(registry, name)
+    est = model.stages[-1]
+    if not hasattr(est, "featureImportances"):
+        raise ValueError(
+            f"ML.FEATURE_IMPORTANCE needs a tree-ensemble model"
+            f" (BOOSTED_TREE_*/RANDOM_FOREST_*), got"
+            f" {meta['model_type']} — linear models: ML.WEIGHTS"
+        )
+    rows = [
+        (f, round(float(est.featureImportances[i]), 6), None, None)
+        for i, f in enumerate(meta["features"])
+    ]
+    return spark.createDataFrame(
+        rows,
+        "feature string, importance_weight double,"
+        " importance_gain double, importance_cover double",
+    )
 
 
-def rewrite_ml_centroids(
-    spark: SparkSession, stmt: str, registry: ModelRegistry
-) -> str:
-    """``ML.CENTROIDS(MODEL m)`` -> (centroid_id, feature,
+def _pca_state(registry, name) -> dict:
+    meta = registry.load_meta(name)
+    if meta["model_type"] != "PCA":
+        raise ValueError(
+            "ML.PRINCIPAL_COMPONENTS/_INFO requires a PCA model,"
+            f" got {meta['model_type']}"
+        )
+    return meta["pca"]
+
+
+def _ml_principal_components(spark, registry, name, args, cte) -> DataFrame:
+    """``ML.PRINCIPAL_COMPONENTS(MODEL m)``: the loading table in
+    BigQuery's column shape (PCA docs)."""
+    from .pca_model import principal_components_frame
+
+    return principal_components_frame(spark, _pca_state(registry, name))
+
+
+def _ml_principal_component_info(
+    spark, registry, name, args, cte
+) -> DataFrame:
+    """``ML.PRINCIPAL_COMPONENT_INFO(MODEL m)``: the eigenvalue table in
+    BigQuery's column shape (PCA docs)."""
+    from .pca_model import principal_component_info_frame
+
+    return principal_component_info_frame(spark, _pca_state(registry, name))
+
+
+def _ml_centroids(spark, registry, name, args, cte) -> DataFrame:
+    """``ML.CENTROIDS(MODEL m)``: (centroid_id, feature,
     numerical_value) rows in the original feature space — BigQuery's
     KMEANS centroid table (clustering docs)."""
-    counter = [0]
+    meta = registry.load_meta(name)
+    if meta["model_type"] != "KMEANS":
+        raise ValueError(
+            f"ML.CENTROIDS requires a KMEANS model, got {meta['model_type']}"
+        )
+    from .kmeans import centroids_frame
 
-    def repl(m: re.Match) -> str:
-        meta = registry.load_meta(m.group(1))
-        if meta["model_type"] != "KMEANS":
-            raise ValueError(
-                f"ML.CENTROIDS requires a KMEANS model, got "
-                f"{meta['model_type']}"
-            )
-        from .kmeans import centroids_frame
-
-        df = centroids_frame(spark, meta["kmeans"])
-        counter[0] += 1
-        view = f"__ml_centroids_{counter[0]}"
-        df.createOrReplaceTempView(view)
-        return view
-
-    return _ML_CENTROIDS_RE.sub(repl, stmt)
+    return centroids_frame(spark, meta["kmeans"])
 
 
-def rewrite_ml_weights(
-    spark: SparkSession, stmt: str, registry: ModelRegistry
-) -> str:
-    """``ML.WEIGHTS(MODEL m)`` -> (processed_input, weight) rows — the
+def _ml_weights(spark, registry, name, args, cte) -> DataFrame:
+    """``ML.WEIGHTS(MODEL m)``: (processed_input, weight) rows — the
     linear-model coefficient table BigQuery exposes (plus the intercept
     row BigQuery labels __INTERCEPT__)."""
-    counter = [0]
-
-    def handler(name: str, args: list[str]) -> str:
-        model, meta = _load(registry, name)
-        est = model.stages[-1]
-        if not hasattr(est, "coefficients"):
-            raise ValueError(
-                f"ML.WEIGHTS requires a linear model; {meta['model_type']} "
-                "has none — use ML.GLOBAL_EXPLAIN for tree importances"
-            )
-        rows = [
-            (f, round(w, 6)) for f, w in _model_feature_rows(model, meta)
-        ] + [("__INTERCEPT__", round(float(est.intercept), 6))]
-        out = spark.createDataFrame(rows, "processed_input string, weight double")
-        counter[0] += 1
-        view = f"__ml_weights_{counter[0]}"
-        out.createOrReplaceTempView(view)
-        return view
-
-    return _sub_ml_table_calls(stmt, "ML.WEIGHTS", handler)
+    model, meta = _load(registry, name)
+    est = model.stages[-1]
+    if not hasattr(est, "coefficients"):
+        raise ValueError(
+            f"ML.WEIGHTS requires a linear model; {meta['model_type']} "
+            "has none — use ML.GLOBAL_EXPLAIN for tree importances"
+        )
+    rows = [
+        (f, round(w, 6)) for f, w in _model_feature_rows(model, meta)
+    ] + [("__INTERCEPT__", round(float(est.intercept), 6))]
+    return spark.createDataFrame(rows, "processed_input string, weight double")
 
 
-def rewrite_ml_trial_info(
-    spark: SparkSession, stmt: str, registry: ModelRegistry
-) -> str:
-    """``ML.TRIAL_INFO(MODEL m)`` -> one row per hyperparameter-tuning
+def _ml_trial_info(spark, registry, name, args, cte) -> DataFrame:
+    """``ML.TRIAL_INFO(MODEL m)``: one row per hyperparameter-tuning
     trial: trial_id, hyperparameters (sorted-key JSON — BigQuery's
     STRUCT flattened to a stable string), objective/objective_value
     (its hparam_tuning_evaluation_metrics), status, is_optimal. Errors
     descriptively for models trained without NUM_TRIALS."""
     import json
 
-    counter = [0]
-
-    def handler(name: str, args: list[str]) -> str:
-        _, meta = _load(registry, name)
-        trials = meta.get("trials")
-        if not trials:
-            raise ValueError(
-                f"model {name} was not hyperparameter-tuned — CREATE it"
-                " with NUM_TRIALS and HPARAM_RANGE/HPARAM_CANDIDATES"
-                " options to get ML.TRIAL_INFO output"
-            )
-        rows = [
-            (
-                t["trial_id"],
-                json.dumps(t["hparams"], sort_keys=True),
-                t["objective"],
-                float(t["value"]),
-                t["status"],
-                bool(t["is_optimal"]),
-            )
-            for t in trials
-        ]
-        out = spark.createDataFrame(
-            rows,
-            "trial_id bigint, hyperparameters string, objective string,"
-            " objective_value double, status string, is_optimal boolean",
+    trials = registry.load_meta(name).get("trials")
+    if not trials:
+        raise ValueError(
+            f"model {name} was not hyperparameter-tuned — CREATE it"
+            " with NUM_TRIALS and HPARAM_RANGE/HPARAM_CANDIDATES"
+            " options to get ML.TRIAL_INFO output"
         )
-        counter[0] += 1
-        view = f"__ml_trials_{counter[0]}"
-        out.createOrReplaceTempView(view)
-        return view
+    rows = [
+        (
+            t["trial_id"],
+            json.dumps(t["hparams"], sort_keys=True),
+            t["objective"],
+            float(t["value"]),
+            t["status"],
+            bool(t["is_optimal"]),
+        )
+        for t in trials
+    ]
+    return spark.createDataFrame(
+        rows,
+        "trial_id bigint, hyperparameters string, objective string,"
+        " objective_value double, status string, is_optimal boolean",
+    )
 
-    return _sub_ml_table_calls(stmt, "ML.TRIAL_INFO", handler)
 
-
-def rewrite_ml_global_explain(
-    spark: SparkSession, stmt: str, registry: ModelRegistry
-) -> str:
-    """``ML.GLOBAL_EXPLAIN(MODEL m)`` -> (feature, attribution) rows,
+def _ml_global_explain(spark, registry, name, args, cte) -> DataFrame:
+    """``ML.GLOBAL_EXPLAIN(MODEL m)``: (feature, attribution) rows,
     attribution descending — |coefficient| for linear models,
     featureImportances for tree ensembles (BigQuery's global feature
     attribution table; its Shapley variants for trees are approximated
     by the ensemble's own impurity importances, documented)."""
-    counter = [0]
-
-    def handler(name: str, args: list[str]) -> str:
-        model, meta = _load(registry, name)
-        rows = sorted(
-            (
-                (f, round(abs(w), 6))
-                for f, w in _model_feature_rows(model, meta)
-            ),
-            key=lambda t: (-t[1], t[0]),
-        )
-        out = spark.createDataFrame(rows, "feature string, attribution double")
-        counter[0] += 1
-        view = f"__ml_explain_{counter[0]}"
-        out.createOrReplaceTempView(view)
-        return view
-
-    return _sub_ml_table_calls(stmt, "ML.GLOBAL_EXPLAIN", handler)
+    model, meta = _load(registry, name)
+    rows = sorted(
+        ((f, round(abs(w), 6)) for f, w in _model_feature_rows(model, meta)),
+        key=lambda t: (-t[1], t[0]),
+    )
+    return spark.createDataFrame(rows, "feature string, attribution double")
 
 
-def rewrite_ml_evaluate(
-    spark: SparkSession, stmt: str, registry: ModelRegistry
-) -> str:
-    """Replace ML.EVALUATE(MODEL m, (q)) with a 1-row metrics view."""
-    from ..dialect import extract_with_clause
-
-    cte = extract_with_clause(stmt)
-    counter = [0]
-
-    def handler(name: str, args: list[str]) -> str:
-        meta = registry.load_meta(name)
-        if meta["model_type"] == "KMEANS":
-            # clustering metrics: Davies-Bouldin + mean squared distance
-            # (BigQuery's clustering evaluate row); no input -> the
-            # training input, as in BigQuery
-            from .kmeans import evaluate_frame
-
-            if args:
-                df = _apply_transform(
-                    spark, _inner_query(args[0]), meta, cte,
-                    drop_label=True,
-                )
-            else:
-                # source_sql already embeds the TRANSFORM wrap
-                df = spark.sql(meta["source_sql"])
-            out = evaluate_frame(spark, meta["kmeans"], df)
-            counter[0] += 1
-            view = f"__ml_evaluate_{counter[0]}"
-            out.createOrReplaceTempView(view)
-            return view
-        if meta["model_type"] == "AUTOENCODER":
-            # reconstruction-quality metrics over the input (training
-            # input when no query given, as in BigQuery)
-            from .pca_model import autoencoder_evaluate_frame
-
-            if args:
-                df = _apply_transform(
-                    spark, _inner_query(args[0]), meta, cte,
-                    drop_label=True,
-                )
-            else:
-                # source_sql already embeds the TRANSFORM wrap
-                df = spark.sql(meta["source_sql"])
-            out = autoencoder_evaluate_frame(spark, meta["pca"], df)
-            counter[0] += 1
-            view = f"__ml_evaluate_{counter[0]}"
-            out.createOrReplaceTempView(view)
-            return view
-        if meta["model_type"] == "PCA":
-            # BigQuery's PCA evaluate row: total explained variance
-            from .kmeans import _round6
-
-            st = meta["pca"]
-            tot = st["total_var"]
-            ratio = (
-                _round6(sum(st["eigenvalues"]) / tot) if tot > 0 else 0.0
-            )
-            out = spark.createDataFrame(
-                [(ratio,)], "total_explained_variance_ratio double"
-            )
-            counter[0] += 1
-            view = f"__ml_evaluate_{counter[0]}"
-            out.createOrReplaceTempView(view)
-            return view
-        if not args and meta["model_type"] != "ARIMA_PLUS":
-            # BigQuery evaluates on the reserved training split when the
-            # input query is omitted. CREATE MODEL persists the source
-            # SQL + holdout hash predicate, so rebuild that split here;
-            # models trained before the split was persisted (or whose
-            # source tables have vanished) still fail loudly.
-            src = meta.get("source_sql")
-            if not src:
-                raise ValueError(
-                    f"ML.EVALUATE(MODEL `{name}`) without an input query "
-                    "needs the persisted training split, but this model "
-                    "predates split persistence — retrain it, or pass "
-                    "ML.EVALUATE(MODEL `m`, (SELECT <features>, <label> "
-                    "FROM ...))"
-                )
-            try:
-                df = spark.sql(src)
-            except Exception as exc:
-                raise ValueError(
-                    f"ML.EVALUATE(MODEL `{name}`) could not re-read the "
-                    f"persisted training source ({exc}); the source tables "
-                    "are no longer available — pass an explicit input query"
-                ) from exc
-            pred = meta.get("data_split", {}).get("holdout_predicate")
-            # no reserved split (NO_SPLIT / AUTO_SPLIT under 500 rows):
-            # BigQuery evaluates on the entire training input
-            if pred:
-                df = df.filter(F.expr(pred))
-            return _metrics_view(name, df)
-        inner = _inner_query(args[0]) if args else "SELECT 1"
-        if meta["model_type"] == "ARIMA_PLUS":
-            # per-series fit diagnostics from the Holt state: one-step
-            # residual RMSE + observation count (BigQuery's ARIMA
-            # evaluate reports its own fit stats; same role). The input
-            # query, when given, is ignored — as in BigQuery, ARIMA
-            # evaluation describes the fitted model.
-            import math
-
-            rows = [
-                (
-                    s["series_id"],
-                    round(
-                        math.sqrt(
-                            s["sse"] / s.get("n_resid", s["n_obs"] - 1)
-                        ),
-                        6,
-                    ),
-                    int(s["n_obs"]),
-                )
-                for s in meta["state"]
-            ]
-            metrics = spark.createDataFrame(
-                rows, "series_id string, rmse double, n_obs int"
-            )
-            counter[0] += 1
-            view = f"__ml_evaluate_{counter[0]}"
-            metrics.createOrReplaceTempView(view)
-            return view
-        # evaluation inputs carry the label, so the full TRANSFORM list
-        # (label pass-through included) replays over them
-        df = _apply_transform(spark, inner, meta, cte, drop_label=False)
-        return _metrics_view(name, df)
-
-    def _metrics_view(name: str, df: DataFrame) -> str:
-        model, meta = _load(registry, name)
-        label = meta["label"]
-        if is_classifier(meta["model_type"]):
-            from pyspark.ml.evaluation import (
-                BinaryClassificationEvaluator,
-                MulticlassClassificationEvaluator,
-            )
-
-            scored = model.transform(df)
-            auc = BinaryClassificationEvaluator(
-                labelCol=label, rawPredictionCol="rawPrediction"
-            ).evaluate(scored)
-            acc = MulticlassClassificationEvaluator(
-                labelCol=label, predictionCol="prediction", metricName="accuracy"
-            ).evaluate(scored)
-            metrics = spark.createDataFrame(
-                [(float(auc), float(acc))], "roc_auc double, accuracy double"
+def _ml_evaluate(spark, registry, name, args, cte) -> DataFrame:
+    """``ML.EVALUATE(MODEL m[, (q)])``: a 1-row metrics table (one row
+    per series for ARIMA_PLUS)."""
+    meta = registry.load_meta(name)
+    model_type = meta["model_type"]
+    if model_type in ("KMEANS", "AUTOENCODER"):
+        # clustering metrics (Davies-Bouldin + mean squared distance)
+        # or reconstruction-quality metrics over the input; no input ->
+        # the training input, as in BigQuery
+        if args:
+            df = _apply_transform(
+                spark, _inner_query(args[0]), meta, cte, drop_label=True
             )
         else:
-            from pyspark.ml.evaluation import RegressionEvaluator
+            # source_sql already embeds the TRANSFORM wrap
+            df = spark.sql(meta["source_sql"])
+        if model_type == "KMEANS":
+            from .kmeans import evaluate_frame
 
-            scored = model.transform(df)
-            rmse = RegressionEvaluator(
-                labelCol=label, predictionCol="prediction", metricName="rmse"
-            ).evaluate(scored)
-            r2 = RegressionEvaluator(
-                labelCol=label, predictionCol="prediction", metricName="r2"
-            ).evaluate(scored)
-            metrics = spark.createDataFrame(
-                [(float(rmse), float(r2))], "rmse double, r2 double"
+            return evaluate_frame(spark, meta["kmeans"], df)
+        from .pca_model import autoencoder_evaluate_frame
+
+        return autoencoder_evaluate_frame(spark, meta["pca"], df)
+    if model_type == "PCA":
+        # BigQuery's PCA evaluate row: total explained variance
+        from .kmeans import _round6
+
+        st = meta["pca"]
+        tot = st["total_var"]
+        ratio = _round6(sum(st["eigenvalues"]) / tot) if tot > 0 else 0.0
+        return spark.createDataFrame(
+            [(ratio,)], "total_explained_variance_ratio double"
+        )
+    if model_type == "ARIMA_PLUS":
+        # per-series fit diagnostics from the Holt state: one-step
+        # residual RMSE + observation count (BigQuery's ARIMA evaluate
+        # reports its own fit stats; same role). The input query, when
+        # given, is ignored — as in BigQuery, ARIMA evaluation describes
+        # the fitted model.
+        import math
+
+        rows = [
+            (
+                s["series_id"],
+                round(
+                    math.sqrt(s["sse"] / s.get("n_resid", s["n_obs"] - 1)), 6
+                ),
+                int(s["n_obs"]),
             )
-        counter[0] += 1
-        view = f"__ml_evaluate_{counter[0]}"
-        metrics.createOrReplaceTempView(view)
-        return view
+            for s in meta["state"]
+        ]
+        return spark.createDataFrame(
+            rows, "series_id string, rmse double, n_obs int"
+        )
+    if args:
+        # evaluation inputs carry the label, so the full TRANSFORM list
+        # (label pass-through included) replays over them
+        df = _apply_transform(
+            spark, _inner_query(args[0]), meta, cte, drop_label=False
+        )
+        return _metrics_frame(spark, registry, name, df)
+    # BigQuery evaluates on the reserved training split when the input
+    # query is omitted. CREATE MODEL persists the source SQL + holdout
+    # hash predicate, so rebuild that split here; models trained before
+    # the split was persisted (or whose source tables have vanished)
+    # still fail loudly.
+    src = meta.get("source_sql")
+    if not src:
+        raise ValueError(
+            f"ML.EVALUATE(MODEL `{name}`) without an input query "
+            "needs the persisted training split, but this model "
+            "predates split persistence — retrain it, or pass "
+            "ML.EVALUATE(MODEL `m`, (SELECT <features>, <label> "
+            "FROM ...))"
+        )
+    try:
+        df = spark.sql(src)
+    except Exception as exc:
+        raise ValueError(
+            f"ML.EVALUATE(MODEL `{name}`) could not re-read the "
+            f"persisted training source ({exc}); the source tables "
+            "are no longer available — pass an explicit input query"
+        ) from exc
+    pred = meta.get("data_split", {}).get("holdout_predicate")
+    # no reserved split (NO_SPLIT / AUTO_SPLIT under 500 rows):
+    # BigQuery evaluates on the entire training input
+    if pred:
+        df = df.filter(F.expr(pred))
+    return _metrics_frame(spark, registry, name, df)
 
-    return _sub_ml_table_calls(stmt, "ML.EVALUATE", handler)
+
+def _metrics_frame(spark, registry, name: str, df: DataFrame) -> DataFrame:
+    model, meta = _load(registry, name)
+    label = meta["label"]
+    scored = model.transform(df)
+    if is_classifier(meta["model_type"]):
+        from pyspark.ml.evaluation import (
+            BinaryClassificationEvaluator,
+            MulticlassClassificationEvaluator,
+        )
+
+        auc = BinaryClassificationEvaluator(
+            labelCol=label, rawPredictionCol="rawPrediction"
+        ).evaluate(scored)
+        acc = MulticlassClassificationEvaluator(
+            labelCol=label, predictionCol="prediction", metricName="accuracy"
+        ).evaluate(scored)
+        return spark.createDataFrame(
+            [(float(auc), float(acc))], "roc_auc double, accuracy double"
+        )
+    from pyspark.ml.evaluation import RegressionEvaluator
+
+    rmse = RegressionEvaluator(
+        labelCol=label, predictionCol="prediction", metricName="rmse"
+    ).evaluate(scored)
+    r2 = RegressionEvaluator(
+        labelCol=label, predictionCol="prediction", metricName="r2"
+    ).evaluate(scored)
+    return spark.createDataFrame(
+        [(float(rmse), float(r2))], "rmse double, r2 double"
+    )
+
+
+#: BigQuery ML table function (lower case) -> handler
+_ML_CALLS = {
+    "ml.predict": _ml_predict,
+    "ml.explain_predict": _ml_explain_predict,
+    "ml.evaluate": _ml_evaluate,
+    "ml.confusion_matrix": _ml_confusion_matrix,
+    "ml.roc_curve": _ml_roc_curve,
+    "ml.generate_embedding": _ml_generate_embedding,
+    "ml.recommend": _ml_recommend,
+    "ml.transform": _ml_transform,
+    "ml.feature_info": _ml_feature_info,
+    "ml.trial_info": _ml_trial_info,
+    "ml.weights": _ml_weights,
+    "ml.centroids": _ml_centroids,
+    "ml.principal_components": _ml_principal_components,
+    "ml.principal_component_info": _ml_principal_component_info,
+    "ml.training_info": _ml_training_info,
+    "ml.feature_importance": _ml_feature_importance,
+    "ml.global_explain": _ml_global_explain,
+    "ml.forecast": ml_forecast,
+    "ml.explain_forecast": ml_explain_forecast,
+    "ml.arima_evaluate": ml_arima_evaluate,
+    "ml.arima_coefficients": ml_arima_coefficients,
+    "ml.detect_anomalies": ml_detect_anomalies,
+}
+_ML_CALL_NAMES = tuple(map(re.escape, _ML_CALLS))
+
+#: one view number sequence for the whole process: executors sharing a
+#: Spark session (parallel pipeline branches) never reuse a view name
+_VIEW_IDS = itertools.count(1)
+
+
+def rewrite_ml_calls(
+    spark: SparkSession, stmt: str, registry: ModelRegistry
+) -> str:
+    """Replace every BigQuery ML table-function call in the code of
+    ``stmt`` (string literals and comments are left alone) with a temp
+    view of its result, named ``__ml_<fn>_<n>``. A call's arguments are
+    rewritten before the call, so calls nest. The statement's WITH
+    clause is re-scoped into each input query of the main query (the
+    reference's SQL references outer CTEs from inside ML.* calls)."""
+    if next(iter_calls(stmt, _ML_CALL_NAMES), None) is None:
+        return stmt
+    from ..dialect import extract_with_clause
+
+    def register(cte: str):
+        def run(fn: str, name: str, args: list[str]) -> str:
+            view = f"__ml_{fn[3:]}_{next(_VIEW_IDS)}"
+            df = _ML_CALLS[fn](spark, registry, name, args, cte)
+            df.createOrReplaceTempView(view)
+            return view
+
+        return run
+
+    head = extract_with_clause(stmt)
+    cte = sub_model_calls(head, _ML_CALL_NAMES, register(""))
+    return cte + sub_model_calls(
+        stmt[len(head) :], _ML_CALL_NAMES, register(cte)
+    )

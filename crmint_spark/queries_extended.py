@@ -1833,7 +1833,7 @@ SELECT 'R163' AS sx_r, 'R163' AS sx_r2, 'A261' AS sx_a,
 def bqml_generate_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The RAG composition in one script: ML.GENERATE_EMBEDDING over a
     document slice (deterministic feature-hashing projector — see
-    ml/sql_ml.rewrite_ml_generate_embedding for the documented
+    ml/sql_ml._ml_generate_embedding for the documented
     divergence from BigQuery's remote models), materialized as a view,
     then VECTOR_SEARCH over the embedded corpus with a cosine probe.
     top_k covers the whole slice so the deterministic outer ORDER BY

@@ -15,12 +15,7 @@ import shutil
 
 from pyspark.ml import PipelineModel
 
-from ..ml.estimators import (
-    build_pipeline,
-    is_classifier,
-    load_model,
-    predict_with_probability,
-)
+from ..ml.estimators import build_pipeline, load_model, predict_output
 from .base import Worker, WorkerException
 
 
@@ -122,21 +117,7 @@ class MLPredictor(Worker):
             raise WorkerException(f"model not found: {self._params['model_name']}")
         model = load_model(path)
         df = self._ctx.catalog.read(self._params["source_table"])
-        if is_classifier(self._params["model_type"]):
-            # predict_with_probability replaces the probability vector with
-            # the positive-class double (ref: model_bqml.sql:26-29)
-            scored = predict_with_probability(model, df).withColumnRenamed(
-                "prediction", "predicted_label"
-            )
-        else:
-            scored = model.transform(df).withColumnRenamed(
-                "prediction", "predicted_value"
-            )
-        # vector columns aren't parquet-writable; drop them
-        drop_cols = [
-            f.name for f in scored.schema.fields if f.dataType.typeName() == "vector"
-        ]
-        scored = scored.drop(*drop_cols) if drop_cols else scored
+        scored = predict_output(model, self._params["model_type"], df)
         disposition = "WRITE_TRUNCATE" if self._params["overwrite"] else "WRITE_APPEND"
         self._ctx.catalog.write(scored, self._params["destination_table"], disposition)
         self.log_info(

@@ -50,6 +50,7 @@ from ..sqllex import (
     mask,
     segments,
     split_top_level,
+    string_value,
     sub_code,
 )
 from .base import Worker, WorkerException
@@ -743,15 +744,8 @@ def _extract_options_kv(sql: str) -> dict | None:
             out[key] = int(val)
         elif re.fullmatch(r"-?\d*\.\d+", val):
             out[key] = float(val)
-        elif (
-            len(val) >= 6
-            and val[:3] in ("'''", '"""')
-            and val[-3:] == val[:3]
-        ):
-            # triple-quoted OPTIONS value (legal BigQuery, round 11)
-            out[key] = val[3:-3]
-        elif len(val) >= 2 and val[0] in "'\"" and val[-1] == val[0]:
-            out[key] = val[1:-1]
+        elif (text := string_value(val)) is not None:
+            out[key] = text
         else:
             out[key] = val
     return out
@@ -1407,12 +1401,13 @@ class SparkSQLExecutor(Worker):
         return None if us is None else int(us)
 
     def _exec_declare(self, m, stmt, sctx, resolver, registry) -> None:
-        name, default = m.group(1), m.group(2)
-        sctx.variables[name] = None
-        if default:
-            sctx.variables[name] = self._eval_row(
-                sctx.substitute(default.strip()), resolver=resolver
-            )[0]
+        default = m.group(2)
+        value = (
+            self._eval_row(sctx.substitute(default.strip()), resolver=resolver)[0]
+            if default
+            else None
+        )
+        sctx.variables.update(dict.fromkeys(re.split(r"\s*,\s*", m.group(1)), value))
 
     def _exec_set(self, m, stmt, sctx, resolver, registry) -> None:
         # scalar subqueries allowed: SET x = (SELECT ...)
@@ -5250,32 +5245,7 @@ class SparkSQLExecutor(Worker):
         interception, ML table functions, CTAS expansion. Returns the
         statement's result DataFrame, or None for side-effect-only
         statements. Shared by the script loop and EXECUTE IMMEDIATE."""
-        from ..ml.sql_ml import (
-            rewrite_ml_confusion_matrix,
-            rewrite_ml_evaluate,
-            rewrite_ml_explain_predict,
-            rewrite_ml_generate_embedding,
-            rewrite_ml_global_explain,
-            rewrite_ml_feature_info,
-            rewrite_ml_predict,
-            rewrite_ml_recommend,
-            rewrite_ml_roc_curve,
-            rewrite_ml_transform,
-            rewrite_ml_centroids,
-            rewrite_ml_principal_components,
-            rewrite_ml_training_info,
-            rewrite_ml_feature_importance,
-            rewrite_ml_trial_info,
-            rewrite_ml_weights,
-            try_create_model,
-        )
-        from ..ml.forecast import (
-            rewrite_ml_arima_coefficients,
-            rewrite_ml_arima_evaluate,
-            rewrite_ml_detect_anomalies,
-            rewrite_ml_explain_forecast,
-            rewrite_ml_forecast,
-        )
+        from ..ml.sql_ml import rewrite_ml_calls, try_create_model
 
         spark = self._ctx.spark
         if self._try_transaction_stmt(sub):
@@ -5482,27 +5452,7 @@ class SparkSQLExecutor(Worker):
             # callers can inspect exactly what the model was fit on
             self.log_info("CREATE MODEL handled by Spark ML")
             return training_df
-        stmt = rewrite_ml_explain_predict(spark, stmt, registry)
-        stmt = rewrite_ml_predict(spark, stmt, registry)
-        stmt = rewrite_ml_evaluate(spark, stmt, registry)
-        stmt = rewrite_ml_confusion_matrix(spark, stmt, registry)
-        stmt = rewrite_ml_roc_curve(spark, stmt, registry)
-        stmt = rewrite_ml_generate_embedding(spark, stmt, registry)
-        stmt = rewrite_ml_recommend(spark, stmt, registry)
-        stmt = rewrite_ml_transform(spark, stmt, registry)
-        stmt = rewrite_ml_feature_info(spark, stmt, registry)
-        stmt = rewrite_ml_trial_info(spark, stmt, registry)
-        stmt = rewrite_ml_weights(spark, stmt, registry)
-        stmt = rewrite_ml_centroids(spark, stmt, registry)
-        stmt = rewrite_ml_principal_components(spark, stmt, registry)
-        stmt = rewrite_ml_training_info(spark, stmt, registry)
-        stmt = rewrite_ml_feature_importance(spark, stmt, registry)
-        stmt = rewrite_ml_global_explain(spark, stmt, registry)
-        stmt = rewrite_ml_explain_forecast(spark, stmt, registry)
-        stmt = rewrite_ml_forecast(spark, stmt, registry)
-        stmt = rewrite_ml_arima_evaluate(spark, stmt, registry)
-        stmt = rewrite_ml_arima_coefficients(spark, stmt, registry)
-        stmt = rewrite_ml_detect_anomalies(spark, stmt, registry)
+        stmt = rewrite_ml_calls(spark, stmt, registry)
         if layout is not None:
             res = self._create_layout_table(
                 stmt, layout[1], layout[2], layout[3], tbl_opts
@@ -6557,7 +6507,7 @@ class SparkSQLExecutor(Worker):
         # have no inner query to plan and no fitted model at dry-run
         # time: substitute a typed empty relation so the REST of the
         # statement still validates
-        from ..ml.sql_ml import _sub_ml_table_calls
+        from ..ml.sql_ml import sub_model_calls
 
         shapes = {
             "ML.WEIGHTS": "processed_input STRING, weight DOUBLE",
@@ -6583,14 +6533,18 @@ class SparkSQLExecutor(Worker):
                 "prediction_interval_upper_bound DOUBLE"
             ),
         }
-        for fn, shape in shapes.items():
-            cols = ", ".join(
+        empty = {
+            fn.lower(): "(SELECT "
+            + ", ".join(
                 f"CAST(NULL AS {c.rsplit(' ', 1)[1]}) AS {c.rsplit(' ', 1)[0]}"
                 for c in shape.split(", ")
             )
-            stmt = _sub_ml_table_calls(
-                stmt, fn, lambda n, a, _c=cols: f"(SELECT {_c} WHERE 1 = 0)"
-            )
+            + " WHERE 1 = 0)"
+            for fn, shape in shapes.items()
+        }
+        stmt = sub_model_calls(
+            stmt, tuple(map(re.escape, shapes)), lambda fn, _m, _a: empty[fn]
+        )
         m = re.match(
             r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?TABLE\s+\S+\s*(?:USING\s+\w+\s*)?AS\b(.*)$"
             r"|^\s*INSERT\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?\S+\s*(.*)$",

@@ -171,6 +171,12 @@ def test_transpile_temp_function_and_view():
 def test_declare_set_classification():
     kind, m = dialect.classify_statement("DECLARE x INT64 DEFAULT 5")
     assert kind == "declare" and m.group(1) == "x" and m.group(2) == "5"
+    kind, m = dialect.classify_statement("DECLARE x DEFAULT 5")
+    assert kind == "declare" and m.group(1) == "x" and m.group(2) == "5"
+    kind, m = dialect.classify_statement("DECLARE a, b INT64 DEFAULT 1")
+    assert kind == "declare" and m.group(1) == "a, b" and m.group(2) == "1"
+    kind, m = dialect.classify_statement("DECLARE s STRUCT<a INT64, b STRING>")
+    assert kind == "declare" and m.group(1) == "s" and m.group(2) is None
     kind, m = dialect.classify_statement("SET x = (SELECT MAX(a) FROM t)")
     assert kind == "set"
     assert dialect.classify_statement("SELECT 1")[0] == "sql"

@@ -359,12 +359,78 @@ def test_ml_evaluate_no_input_vanished_source_errors(ctx, spark):
 def test_ml_table_call_empty_args_passthrough():
     """Malformed ML.PREDICT() with no arguments is left untouched (same
     as the MODEL-regex miss path), not an IndexError."""
-    from crmint_spark.ml.sql_ml import _sub_ml_table_calls
+    from crmint_spark.ml.sql_ml import rewrite_ml_calls
 
     stmt = "SELECT * FROM ML.PREDICT()"
-    assert (
-        _sub_ml_table_calls(stmt, "ML.PREDICT", lambda n, a: "x") == stmt
+    assert rewrite_ml_calls(None, stmt, None) == stmt
+
+
+def test_ml_call_inside_string_literal_is_text(ctx):
+    """An ML table function named inside a string literal is not a
+    call: the statement runs as written, no model is looked up."""
+    w = _run(ctx, "SELECT 'see ML.WEIGHTS(MODEL nosuch)' AS s")
+    assert w.result.first().s == "see ML.WEIGHTS(MODEL nosuch)"
+
+
+_NEST_MODEL = """
+CREATE OR REPLACE MODEL `p.d.nest`
+OPTIONS(MODEL_TYPE='LOGISTIC_REG', INPUT_LABEL_COLS=['label'],
+        MAX_ITERATIONS=5) AS (
+  SELECT x1, x2, label FROM training_data
+);
+"""
+
+
+def test_nested_ml_calls_return_rows(ctx):
+    """A call's arguments are rewritten before the call, so ML.PREDICT
+    over ML.PREDICT, ML.EVALUATE over ML.TRANSFORM and a call inside
+    the WITH clause all run."""
+    w = _run(
+        ctx,
+        _NEST_MODEL
+        + """
+        SELECT uid, predicted_label FROM ML.PREDICT(MODEL `p.d.nest`,
+          (SELECT uid, x1, x2 FROM ML.PREDICT(MODEL `p.d.nest`,
+            (SELECT uid, x1, x2 FROM training_data))))
+        """,
     )
+    assert w.result.count() == 300
+    w = _run(
+        ctx,
+        "SELECT * FROM ML.EVALUATE(MODEL `p.d.nest`, (SELECT * FROM"
+        " ML.TRANSFORM(MODEL `p.d.nest`,"
+        " (SELECT x1, x2, label FROM training_data))))",
+    )
+    assert 0.5 < w.result.first().accuracy <= 1.0
+    # a call inside the WITH clause; the main query's call reads the CTE
+    w = _run(
+        ctx,
+        "WITH p AS (SELECT * FROM ML.PREDICT(MODEL `p.d.nest`,"
+        " (SELECT x1, x2, label FROM training_data)))"
+        " SELECT * FROM ML.EVALUATE(MODEL `p.d.nest`,"
+        " (SELECT x1, x2, label FROM p))",
+    )
+    assert 0.5 < w.result.first().accuracy <= 1.0
+
+
+def test_ml_views_named_apart_across_executors(ctx):
+    """Executors sharing one session (parallel pipeline branches) never
+    give two ML results the same view name."""
+    from crmint_spark.ml.sql_ml import rewrite_ml_calls
+
+    _run(ctx, _NEST_MODEL)
+    stmt = "SELECT * FROM ML.WEIGHTS(MODEL `p.d.nest`)"
+    views = {
+        rewrite_ml_calls(
+            ctx.spark,
+            stmt,
+            find_worker("BQScriptExecutor")(
+                {"script": stmt, "dry_run": False}, ctx
+            )._model_registry(),
+        )
+        for _ in range(2)
+    }
+    assert len(views) == 2
 
 
 def test_mlp_gradient_one_row_per_partition(spark):

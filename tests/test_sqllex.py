@@ -102,7 +102,7 @@ def test_options_split_skips_escaped_quote():
         "CREATE TABLE t (x INT64) OPTIONS("
         r"description = 'a\'b, c', labels = [('k','v')])"
     )
-    assert opts == {"description": r"a\'b, c", "labels": "[('k','v')]"}
+    assert opts == {"description": "a'b, c", "labels": "[('k','v')]"}
 
 
 def test_model_options_skip_escaped_quote():

@@ -200,6 +200,26 @@ def test_sql_executor_script_with_declare_set(ctx):
     assert rows == {(1, "a"), (2, "b")}
 
 
+def test_declare_without_type_and_of_several_names(spark):
+    """DECLARE may leave out the type and may name several variables,
+    each bound to the one DEFAULT; a typed DECLARE without DEFAULT is
+    NULL."""
+    w = find_worker("SparkSQLExecutor")(
+        {
+            "script": """
+            DECLARE x DEFAULT 5;
+            DECLARE a, b INT64 DEFAULT 1;
+            DECLARE s STRUCT<a INT64, b STRING>;
+            SELECT x, a + b AS ab, s IS NULL AS s_null
+            """,
+            "dry_run": False,
+        },
+        WorkerContext(spark=spark, catalog=None),
+    )
+    w.execute()
+    assert tuple(w.result.first()) == (5, 2, True)
+
+
 def _script_jobs(spark, script: str):
     """Run ``script`` without a catalog under its own Spark job group ->
     (worker, jobs the group launched). A control job in a second group
